@@ -56,23 +56,3 @@ def test_table_matches_reference(tables, name):
     assert list(a.columns) == list(b.columns)
     pd.testing.assert_frame_equal(a, b)
 
-
-def test_raw_variant_path_equals_eav_path(spark):
-    """The shuffle-free row-local variant extraction must produce the
-    exact frame the exploded-EAV path produces."""
-    from udacity_data_wrangling_osm_case_study_spark.operators import (
-        cleaning,
-        shape,
-        street_repair,
-    )
-    from udacity_data_wrangling_osm_case_study_spark.sources import osm_xml
-
-    ways_raw = osm_xml.read_ways_raw(spark, OSM_SAMPLE)
-    tags_pos, _ = cleaning.fix_phones_in_tags(shape.shape_tags(ways_raw, with_pos=True))
-    eav = sorted(
-        map(tuple, street_repair.street_name_variants(tags_pos).collect())
-    )
-    raw = sorted(
-        map(tuple, street_repair.street_name_variants_raw(ways_raw).collect())
-    )
-    assert eav == raw and len(eav) > 900

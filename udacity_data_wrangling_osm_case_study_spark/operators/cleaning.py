@@ -1,16 +1,35 @@
-"""Phone-tag cleaning over the EAV tables + CDC derivation (F4/P6/S4)."""
+"""Phone-tag cleaning on each element's tag array + CDC derivation (F4/P6/S4)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from udacity_data_wrangling_osm_case_study_spark.functions import phones as P
+from udacity_data_wrangling_osm_case_study_spark.operators import shape
 
 
-def fix_phones_in_tags(tags: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Canonicalize phone-key tag values. Returns ``(cleaned, updated_ids)``.
+def changed_ids(elements: DataFrame, flag: str) -> DataFrame:
+    """One ``id`` row per element whose per-element ``flag`` is set."""
+    return elements.filter(F.col(flag)).select("id")
 
+
+def rewrite_tags(elements: DataFrame, new_tag: Column, flag: str) -> DataFrame:
+    """Replace each element's ``tag`` array by ``new_tag`` and set the
+    boolean column ``flag`` where the array changed."""
+    return (
+        elements.withColumn("_new_tag", new_tag)
+        .withColumn(flag, ~F.col("tag").eqNullSafe(F.col("_new_tag")))
+        .drop("tag")
+        .withColumnRenamed("_new_tag", "tag")
+    )
+
+
+def fix_phones_in_tags(elements: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """Canonicalize phone-key tag values inside each element's shaped
+    ``tag`` array. Returns ``(cleaned, updated_ids)``.
+
+    ``cleaned`` carries a per-element ``_phone_changed`` flag;
     ``updated_ids`` has one ``id`` row per element where any phone-key
     value changed. The reference's per-tag flag overwrite
     (parse_clean_and_csv.py:531-533) can lose an earlier update when a
@@ -18,22 +37,18 @@ def fix_phones_in_tags(tags: DataFrame) -> tuple[DataFrame, DataFrame]:
     intentional divergence (SURVEY.md §4 risk 4; identical on the
     sample data).
     """
-    extra = [c for c in tags.columns if c not in ("id", "key", "value", "type")]
-    new_value = F.when(
-        P.is_phone_key(F.col("key")), P.fix_phone_value(F.col("value"))
-    ).otherwise(F.col("value"))
-    cleaned = tags.select(
-        "id",
-        "key",
-        new_value.alias("value"),
-        "type",
-        *extra,
-        (~new_value.eqNullSafe(F.col("value"))).alias("_changed"),
+    fixed = F.transform(
+        F.col("tag"),
+        lambda t: shape.tag_struct(
+            t["key"],
+            F.when(P.is_phone_key(t["key"]), P.fix_phone_value(t["value"])).otherwise(
+                t["value"]
+            ),
+            t["type"],
+        ),
     )
-    updated_ids = (
-        cleaned.filter(F.col("_changed")).select("id").distinct()
-    )
-    return cleaned.drop("_changed"), updated_ids
+    cleaned = rewrite_tags(elements, fixed, "_phone_changed")
+    return cleaned, changed_ids(cleaned, "_phone_changed")
 
 
 def update_history(

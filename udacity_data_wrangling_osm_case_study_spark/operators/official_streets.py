@@ -10,8 +10,12 @@ Scale note (J2 rewrite): the reference runs an O(n²) nested loop over
 the list. "Drop row i if some j shares exactly one of (eng, chi)" is,
 after exact-pair dedup, equivalent to "keep rows whose eng is globally
 unique AND whose chi is globally unique" — two window counts instead of
-a self cross-join. Same result, linear + one shuffle, scales to any
-dimension size.
+a self cross-join. Same result, linear.
+
+The list is a ~4.5k-row dimension that downstream always broadcasts, so
+it is built on ONE partition: the dedup, the two window counts and the
+lookup melt then need no shuffle, and the repair receives it as a
+one-row dictionary (:func:`street_dictionary`).
 """
 
 from __future__ import annotations
@@ -28,7 +32,7 @@ def clean_official_streets(raw: DataFrame, apply_corrections: bool = True) -> Da
     ``apply_corrections=False`` reproduces the reference audit scripts'
     drift (they skip ``update_official_list`` — SURVEY.md §2.12).
     """
-    df = raw.select(
+    df = raw.coalesce(1).select(
         N.capwords(F.col("English_Street_Name")).alias("eng"),
         F.col("Chinese_Street_Name").alias("chi"),
     )
@@ -72,3 +76,19 @@ def name_lookup_table(official: DataFrame) -> DataFrame:
     eng = official.select(F.col("eng").alias("name"), "idx")
     chi = official.select(F.col("chi").alias("name"), "idx")
     return eng.unionByName(chi).groupBy("name").agg(F.max("idx").alias("idx"))
+
+
+def street_dictionary(official: DataFrame) -> DataFrame:
+    """The official list as ONE row of two maps, for a broadcast
+    cross join onto the ways: ``name_to_idx`` (from
+    :func:`name_lookup_table`, so its max(idx) rule holds) and
+    ``idx_to_name`` (idx → struct(eng, chi))."""
+    names = name_lookup_table(official).agg(
+        F.map_from_entries(F.collect_list(F.struct("name", "idx"))).alias("name_to_idx")
+    )
+    rows = official.agg(
+        F.map_from_entries(
+            F.collect_list(F.struct("idx", F.struct("eng", "chi")))
+        ).alias("idx_to_name")
+    )
+    return names.crossJoin(rows)

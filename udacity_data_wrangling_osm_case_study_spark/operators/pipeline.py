@@ -4,8 +4,9 @@ Spark rendering of the reference's ``process_map`` single pass
 (parse_clean_and_csv.py:206-290,536-539). The reference fuses
 shape→clean→write into one loop; here each stage is a declarative frame
 and Catalyst fuses the narrow ones. The multi-sink economics differ on
-purpose (SURVEY.md §4): the shared upstream (shaped + cleaned tags) is
-persisted once so the six sinks don't re-scan the XML.
+purpose (SURVEY.md §4): the shared upstream (one shaped + cleaned frame
+per element type) is persisted once so the six sinks don't re-scan the
+XML.
 """
 
 from __future__ import annotations
@@ -35,24 +36,33 @@ def build_tables(
     """Returns the 6-table dict: nodes, nodes_tags, ways, ways_nodes,
     ways_tags, update_history.
 
-    ``persist`` pins the two raw XML parses (and the dimension table):
-    six sinks otherwise re-parse the XML per action — the multi-sink
-    economics of SURVEY.md §4. ``shard_dir`` routes the input through
-    the element-aligned splitter first (sources/osm_split.py): Spark's
-    XML source doesn't split within one file, so sharding is what makes
+    The ETL is ROW-LOCAL: each ``<node>``/``<way>`` row keeps its own
+    tag array, shaped, phone-cleaned and (ways) street-repaired in
+    place, like the reference's per-element loop. The official street
+    list arrives as one broadcast dictionary row. The persist point is
+    one cleaned frame per element type; all six tables are narrow
+    projections of those two frames (the tag tables explode the
+    array), so the sinks share one parse and the way side never
+    shuffles.
+
+    ``persist`` pins the two cleaned element frames: six sinks
+    otherwise re-parse the XML per action — the multi-sink economics of
+    SURVEY.md §4. ``shard_dir`` routes the input through the
+    element-aligned splitter first (sources/osm_split.py): Spark's XML
+    source doesn't split within one file, so sharding is what makes
     the parse scale with cores/executors.
 
     ``stage_dir`` (mutually composable with ``persist=False``) swaps
-    the block-manager cache for PARQUET STAGING: each raw parse is
-    written once to ``{stage_dir}/<name>`` and read back, so the six
-    sinks share the parse through the filesystem instead of executor
+    the block-manager cache for PARQUET STAGING: each cleaned element
+    frame is written once to ``{stage_dir}/<name>`` and read back, so
+    the six sinks share it through the filesystem instead of executor
     storage. This is the city-scale-and-up memory posture: the
     round-9 100x run peaked at 11.0 GB tree RSS (~27x the input)
-    because the cached raw parses (nested tag arrays, columnar
-    batches) plus six concurrent sink jobs all lived in one heap, and
-    at corpus scale a cache of input-sized frames only guarantees
-    eviction churn. Staged parses cost two extra file round-trips but
-    bound executor storage at zero, prune columns on every downstream
+    because the cached parses (nested tag arrays, columnar batches)
+    plus six concurrent sink jobs all lived in one heap, and at corpus
+    scale a cache of input-sized frames only guarantees eviction
+    churn. Staged frames cost two extra file round-trips but bound
+    executor storage at zero, prune columns on every downstream
     re-read (the cache always rehydrates whole batches), and a lost
     executor re-reads files instead of re-parsing XML. Measured at
     100x (NOTES_r10): peak RSS drops ~3x for the same wall time.
@@ -71,75 +81,52 @@ def build_tables(
         osm_split.split_osm_xml(osm_path, shard_dir, target_bytes=shard_bytes)
         osm_path = f"{shard_dir}/*.osm"
 
-    official = official_streets.clean_official_streets(
-        osm_xml.read_official_streets_raw(spark, psi_path)
-    )
-    lookup = official_streets.name_lookup_table(official)
+    def _keep(df: DataFrame, name: str) -> DataFrame:
+        if stage_dir is not None:
+            # Small row groups: the default 128 MB parquet write buffer,
+            # held per concurrent task, made the staging write itself
+            # the peak-RSS driver (measured 12.7 GB vs 6.7 GB cached at
+            # 100x before this option; scratch staging has no
+            # scan-efficiency reason to want big row groups).
+            (
+                df.write.mode("overwrite")
+                .option("parquet.block.size", 8 * 1024 * 1024)
+                .parquet(f"{stage_dir}/{name}")
+            )
+            return spark.read.parquet(f"{stage_dir}/{name}")
+        return df.persist(StorageLevel.MEMORY_AND_DISK) if persist else df
 
-    nodes_raw = osm_xml.read_nodes_raw(spark, osm_path)
-    ways_raw = osm_xml.read_ways_raw(spark, osm_path)
-
-    def _stage(df: DataFrame, name: str) -> DataFrame:
-        # Small row groups: the default 128 MB parquet write buffer,
-        # held per concurrent task, made the staging write itself the
-        # peak-RSS driver (measured 12.7 GB vs 6.7 GB cached at 100x
-        # before this option; scratch staging has no scan-efficiency
-        # reason to want big row groups).
-        (
-            df.write.mode("overwrite")
-            .option("parquet.block.size", 8 * 1024 * 1024)
-            .parquet(f"{stage_dir}/{name}")
+    dictionary = official_streets.street_dictionary(
+        official_streets.clean_official_streets(
+            osm_xml.read_official_streets_raw(spark, psi_path)
         )
-        return spark.read.parquet(f"{stage_dir}/{name}")
-
-    if stage_dir is not None:
-        # One parse per rowTag, shared through the filesystem — the
-        # bounded-memory posture (see docstring).
-        nodes_raw = _stage(nodes_raw, "nodes_raw")
-        ways_raw = _stage(ways_raw, "ways_raw")
-        official = _stage(official, "official")
-        lookup = official_streets.name_lookup_table(official)
-    elif persist:
-        # One parse per rowTag, shared by every downstream sink.
-        nodes_raw = nodes_raw.persist(StorageLevel.MEMORY_AND_DISK)
-        ways_raw = ways_raw.persist(StorageLevel.MEMORY_AND_DISK)
-        official = official.persist(StorageLevel.MEMORY_AND_DISK)
-
-    nodes = shape.shape_nodes(nodes_raw)
-    ways = shape.shape_ways(ways_raw)
-    ways_nodes = shape.shape_way_nodes(ways_raw)
-
-    nodes_tags, node_phone_ids = cleaning.fix_phones_in_tags(
-        shape.shape_tags(nodes_raw)
     )
-    ways_tags_pos, way_phone_ids = cleaning.fix_phones_in_tags(
-        shape.shape_tags(ways_raw, with_pos=True)
+    nodes, _ = cleaning.fix_phones_in_tags(
+        shape.shape_elements(osm_xml.read_nodes_raw(spark, osm_path))
     )
-    if stage_dir is not None:
-        ways_tags_pos = _stage(ways_tags_pos, "ways_tags_pos")
-    elif persist:
-        # Shared by the repair join, the presence scan, and two sinks.
-        ways_tags_pos = ways_tags_pos.persist(StorageLevel.MEMORY_AND_DISK)
-
-    ways_tags, way_name_ids = street_repair.repair_street_names(
-        ways_tags_pos, lookup, official, ways_raw=ways_raw
+    ways, _ = cleaning.fix_phones_in_tags(
+        shape.shape_elements(osm_xml.read_ways_raw(spark, osm_path))
     )
-    history = cleaning.update_history(node_phone_ids, way_phone_ids, way_name_ids)
+    ways, _ = street_repair.repair_street_names(ways, dictionary)
+    # The id frames the cleaners return sit before the persist point;
+    # the CDC table reads the flags of the KEPT frames instead, so it
+    # hits the cache (or the staged files) rather than re-cleaning.
+    nodes, ways = _keep(nodes, "nodes"), _keep(ways, "ways")
 
     tables = {
-        "nodes": nodes,
-        "nodes_tags": nodes_tags.select("id", "key", "value", "type"),
-        "ways": ways,
-        "ways_nodes": ways_nodes,
-        "ways_tags": ways_tags,
-        "update_history": history,
+        "nodes": shape.shape_nodes(nodes),
+        "nodes_tags": shape.explode_tags(nodes),
+        "ways": shape.shape_ways(ways),
+        "ways_nodes": shape.shape_way_nodes(ways),
+        "ways_tags": shape.explode_tags(ways),
+        "update_history": cleaning.update_history(
+            cleaning.changed_ids(nodes, "_phone_changed"),
+            cleaning.changed_ids(ways, "_phone_changed"),
+            cleaning.changed_ids(ways, "_name_changed"),
+        ),
     }
     if include_relations:
-        rel_raw = osm_xml.read_relations_raw(spark, osm_path)
-        if stage_dir is not None:
-            rel_raw = _stage(rel_raw, "relations_raw")
-        elif persist:
-            rel_raw = rel_raw.persist(StorageLevel.MEMORY_AND_DISK)
+        rel_raw = _keep(osm_xml.read_relations_raw(spark, osm_path), "relations_raw")
         tables["relations"] = shape.shape_relations(rel_raw)
         tables["relations_members"] = shape.shape_relation_members(rel_raw)
         tables["relations_tags"] = shape.shape_tags(rel_raw)

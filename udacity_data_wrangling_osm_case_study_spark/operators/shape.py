@@ -13,7 +13,7 @@ reference's single hand-fused loop.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from udacity_data_wrangling_osm_case_study_spark.functions import keys as K
@@ -82,23 +82,40 @@ def shape_relation_members(relations_raw: DataFrame) -> DataFrame:
     )
 
 
-def shape_tags(raw: DataFrame, with_pos: bool = False) -> DataFrame:
-    """EAV tags table ``(id, key, value, type)`` for nodes or ways.
+def tag_struct(key: Column, value: Column, type_: Column) -> Column:
+    """One shaped tag: ``struct<key, value, type>``, the element type of
+    every shaped ``tag`` array."""
+    return F.struct(key.alias("key"), value.alias("value"), type_.alias("type"))
 
-    Drops tags whose raw key contains problem characters (P2), then
-    splits ``type:key`` at the first colon (P3). ``with_pos`` keeps the
-    in-element tag ordinal, needed where the reference's dict-overwrite
-    ("last tag wins") semantics matter.
-    """
-    exploded = raw.select(
-        F.expr("try_cast(_id AS bigint)").alias("id"),
-        F.posexplode("tag").alias("pos", "t"),
-    ).select("id", "pos", F.col("t._k").alias("k"), F.col("t._v").alias("value"))
-    shaped = exploded.filter(~K.has_problem_chars(F.col("k"))).select(
-        "id",
-        "pos",
-        K.key_remainder(F.col("k")).alias("key"),
-        "value",
-        K.key_type(F.col("k")).alias("type"),
+
+def shape_tag_array(tag: Column) -> Column:
+    """P2 + P3 on one element's raw ``tag`` array: drop tags whose raw
+    key contains problem characters, split ``type:key`` at the first
+    colon. Returns ``array<struct<key, value, type>>`` in document
+    order (NULL for an element without tags)."""
+    return F.transform(
+        F.filter(tag, lambda t: ~K.has_problem_chars(t["_k"])),
+        lambda t: tag_struct(K.key_remainder(t["_k"]), t["_v"], K.key_type(t["_k"])),
     )
-    return shaped if with_pos else shaped.drop("pos")
+
+
+def shape_elements(raw: DataFrame) -> DataFrame:
+    """Element frame: a typed ``id``, the raw attribute and child
+    columns, and ``tag`` shaped by :func:`shape_tag_array`. Cleaning
+    and repair rewrite ``tag`` per element; sinks explode it."""
+    return raw.select(
+        F.expr("try_cast(_id AS bigint)").alias("id"),
+        *[c for c in raw.columns if c != "tag"],
+        shape_tag_array(F.col("tag")).alias("tag"),
+    )
+
+
+def explode_tags(elements: DataFrame) -> DataFrame:
+    """EAV tags table ``(id, key, value, type)`` of an element frame."""
+    return elements.select("id", F.inline("tag"))
+
+
+def shape_tags(raw: DataFrame) -> DataFrame:
+    """EAV tags table ``(id, key, value, type)`` for raw nodes, ways or
+    relations."""
+    return explode_tags(shape_elements(raw))

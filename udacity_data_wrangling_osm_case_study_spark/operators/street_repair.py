@@ -5,33 +5,38 @@ Parity target: ``is_street`` / ``get_street_names`` / ``name_look_up`` /
 
 1. P5 street gate: a way qualifies iff it has a ``highway`` tag whose
    value is one of 12 street classes.
-2. A5 variant pivot: up to 4 name variants per way — ``name:en``,
+2. A5 variants: up to 4 name variants per way — ``name:en``,
    ``name:zh``, and the English/Chinese runs regex-split out of the
    combined ``name`` value. The reference builds a per-way dict, so a
-   repeated variant keeps the LAST tag ("dict overwrite") — reproduced
-   here with ``max_by(value, pos)``.
-3. J1 broadcast lookup: probe every variant into the official list
-   keyed by BOTH languages; per way, collect the set of matched rows
-   and count misses.
+   repeated variant keeps the LAST tag ("dict overwrite").
+3. J1 lookup: probe every variant into the official list keyed by BOTH
+   languages; collect the set of matched rows and count misses.
 4. Exactly-one-match gate: only an unambiguous way is repaired.
 5. F5 overwrite-or-insert: set ``name:en`` / ``name:zh`` / ``name``
    (= ``chi + ' ' + eng``) to the canonical values, appending any
    missing tag; flag the way as updated if anything changed.
 
-Scale shape: the official list is a few-thousand-row dimension →
-broadcast hash join (no shuffle on the fact side). The only shuffles
-are the per-way aggregations on ``id``, which AQE coalesces; the
-canonical-names frame joins back to the tags fact on ``id`` and scales
-with the data, so it is a plain shuffled hash join, never collected to
-the driver.
+Scale shape: every step is ROW-LOCAL on the way's own shaped tag array
+— the reference's per-way dict, as higher-order array functions. The
+official list (a few-thousand-row dimension) arrives as a one-row
+dictionary of two maps (official_streets.street_dictionary), broadcast
+and cross-joined onto the ways, so each probe is a map lookup on the
+way row. The way side never shuffles and never explodes: the repaired
+frame keeps the parse's partitioning, and the EAV rows come out only at
+the sink.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from udacity_data_wrangling_osm_case_study_spark.functions import names as N
+from udacity_data_wrangling_osm_case_study_spark.operators.cleaning import (
+    changed_ids,
+    rewrite_tags,
+)
+from udacity_data_wrangling_osm_case_study_spark.operators.shape import tag_struct
 
 # Highway classes that make a way a government-named street
 # (reference STREET_VALUES, parse_clean_and_csv.py:72-76).
@@ -41,228 +46,123 @@ STREET_VALUES = [
     "road", "steps", "path",
 ]
 
-def _is_en():
-    return (F.col("type") == "name") & (F.col("key") == "en")
+VARIANTS = ["en_only", "zh_only", "reg_eng", "reg_chi"]
+
+# (type, key) of the three name tags the repair writes.
+EN, ZH, REG = ("name", "en"), ("name", "zh"), ("regular", "name")
 
 
-def _is_zh():
-    return (F.col("type") == "name") & (F.col("key") == "zh")
+def _is(t: Column, shape: tuple[str, str]) -> Column:
+    return (t["type"] == shape[0]) & (t["key"] == shape[1])
 
 
-def _is_reg():
-    return (F.col("type") == "regular") & (F.col("key") == "name")
+def _has(tag: Column, shape: tuple[str, str]) -> Column:
+    return F.exists(tag, lambda t: _is(t, shape))
 
 
-def street_ids(ways_tags: DataFrame) -> DataFrame:
-    """P5: ids of ways carrying a street-class highway tag."""
-    return (
-        ways_tags.filter(
-            (F.col("key") == "highway") & F.col("value").isin(STREET_VALUES)
+def is_street(tag: Column) -> Column:
+    """P5 on a shaped tag array (the raw key is exactly ``highway``)."""
+    return F.exists(
+        tag, lambda t: _is(t, ("regular", "highway")) & t["value"].isin(STREET_VALUES)
+    )
+
+
+def name_variants(tag: Column) -> list[Column]:
+    """A5 on a shaped tag array: the :data:`VARIANTS` as columns, NULL
+    when absent. ``name:en``/``name:zh`` take the last such tag; the
+    ``name`` splits take the last non-NULL extraction."""
+
+    def last(values: Column) -> Column:
+        return F.try_element_at(values, F.lit(-1))
+
+    def values(shape: tuple[str, str]) -> Column:
+        return F.transform(F.filter(tag, lambda t: _is(t, shape)), lambda t: t["value"])
+
+    def last_extract(extract) -> Column:
+        return last(F.array_compact(F.transform(values(REG), extract)))
+
+    return [
+        last(values(EN)),
+        last(values(ZH)),
+        last_extract(N.extract_english_name),
+        last_extract(N.extract_chinese_name),
+    ]
+
+
+def match_variants(ways: DataFrame, dictionary: DataFrame) -> DataFrame:
+    """J1 + A4 row-locally: adds the :data:`VARIANTS` columns (NULL off
+    the street gate), the dictionary's columns, ``matches`` (distinct
+    official idx hit), ``not_found`` and ``n_variants``."""
+    street = F.col("_street")
+    probed = (
+        ways.withColumn("_street", is_street(F.col("tag")))
+        .withColumns(
+            {v: F.when(street, c) for v, c in zip(VARIANTS, name_variants(F.col("tag")))}
         )
-        .select("id")
-        .distinct()
-    )
-
-
-def street_name_variants(ways_tags_pos: DataFrame) -> DataFrame:
-    """A5: melt each street way's tags into (id, variant, name) rows.
-
-    ``ways_tags_pos`` must carry the in-element tag ordinal ``pos``
-    (dict-overwrite parity: last tag of a shape wins).
-    """
-    t = ways_tags_pos.join(street_ids(ways_tags_pos), "id", "left_semi")
-    en = t.filter(_is_en()).select(
-        "id", F.lit("en_only").alias("variant"), F.col("value").alias("name"), "pos"
-    )
-    zh = t.filter(_is_zh()).select(
-        "id", F.lit("zh_only").alias("variant"), F.col("value").alias("name"), "pos"
-    )
-    reg = t.filter(_is_reg())
-    reg_eng = reg.select(
-        "id",
-        F.lit("reg_eng").alias("variant"),
-        N.extract_english_name(F.col("value")).alias("name"),
-        "pos",
-    ).filter(F.col("name").isNotNull())
-    reg_chi = reg.select(
-        "id",
-        F.lit("reg_chi").alias("variant"),
-        N.extract_chinese_name(F.col("value")).alias("name"),
-        "pos",
-    ).filter(F.col("name").isNotNull())
-    melted = en.unionByName(zh).unionByName(reg_eng).unionByName(reg_chi)
-    return melted.groupBy("id", "variant").agg(F.max_by("name", "pos").alias("name"))
-
-
-def street_name_variants_raw(ways_raw: DataFrame) -> DataFrame:
-    """A5 computed ROW-LOCALLY on the raw nested tag arrays — same
-    output as :func:`street_name_variants`, zero shuffle.
-
-    Every way element carries its whole tag array, so the street gate
-    (exists), the last-wins variant picks, and the regex extractions
-    are all array expressions on the way row; only the handful of
-    street ways then explode into (id, variant, name). At scale this
-    removes two groupBy shuffles and several passes over the exploded
-    EAV frame (the raw key forms are exact: 'name:en'/'name:zh' are the
-    only keys that first-colon-split to (name, en/zh); 'name' is the
-    only colon-free 'name' key — and none contain problem chars, so
-    the P2 filter cannot affect them).
-    """
-    tag = F.col("tag")
-    is_street = F.exists(
-        tag,
-        lambda t: (t["_k"] == "highway") & t["_v"].isin(STREET_VALUES),
-    )
-    streets = ways_raw.filter(tag.isNotNull() & is_street)
-
-    def last_value(key: str):
-        vals = F.filter(tag, lambda t: t["_k"] == key)
-        return F.try_element_at(vals, F.lit(-1))["_v"]
-
-    def last_extract(extract_fn):
-        reg_vals = F.transform(
-            F.filter(tag, lambda t: t["_k"] == "name"),
-            lambda t: extract_fn(t["_v"]),
+        .crossJoin(F.broadcast(dictionary))
+        .withColumn(
+            "_idx",
+            F.transform(
+                F.array_compact(F.array(*VARIANTS)),
+                lambda v: F.try_element_at(F.col("name_to_idx"), v),
+            ),
         )
-        non_null = F.filter(reg_vals, lambda x: x.isNotNull())
-        return F.try_element_at(non_null, F.lit(-1))
-
-    variants = F.array(
-        F.struct(F.lit("en_only").alias("variant"), last_value("name:en").alias("name")),
-        F.struct(F.lit("zh_only").alias("variant"), last_value("name:zh").alias("name")),
-        F.struct(
-            F.lit("reg_eng").alias("variant"),
-            last_extract(N.extract_english_name).alias("name"),
-        ),
-        F.struct(
-            F.lit("reg_chi").alias("variant"),
-            last_extract(N.extract_chinese_name).alias("name"),
-        ),
     )
-    return (
-        streets.select(
-            F.expr("try_cast(_id AS bigint)").alias("id"),
-            F.explode(variants).alias("v"),
-        )
-        .select("id", F.col("v.variant").alias("variant"), F.col("v.name").alias("name"))
-        .filter(F.col("name").isNotNull())
-    )
+    idx = F.col("_idx")
+    return probed.withColumns(
+        {
+            "matches": F.array_distinct(F.array_compact(idx)),
+            "not_found": F.size(F.filter(idx, lambda i: i.isNull())),
+            "n_variants": F.size(idx),
+        }
+    ).drop("_street", "_idx")
 
 
-def match_variants(variants: DataFrame, lookup: DataFrame) -> DataFrame:
-    """J1 + A4: probe variants into the broadcast name→idx table; per
-    way collect matched official indexes and count misses."""
-    probed = variants.join(F.broadcast(lookup), "name", "left")
-    return probed.groupBy("id").agg(
-        F.collect_set("idx").alias("matches"),
-        F.sum(F.when(F.col("idx").isNull(), 1).otherwise(0)).alias("not_found"),
-        F.count("*").alias("n_variants"),
-    )
-
-
-def canonical_names(matched: DataFrame, official: DataFrame) -> DataFrame:
-    """Exactly-one-match gate + J3 back-join: (id, eng, chi, reg)."""
-    one = matched.filter(F.size("matches") == 1).select(
-        "id", F.col("matches")[0].alias("idx")
-    )
-    return one.join(F.broadcast(official), "idx").select(
-        "id",
-        "eng",
-        "chi",
-        F.concat(F.col("chi"), F.lit(" "), F.col("eng")).alias("reg"),
+def official_match() -> Column:
+    """Exactly-one-match gate + J3: the struct(eng, chi) of the single
+    matched official row, else NULL. ``F.get`` (not ``matches[0]``):
+    the optimizer may evaluate the index before the size gate."""
+    return F.when(
+        F.size("matches") == 1,
+        F.try_element_at(F.col("idx_to_name"), F.get(F.col("matches"), 0)),
     )
 
 
 def repair_street_names(
-    ways_tags_pos: DataFrame,
-    lookup: DataFrame,
-    official: DataFrame,
-    ways_raw: DataFrame | None = None,
+    ways: DataFrame, dictionary: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
-    """F5 overwrite-or-insert. Returns ``(repaired_tags, updated_ids)``.
+    """F5 overwrite-or-insert on each way's shaped ``tag`` array.
+    Returns ``(repaired, updated_ids)``.
 
-    ``repaired_tags`` has columns (id, key, value, type);
-    ``updated_ids`` has one ``id`` row per way whose names changed —
-    the 'name' CDC feed (S4). When ``ways_raw`` is provided, variants
-    come from the shuffle-free row-local path
-    (:func:`street_name_variants_raw`).
+    ``repaired`` is ``ways`` with ``tag`` rewritten and a per-way
+    ``_name_changed`` flag; ``updated_ids`` has one ``id`` row per way
+    whose names changed — the 'name' CDC feed (S4).
     """
-    variants = (
-        street_name_variants_raw(ways_raw)
-        if ways_raw is not None
-        else street_name_variants(ways_tags_pos)
+    canon = (
+        match_variants(ways, dictionary)
+        .withColumn("_canon", official_match())
+        .select(*ways.columns, "_canon")
     )
-    # canon feeds three plan branches (overwrite join, presence
-    # semi-join, gap synthesis) and the CDC count; Spark has no
-    # common-subplan sharing across branches, so without a persist the
-    # variants→match→back-join chain executes once per branch. canon is
-    # one small row per uniquely-matched street way — cache it.
-    canon = canonical_names(match_variants(variants, lookup), official).cache()
+    eng, chi = F.col("_canon.eng"), F.col("_canon.chi")
+    want = [(EN, eng), (ZH, chi), (REG, F.concat(chi, F.lit(" "), eng))]
+    tag = F.col("tag")
 
-    j = ways_tags_pos.join(canon, "id", "left")
-    new_value = (
-        F.when(F.col("eng").isNotNull() & _is_en(), F.col("eng"))
-        .when(F.col("chi").isNotNull() & _is_zh(), F.col("chi"))
-        .when(F.col("reg").isNotNull() & _is_reg(), F.col("reg"))
-        .otherwise(F.col("value"))
-    )
-    overwritten = j.select(
-        "id",
-        "key",
-        new_value.alias("value"),
-        "type",
-        (~new_value.eqNullSafe(F.col("value"))).alias("_changed"),
-    )
+    def overwrite(t: Column) -> Column:
+        value = t["value"]
+        for shape, new in want:
+            value = F.when(_is(t, shape), new).otherwise(value)
+        return tag_struct(t["key"], value, t["type"])
 
-    # Which of the 3 name shapes already exist on each canonical way?
-    presence = (
-        ways_tags_pos.join(canon.select("id"), "id", "left_semi")
-        .groupBy("id")
-        .agg(
-            F.max(F.when(_is_en(), 1).otherwise(0)).alias("has_en"),
-            F.max(F.when(_is_zh(), 1).otherwise(0)).alias("has_zh"),
-            F.max(F.when(_is_reg(), 1).otherwise(0)).alias("has_reg"),
-        )
-    )
-    gaps = canon.join(presence, "id", "left")
-    # One row-local explode instead of three filter/select/union branches:
-    # each canonical way emits the (key, value, type) rows whose name
-    # shape is absent — identical rows, one plan node, no re-scan per
-    # shape.
-    candidates = F.array(
-        *(
-            F.struct(
-                (F.coalesce(F.col(flag), F.lit(0)) == 0).alias("missing"),
-                F.lit(key).alias("key"),
-                F.col(src).alias("value"),
-                F.lit(typ).alias("type"),
-            )
-            for flag, key, typ, src in (
-                ("has_en", "en", "name", "eng"),
-                ("has_zh", "zh", "name", "chi"),
-                ("has_reg", "name", "regular", "reg"),
+    appended = F.array_compact(
+        F.array(
+            *(
+                F.when(~_has(tag, shape), tag_struct(F.lit(shape[1]), new, F.lit(shape[0])))
+                for shape, new in want
             )
         )
     )
-    appended = gaps.select(
-        "id",
-        F.explode(F.filter(candidates, lambda c: c["missing"])).alias("c"),
-    ).select(
-        "id",
-        F.col("c.key").alias("key"),
-        F.col("c.value").alias("value"),
-        F.col("c.type").alias("type"),
-        F.lit(True).alias("_changed"),
-    )
-
-    # all_tags feeds both the repaired-tags sink and the CDC updated-ids
-    # aggregate — cache so the overwrite/append work runs once.
-    all_tags = overwritten.unionByName(appended).cache()
-    repaired = all_tags.select("id", "key", "value", "type")
-    updated_ids = (
-        all_tags.groupBy("id")
-        .agg(F.max(F.col("_changed").cast("int")).alias("_u"))
-        .filter(F.col("_u") == 1)
-        .select("id")
-    )
-    return repaired, updated_ids
+    new_tag = F.when(
+        F.col("_canon").isNotNull(), F.concat(F.transform(tag, overwrite), appended)
+    ).otherwise(tag)
+    repaired = rewrite_tags(canon, new_tag, "_name_changed").drop("_canon")
+    return repaired, changed_ids(repaired, "_name_changed")

@@ -56,33 +56,20 @@ def audit_bilingual_street_names(
         osm_xml.read_official_streets_raw(spark, psi_path),
         apply_corrections=False,
     )
-    lookup = official_streets.name_lookup_table(official)
-    ways_tags = shape.shape_tags(
-        osm_xml.read_ways_raw(spark, osm_path), with_pos=True
+    ways = shape.shape_elements(osm_xml.read_ways_raw(spark, osm_path))
+    matched = street_repair.match_variants(
+        ways, official_streets.street_dictionary(official)
     )
-    variants = street_repair.street_name_variants(ways_tags)
-    matched = street_repair.match_variants(variants, lookup)
     flagged = matched.filter(
         (F.size("matches") == 1)
         & ((F.col("not_found") > 0) | (F.col("n_variants") < 4))
-    ).select("id", F.col("matches")[0].alias("idx"))
-    pivoted = variants.groupBy("id").pivot(
-        "variant", ["en_only", "zh_only", "reg_eng", "reg_chi"]
-    ).agg(F.first("name"))
-    return (
-        flagged.join(pivoted, "id", "left")
-        .join(F.broadcast(official), "idx")
-        .select(
-            "id",
-            "en_only",
-            "zh_only",
-            "reg_eng",
-            "reg_chi",
-            F.col("eng").alias("official_eng"),
-            F.col("chi").alias("official_chi"),
-        )
-        .orderBy("id")
-    )
+    ).withColumn("_official", street_repair.official_match())
+    return flagged.select(
+        "id",
+        *street_repair.VARIANTS,
+        F.col("_official.eng").alias("official_eng"),
+        F.col("_official.chi").alias("official_chi"),
+    ).orderBy("id")
 
 
 def _tolerant_phone_segment(seg) -> F.Column:

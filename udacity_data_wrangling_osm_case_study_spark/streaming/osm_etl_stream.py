@@ -10,9 +10,9 @@ aligned shards (sources/osm_split.py makes them):
 - Phone cleaning is stateless → identical column expression.
 - Street-name repair is per-way (every <way> carries its whole tag
   array in one element), so it is micro-batch-local by construction —
-  ``foreachBatch`` reuses the exact batch operators with the static
-  broadcast dimension table (stream-static join pattern). No cross-
-  batch state, no watermark needed for correctness.
+  ``foreachBatch`` reuses the exact per-element batch operators with
+  the static one-row street dictionary (stream-static broadcast). No
+  cross-batch state, no watermark needed for correctness.
 
 Each micro-batch writes the same parquet tables the batch ETL writes —
 the outputs converge to the batch result once the source drains
@@ -75,11 +75,12 @@ def run_streaming_etl(
     ``available_now=True`` drains whatever shards exist and stops
     (test/backfill mode); False runs continuously.
     """
-    official = official_streets.clean_official_streets(
-        osm_xml.read_official_streets_raw(spark, psi_path)
+    dictionary = official_streets.street_dictionary(
+        official_streets.clean_official_streets(
+            osm_xml.read_official_streets_raw(spark, psi_path)
+        )
     ).cache()
-    official.count()  # materialize once; broadcast into every batch
-    lookup = official_streets.name_lookup_table(official)
+    dictionary.count()  # materialize once; broadcast into every batch
 
     nodes_stream = _read_stream(spark, shard_dir, "node", schemas.OSM_NODE_SCHEMA)
     ways_stream = _read_stream(spark, shard_dir, "way", schemas.OSM_WAY_SCHEMA)
@@ -88,31 +89,25 @@ def run_streaming_etl(
         write_batch_idempotent(df, f"{out_dir}/{table}", f"{stream}-{batch_id}")
 
     def process_nodes(batch: DataFrame, batch_id: int) -> None:
-        _write(shape.shape_nodes(batch), "nodes", batch_id, "n")
-        tags, phone_ids = cleaning.fix_phones_in_tags(shape.shape_tags(batch))
+        nodes, phone_ids = cleaning.fix_phones_in_tags(shape.shape_elements(batch))
+        empty = phone_ids.limit(0)
+        _write(shape.shape_nodes(nodes), "nodes", batch_id, "n")
+        _write(shape.explode_tags(nodes), "nodes_tags", batch_id, "n")
         _write(
-            tags.select("id", "key", "value", "type"), "nodes_tags", batch_id, "n"
-        )
-        _write(
-            cleaning.update_history(phone_ids, phone_ids.limit(0), phone_ids.limit(0)),
+            cleaning.update_history(phone_ids, empty, empty),
             "update_history",
             batch_id,
             "n",
         )
 
     def process_ways(batch: DataFrame, batch_id: int) -> None:
-        _write(shape.shape_ways(batch), "ways", batch_id, "w")
-        _write(shape.shape_way_nodes(batch), "ways_nodes", batch_id, "w")
-        tags_pos, phone_ids = cleaning.fix_phones_in_tags(
-            shape.shape_tags(batch, with_pos=True)
-        )
-        repaired, name_ids = street_repair.repair_street_names(
-            tags_pos, lookup, official
-        )
-        _write(repaired, "ways_tags", batch_id, "w")
-        empty = phone_ids.limit(0)
+        ways, phone_ids = cleaning.fix_phones_in_tags(shape.shape_elements(batch))
+        ways, name_ids = street_repair.repair_street_names(ways, dictionary)
+        _write(shape.shape_ways(ways), "ways", batch_id, "w")
+        _write(shape.shape_way_nodes(ways), "ways_nodes", batch_id, "w")
+        _write(shape.explode_tags(ways), "ways_tags", batch_id, "w")
         _write(
-            cleaning.update_history(empty, phone_ids, name_ids),
+            cleaning.update_history(phone_ids.limit(0), phone_ids, name_ids),
             "update_history",
             batch_id,
             "w",
