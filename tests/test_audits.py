@@ -13,7 +13,7 @@ from __future__ import annotations
 import pytest
 
 from udacity_data_wrangling_osm_case_study_spark.plans import audits
-from tests.conftest import OSM_SAMPLE, PSI_SAMPLE
+from tests.conftest import OSM_SAMPLE, PSI_SAMPLE, needs_sample
 
 
 @pytest.fixture(scope="module")
@@ -21,6 +21,7 @@ def phone_tags(spark):
     return audits.audit_phone_numbers(spark, OSM_SAMPLE).cache()
 
 
+@needs_sample(OSM_SAMPLE, PSI_SAMPLE)
 def test_bilingual_street_audit_golden(spark):
     rows = audits.audit_bilingual_street_names(
         spark, OSM_SAMPLE, PSI_SAMPLE
@@ -34,17 +35,20 @@ def test_bilingual_street_audit_golden(spark):
     assert sha.en_only == "Sha Kok Stret" and sha.official_chi == "沙角街"
 
 
+@needs_sample(OSM_SAMPLE)
 def test_phone_audit_golden(phone_tags):
     rows = phone_tags.collect()
     assert len(rows) == 11
     assert {r.key for r in rows} == {"phone", "fax"}
 
 
+@needs_sample(OSM_SAMPLE)
 def test_phone_key_counts(spark, phone_tags):
     counts = {r.key: r.n for r in audits.phone_key_counts(phone_tags).collect()}
     assert counts == {"phone": 8, "fax": 3}
 
 
+@needs_sample(OSM_SAMPLE)
 def test_phone_char_census(spark, phone_tags):
     chars = {r.ch for r in audits.phone_char_census(phone_tags).collect()}
     assert chars == set("+852 6971403")

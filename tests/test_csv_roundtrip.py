@@ -10,7 +10,9 @@ import pytest
 
 from udacity_data_wrangling_osm_case_study_spark.operators import pipeline
 from udacity_data_wrangling_osm_case_study_spark.sources import csv_io
-from tests.conftest import OSM_SAMPLE, PSI_SAMPLE
+from tests.conftest import OSM_SAMPLE, PSI_SAMPLE, needs_sample
+
+pytestmark = needs_sample(OSM_SAMPLE, PSI_SAMPLE)
 
 
 @pytest.fixture(scope="module")

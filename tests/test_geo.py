@@ -9,6 +9,7 @@ import math
 from pyspark.sql import functions as F
 
 from udacity_data_wrangling_osm_case_study_spark.operators import geo
+from tests.conftest import OSM_SAMPLE, PSI_SAMPLE, needs_sample
 
 
 def _brute(rows, radius_m):
@@ -53,16 +54,13 @@ def test_points_within_radius_cell_border_pairs(spark):
     assert len(got) == 1 and abs(got[0].distance_m - 90.17) < 1
 
 
+@needs_sample(OSM_SAMPLE, PSI_SAMPLE)
 def test_osm_nodes_proximity(spark):
     """Real OSM coordinates: every returned pair is within the radius
     and matches brute force on the sample."""
     from udacity_data_wrangling_osm_case_study_spark.operators import pipeline
 
-    tables = pipeline.build_tables(
-        spark,
-        "/root/reference/shatin.osm",
-        "/root/reference/PSI_Street Name_062017.xml",
-    )
+    tables = pipeline.build_tables(spark, OSM_SAMPLE, PSI_SAMPLE)
     nodes = (
         tables["nodes"]
         .select(F.col("id"), F.col("lat"), F.col("lon"))

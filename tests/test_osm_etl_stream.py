@@ -11,7 +11,7 @@ import pytest
 from udacity_data_wrangling_osm_case_study_spark.operators import pipeline
 from udacity_data_wrangling_osm_case_study_spark.sources import osm_split
 from udacity_data_wrangling_osm_case_study_spark.streaming import osm_etl_stream
-from tests.conftest import OSM_SAMPLE, PSI_SAMPLE
+from tests.conftest import OSM_SAMPLE, PSI_SAMPLE, needs_sample
 
 
 @pytest.fixture(scope="module")
@@ -25,6 +25,7 @@ def streamed(spark):
     shutil.rmtree(out, ignore_errors=True)
 
 
+@needs_sample(OSM_SAMPLE, PSI_SAMPLE)
 @pytest.mark.parametrize(
     "name",
     ["nodes", "nodes_tags", "ways", "ways_nodes", "ways_tags", "update_history"],

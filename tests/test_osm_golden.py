@@ -17,7 +17,9 @@ import pandas as pd
 import pytest
 
 from udacity_data_wrangling_osm_case_study_spark.operators import pipeline
-from tests.conftest import OSM_SAMPLE, PSI_SAMPLE
+from tests.conftest import OSM_SAMPLE, PSI_SAMPLE, needs_sample
+
+pytestmark = needs_sample(OSM_SAMPLE, PSI_SAMPLE)
 
 GOLDEN_DIR = os.path.join(os.path.dirname(__file__), "golden")
 GOLDEN_COUNTS = {

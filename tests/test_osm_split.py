@@ -10,7 +10,9 @@ import tempfile
 import pytest
 
 from udacity_data_wrangling_osm_case_study_spark.sources import osm_split, osm_xml
-from tests.conftest import OSM_SAMPLE
+from tests.conftest import OSM_SAMPLE, needs_sample
+
+pytestmark = needs_sample(OSM_SAMPLE)
 
 
 @pytest.fixture(scope="module")

@@ -28,7 +28,9 @@ import pytest
 from udacity_data_wrangling_osm_case_study_spark.operators import pipeline
 from udacity_data_wrangling_osm_case_study_spark.sources import osm_split
 from udacity_data_wrangling_osm_case_study_spark.streaming import osm_etl_stream
-from tests.conftest import PSI_SAMPLE
+from tests.conftest import PSI_SAMPLE, needs_sample
+
+pytestmark = needs_sample(PSI_SAMPLE)
 
 NFD_NAME = "Café \U00020000\U00020001 Street"   # decomposed é + CJK Ext-B
 NFC_NAME = "Café \U00020000\U00020001 Street"    # precomposed twin

@@ -11,9 +11,10 @@ from __future__ import annotations
 
 from udacity_data_wrangling_osm_case_study_spark.operators import pipeline, shape
 from udacity_data_wrangling_osm_case_study_spark.sources import osm_xml
-from tests.conftest import OSM_SAMPLE, PSI_SAMPLE
+from tests.conftest import OSM_SAMPLE, PSI_SAMPLE, needs_sample
 
 
+@needs_sample(OSM_SAMPLE)
 def test_relation_tables_golden_counts(spark):
     raw = osm_xml.read_relations_raw(spark, OSM_SAMPLE)
     rels = shape.shape_relations(raw)
@@ -42,6 +43,7 @@ def test_relation_tables_golden_counts(spark):
     assert types <= {"node", "way", "relation"}
 
 
+@needs_sample(OSM_SAMPLE, PSI_SAMPLE)
 def test_pipeline_include_relations(spark):
     tables = pipeline.build_tables(
         spark, OSM_SAMPLE, PSI_SAMPLE, include_relations=True

@@ -14,7 +14,9 @@ sys.path.insert(0, "tools")
 from replicate_osm import replicate  # noqa: E402
 
 from udacity_data_wrangling_osm_case_study_spark.operators import pipeline
-from tests.conftest import OSM_SAMPLE, PSI_SAMPLE
+from tests.conftest import OSM_SAMPLE, PSI_SAMPLE, needs_sample
+
+pytestmark = needs_sample(OSM_SAMPLE, PSI_SAMPLE)
 
 GOLDEN = {
     "nodes": 13676,

@@ -7,7 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from udacity_data_wrangling_osm_case_study_spark.operators import pipeline, validation
-from tests.conftest import OSM_SAMPLE, PSI_SAMPLE
+from tests.conftest import OSM_SAMPLE, PSI_SAMPLE, needs_sample
 
 
 @pytest.fixture(scope="module")
@@ -15,6 +15,7 @@ def tables(spark):
     return pipeline.build_tables(spark, OSM_SAMPLE, PSI_SAMPLE)
 
 
+@needs_sample(OSM_SAMPLE, PSI_SAMPLE)
 def test_sample_is_fully_valid(tables):
     report = validation.validate_osm_tables(tables)
     assert report.count() == 11  # every rule reports exactly once
@@ -22,6 +23,7 @@ def test_sample_is_fully_valid(tables):
     validation.assert_valid(tables)  # must not raise
 
 
+@needs_sample(OSM_SAMPLE, PSI_SAMPLE)
 def test_injected_violations_caught(spark, tables):
     dirty = dict(tables)
     bad_rows = spark.createDataFrame(
@@ -39,6 +41,7 @@ def test_injected_violations_caught(spark, tables):
         validation.assert_valid(dirty)
 
 
+@needs_sample(OSM_SAMPLE, PSI_SAMPLE)
 def test_fk_orphans_detected(spark, tables):
     dirty = dict(tables)
     orphan = spark.createDataFrame([(123456789, 1, 0)], ["id", "node_id", "position"])

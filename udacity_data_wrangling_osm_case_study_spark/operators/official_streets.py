@@ -13,14 +13,16 @@ unique AND whose chi is globally unique" — two window counts instead of
 a self cross-join. Same result, linear.
 
 The list is a ~4.5k-row dimension that downstream always broadcasts, so
-it is built on ONE partition: the dedup, the two window counts and the
-lookup melt then need no shuffle, and the repair receives it as a
-one-row dictionary (:func:`street_dictionary`).
+it is built on ONE partition: the dedup and the two window counts need
+no shuffle. The repair and the street audit receive it as a one-row
+dictionary (:func:`street_dictionary`) built by one aggregation over
+one scan of the PSI file; :func:`name_lookup_table` is the relational
+form of its name map, kept as the reference the tests compare with.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from udacity_data_wrangling_osm_case_study_spark.functions import names as N
@@ -80,15 +82,32 @@ def name_lookup_table(official: DataFrame) -> DataFrame:
 
 def street_dictionary(official: DataFrame) -> DataFrame:
     """The official list as ONE row of two maps, for a broadcast
-    cross join onto the ways: ``name_to_idx`` (from
-    :func:`name_lookup_table`, so its max(idx) rule holds) and
-    ``idx_to_name`` (idx → struct(eng, chi))."""
-    names = name_lookup_table(official).agg(
-        F.map_from_entries(F.collect_list(F.struct("name", "idx"))).alias("name_to_idx")
-    )
+    cross join onto the ways: ``name_to_idx`` (name → idx) and
+    ``idx_to_name`` (idx → struct(eng, chi)).
+
+    One scan, one aggregation: both maps come from a single
+    ``collect_list`` of the rows. ``name_to_idx`` applies
+    :func:`name_lookup_table`'s max(idx) rule inside the array: the
+    (name, idx) entries of both languages are sorted, and the last
+    entry of each name run (its largest idx) is kept."""
     rows = official.agg(
-        F.map_from_entries(
-            F.collect_list(F.struct("idx", F.struct("eng", "chi")))
-        ).alias("idx_to_name")
+        F.collect_list(F.struct("idx", F.struct("eng", "chi").alias("row"))).alias("_rows")
     )
-    return names.crossJoin(rows)
+
+    def entries(lang: str) -> Column:
+        return F.transform("_rows", lambda r: F.struct(r["row"][lang].alias("name"), r["idx"]))
+
+    # The sort is materialized in its own projection: the filter below
+    # reads the array at two positions per element, and an inlined
+    # array_sort would be re-evaluated for every read.
+    entries_sorted = rows.select(
+        "_rows", F.array_sort(F.concat(entries("eng"), entries("chi"))).alias("_entries")
+    )
+    e = F.col("_entries")
+    last_of_run = F.filter(
+        e, lambda x, i: (i + 1 == F.size(e)) | (F.get(e, i + 1)["name"] != x["name"])
+    )
+    return entries_sorted.select(
+        F.map_from_entries(last_of_run).alias("name_to_idx"),
+        F.map_from_entries("_rows").alias("idx_to_name"),
+    )

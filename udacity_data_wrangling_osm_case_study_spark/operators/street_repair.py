@@ -19,11 +19,12 @@ Parity target: ``is_street`` / ``get_street_names`` / ``name_look_up`` /
 Scale shape: every step is ROW-LOCAL on the way's own shaped tag array
 — the reference's per-way dict, as higher-order array functions. The
 official list (a few-thousand-row dimension) arrives as a one-row
-dictionary of two maps (official_streets.street_dictionary), broadcast
-and cross-joined onto the ways, so each probe is a map lookup on the
-way row. The way side never shuffles and never explodes: the repaired
-frame keeps the parse's partitioning, and the EAV rows come out only at
-the sink.
+dictionary of two maps (official_streets.street_dictionary: one scan of
+the PSI file, one aggregation), broadcast and cross-joined onto the
+ways. The variants are probed into ``name_to_idx`` at one site in the
+plan, once per way, like the reference's dict lookups. The way side
+never shuffles and never explodes: the repaired frame keeps the parse's
+partitioning, and the EAV rows come out only at the sink.
 """
 
 from __future__ import annotations

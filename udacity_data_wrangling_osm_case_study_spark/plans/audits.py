@@ -60,16 +60,27 @@ def audit_bilingual_street_names(
     matched = street_repair.match_variants(
         ways, official_streets.street_dictionary(official)
     )
-    flagged = matched.filter(
-        (F.size("matches") == 1)
-        & ((F.col("not_found") > 0) | (F.col("n_variants") < 4))
-    ).withColumn("_official", street_repair.official_match())
-    return flagged.select(
-        "id",
-        *street_repair.VARIANTS,
-        F.col("_official.eng").alias("official_eng"),
-        F.col("_official.chi").alias("official_chi"),
-    ).orderBy("id")
+    flagged = (F.size("matches") == 1) & (
+        (F.col("not_found") > 0) | (F.col("n_variants") < 4)
+    )
+    report = F.struct(
+        "id", *street_repair.VARIANTS, street_repair.official_match().alias("official")
+    )
+    # The gate lives inside the row (a 0/1-element array exploded), not
+    # in a row-level Filter: a Filter is pushed into the broadcast join
+    # with every column it reads inlined, which probes the dictionary
+    # once per reference instead of once per way.
+    kept = matched.select(
+        F.explode(F.filter(F.array(report), lambda _: flagged)).alias("_r")
+    ).select(
+        *(f"_r.{c}" for c in ["id", *street_repair.VARIANTS]),
+        F.col("_r.official.eng").alias("official_eng"),
+        F.col("_r.official.chi").alias("official_chi"),
+    )
+    # At most one row per street way, collected by the caller: one
+    # partition sorted in place needs no range-bounds sampling job
+    # (which would run the whole upstream a second time).
+    return kept.coalesce(1).sortWithinPartitions("id")
 
 
 def _tolerant_phone_segment(seg) -> F.Column:
