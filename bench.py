@@ -1,9 +1,13 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS], plus the
+full OSM ETL.
 
-Prints ONE JSON line:
-{"metric": ..., "value": total_sec, "unit": "sec",
- "queries": {name: sec, ...}, "sf": ...}
+Prints ONE JSON line of raw wall times:
+{"metric": ..., "value": total_sec, "unit": "sec", "n_queries": ...,
+ "queries": {slowest name: sec, ...}, "queries_file": ..., "sf": ...,
+ "cpus": ..., "master": ..., "osm_etl_sec": ..., "osm_etl_input": ...}
+and the per-query runs to the side file ``queries_file``. Speed claims
+are made with ABBA pairs of ``perfbench/run.py``, not with this total.
 """
 
 from __future__ import annotations
@@ -13,7 +17,8 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+_REPO = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, _REPO)
 
 from udacity_data_wrangling_osm_case_study_spark.plans import registry
 from udacity_data_wrangling_osm_case_study_spark.session import get_spark
@@ -317,267 +322,34 @@ BENCH_EXCLUDED: dict[str, str] = {
 }
 
 
-# Environment fingerprint (VERDICT r9 item 2): rounds 7 and 9 each burned
-# a full adjudication cycle proving that a 20-30% total drift was uniform
-# host slowdown, not a plan regression. The bench now measures the rig
-# itself with two fixed calibration probes and prints a total NORMALIZED
-# by the host-speed factor, so a drifted rig self-reports instead of
-# looking like a code change.
-#
-# Reference probe costs, pinned on the round-10 tree (idle rig,
-# loadavg 0.05, 32 CPUs): re-pin ONLY when the probe workloads change.
-# jvm_probe_sec is the POST-run (fully JIT-warm) cost from the r10
-# frozen-tree bench on the same known-good rig epoch (BENCH_QUERIES.json
-# post: 0.0876); the pre-run probe runs in a cold JVM and measures JIT
-# state, not the host, so the factor logic only ever compares the
-# post-run value against this hot-pinned reference.
-CALIBRATION_REF = {
-    "cpu_probe_sec": 0.100,
-    "mt_probe_sec": 0.154,
-    "jvm_probe_sec": 0.0876,
-}
+def time_query(run, on_discord=lambda: None) -> dict:
+    """Time one query: call ``run()`` (returns seconds) until the two
+    fastest runs agree within 10%, at least 2 and at most 4 times.
 
-
-def resolve_host_factor(calib_pre: dict, calib_post: dict,
-                        ref: dict | None = None,
-                        jvm_series: list | None = None,
-                        cpu_series: list | None = None) -> dict:
-    """Host-speed-factor policy (round-12 revision; ADVICE r11 high).
-
-    The r10 driver run reported a CPython-probe factor of 1.205 while
-    its RAW total matched builder and judge within 4% — the SHA-256
-    probes over-read that rig's slowness relative to JVM query
-    throughput, so the normalized total over-credited by 17%. The
-    bench workload is JVM-dominated, so the JVM codegen probe
-    adjudicates: when the CPython factor and the JVM factor agree
-    within 10%, the CPython factor stands (it is the cleaner host
-    signal) and the run is concordant.
-
-    When they DISAGREE by more, the run is flagged non-concordant and
-    raw totals are the comparison of record. The recorded factor then
-    must never move FURTHER from 1.0 than the CPython probes support:
-    the round-11 flagged epoch (factor_py 1.019 vs factor_jvm 1.401,
-    both CPython probes ~1.02 — the all-core probe directly
-    contradicting any host-wide squeeze) clamped INTO the JVM band and
-    published a 20% self-favoring normalization. Now the factor is
-    whichever of {factor_py, JVM-band clamp of factor_py} lies closer
-    to 1.0 — the old clamp still applies when the CPython probes
-    over-read (r10 driver case, factor pulled DOWN toward the healthy
-    JVM), but a high-variance JVM probe can no longer inflate the
-    credit. main() additionally suppresses normalization entirely on
-    non-concordant runs (value_normalized = raw).
-
-    Pure function of the recorded calibration dicts so the policy is
-    unit-testable on archived snapshots (tests/test_bench_calibration).
-
-    Returns {"factor", "factor_py", "factor_jvm", "concordant"}.
+    Single-shot and plain best-of-2 numbers drifted ~21% between rounds
+    (CPU steal, JVM GC state); two concordant fast runs make the recorded
+    min reproducible on an immediate re-run. ``on_discord`` runs after
+    each discordant pair (the bench gives the JVM a GC breather there,
+    in case a host stall landed on a run). ``concordant`` is False when
+    all 4 runs disagree: the recorded min is then the least trustworthy.
     """
-    ref = ref or CALIBRATION_REF
-    # Single-thread CPython estimate: the MEDIAN of the interleaved
-    # series when one exists (round-13, NOTES_r12 §9 — symmetric with
-    # the JVM side below; no ramp exclusion, sha256 has no JIT), else
-    # the min of the two endpoint probes. The all-core mt probe stays
-    # endpoint-min: it is not interleaved (too heavy mid-run).
-    cpts = sorted(s for s in (cpu_series or []) if s is not None and s > 0)
-    if len(cpts) >= 3:
-        mid = len(cpts) // 2
-        cpu_best = (cpts[mid] if len(cpts) % 2
-                    else (cpts[mid - 1] + cpts[mid]) / 2)
-    else:
-        cpu_best = min(calib_pre["cpu_probe_sec"],
-                       calib_post["cpu_probe_sec"])
-    ratios = [cpu_best / ref["cpu_probe_sec"]]
-    mts = [c.get("mt_probe_sec") for c in (calib_pre, calib_post)]
-    mts = [m for m in mts if m is not None]
-    if mts:  # probe may have failed (spawn restrictions) — see _mt_probe
-        ratios.append(min(mts) / ref["mt_probe_sec"])
-    # Worse of single-thread / all-core: a 32-way co-tenant squeeze
-    # shows up only in the all-core probe, a frequency drop in both.
-    factor_py = max(ratios)
-    # JVM factor: the MEDIAN of the interleaved probe series when one
-    # exists (round-12: the final r12 refresh run measured the single
-    # post-run probe at 1.16x ref while its own 11-point steady series
-    # had median 1.00 — one best-of-3 reading of this probe wanders
-    # +/-30% with session state, and a single sample was flagging runs
-    # the full series exonerates). The first point is excluded as the
-    # JIT ramp; fallback without a series: the post-run probe only
-    # (the pre-run probe measures JIT cold-start).
-    pts = [s for s in (jvm_series or []) if s is not None and s > 0][1:]
-    if len(pts) >= 3:
-        pts.sort()
-        mid = len(pts) // 2
-        jvm_est = (pts[mid] if len(pts) % 2
-                   else (pts[mid - 1] + pts[mid]) / 2)
-    else:
-        jvm_est = calib_post["jvm_probe_sec"]
-    factor_jvm = jvm_est / ref["jvm_probe_sec"]
-    concordant = (
-        max(factor_py, factor_jvm) <= 1.10 * min(factor_py, factor_jvm)
-    )
-    if concordant:
-        factor = factor_py
-    else:
-        clamped = min(max(factor_py, factor_jvm / 1.10), factor_jvm * 1.10)
-        # Never further from 1.0 than the CPython evidence supports.
-        factor = min((factor_py, clamped), key=lambda f: abs(f - 1.0))
-    return {
-        "factor": round(factor, 3),
-        "factor_py": round(factor_py, 3),
-        "factor_jvm": round(factor_jvm, 3),
-        "concordant": concordant,
-    }
-
-
-# Interleaved-series tolerances, CALIBRATED on the three instrumented
-# round-12 adjudication runs (NOTES_r12 §3): the single-thread CPython
-# probe's healthy max/min across a run measured 1.05-1.17 (floor ~1.2),
-# and the GC-breathered JVM codegen probe still wanders 1.85-1.9
-# healthy (JIT/code-cache state) while the judge-measured squeeze class
-# reads 2.6x against the same reference — so 1.25 separates host
-# squeeze from CPython noise and 2.2 separates JVM squeeze from JIT
-# wander. A tolerance below the measured noise floor (e.g. the naive
-# 1.15) flags EVERY run and normalization never applies to anything.
-SERIES_TOL_CPU = 1.25
-SERIES_TOL_JVM = 2.2
-
-
-def resolve_series_flag(series: list[float], tolerance: float = 1.15,
-                        skip_ramp: int = 0) -> dict:
-    """Mid-run squeeze detector (VERDICT r11 item 2).
-
-    The pre/post calibration probes are endpoint snapshots: the r11
-    driver run read concordant endpoints (factor 0.995) around a raw
-    total 18% above the builder's same-day concordant run, and a judge
-    session measured this rig's JVM probe swinging 1.17x -> 2.59x
-    within minutes. bench.main() now interleaves probes every ~20
-    queries; this pure function flags the run when a probe SERIES is
-    unsteady (max/min > tolerance) — a run squeezed DURING the
-    queries is non-adjudicable-by-normalization even when its
-    endpoints look healthy.
-
-    ``skip_ramp`` drops the first N points from the FLAG (they stay
-    recorded): the first interleaved JVM probe reads ~1.5x slow on
-    every run because C2 compilation is still ramping minutes into
-    the session — JIT state, not host state (both r12 adjudication
-    runs showed the identical first-point bump).
-
-    Returns {"steady", "ratio", "min", "max", "n"}; an empty or
-    single-point series is vacuously steady (nothing to compare).
-    """
-    pts = [s for s in series if s is not None and s > 0]
-    pts = pts[skip_ramp:] if len(pts) > skip_ramp else pts
-    if len(pts) < 2:
-        return {"steady": True, "ratio": 1.0,
-                "min": pts[0] if pts else None,
-                "max": pts[0] if pts else None, "n": len(pts)}
-    lo, hi = min(pts), max(pts)
-    return {"steady": hi / lo <= tolerance, "ratio": round(hi / lo, 3),
-            "min": round(lo, 4), "max": round(hi, 4), "n": len(pts)}
-
-# Self-contained multi-core probe, run in a fresh subprocess: one
-# SHA-256 worker PROCESS per CPU (this Python's hashlib does not
-# release the GIL, so threads serialize — and forking pools under a
-# live JVM is unsafe, hence the subprocess). Sustained all-core
-# throughput is what co-tenant contention actually degrades; the
-# single-thread probe alone cannot see a 32-way squeeze.
-_MT_PROBE_SCRIPT = r"""
-import time, os, hashlib
-from concurrent.futures import ProcessPoolExecutor
-def work(_):
-    h = hashlib.sha256()
-    buf = b"\x5a" * 65536
-    for _ in range(2000):
-        h.update(buf)
-    return 1
-if __name__ == "__main__":
-    n = os.cpu_count() or 8
-    with ProcessPoolExecutor(n) as pool:
-        list(pool.map(work, range(n)))  # warm the pool
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.perf_counter()
-            list(pool.map(work, range(n)))
-            best = min(best, time.perf_counter() - t0)
-    print(best)
-"""
-
-
-def _mt_probe() -> float | None:
-    """All-core probe in a fresh subprocess. Returns None (with a
-    stderr diagnostic) when the probe cannot run — e.g. process-spawn
-    restrictions — instead of aborting the whole bench after warm-up
-    with a bare ValueError; the factor logic falls back to the
-    single-thread probe alone."""
-    import subprocess
-    import sys
-
-    try:
-        r = subprocess.run(
-            [sys.executable, "-c", _MT_PROBE_SCRIPT],
-            capture_output=True, text=True, timeout=120,
-        )
-    except (OSError, subprocess.TimeoutExpired) as e:
-        print(f"WARN mt_probe spawn failed: {e!r}", file=sys.stderr)
-        return None
-    if r.returncode != 0 or not r.stdout.strip():
-        print(
-            "WARN mt_probe failed rc="
-            f"{r.returncode} stderr={r.stderr.strip()[:500]!r}",
-            file=sys.stderr,
-        )
-        return None
-    return float(r.stdout.strip())
-
-
-def _cpu_probe() -> float:
-    """Fixed single-threaded CPU-bound probe: SHA-256 over 128 MB of
-    deterministic data (2000 x 64 KiB, GIL-released C loop). Pure host
-    speed — independent of Spark/JVM state; CPU steal and thermal
-    throttling show up here exactly as they do in query wall times."""
-    import hashlib
-
-    best = float("inf")
-    for _ in range(5):
-        buf = b"\x5a" * 65536
-        t0 = time.perf_counter()
-        for _ in range(2000):
-            buf = (hashlib.sha256(buf).digest() * 2048)[:65536]
-        best = min(best, time.perf_counter() - t0)
-    return best
-
-
-def _jvm_probe(spark) -> float:
-    """Fixed 32-partition codegen aggregation (50M-row range sum) —
-    captures JVM/codegen/GC health; diagnostic only (JVM state drifts
-    with session age, so normalization uses the CPU probe)."""
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.perf_counter()
-        spark.range(0, 50_000_000, 1, 32).selectExpr(
-            "sum(id * id % 1000003) AS s"
-        ).collect()
-        best = min(best, time.perf_counter() - t0)
-    return best
-
-
-def _calibration(spark) -> dict:
-    load1, load5, load15 = os.getloadavg()
-    mt = _mt_probe()
-    return {
-        "cpu_probe_sec": round(_cpu_probe(), 4),
-        "mt_probe_sec": None if mt is None else round(mt, 4),
-        "jvm_probe_sec": round(_jvm_probe(spark), 4),
-        "loadavg": [round(load1, 2), round(load5, 2), round(load15, 2)],
-        "cpu_count": os.cpu_count(),
-    }
+    runs = [run()]
+    while True:
+        runs.append(run())
+        fast2 = sorted(runs)[:2]
+        concordant = fast2[1] <= fast2[0] * 1.10
+        if not concordant:
+            on_discord()
+        if concordant or len(runs) == 4:
+            return {"runs": runs, "concordant": concordant, "best": fast2[0]}
 
 
 def _bench_osm_etl(spark, osm: str, psi: str) -> float:
-    """Best-of-3 full OSM ETL on the reference's own sample —
-    comparable to BASELINE.md's measured 2.75 s reference wall time
-    (same input, same six outputs). At 3.9 MB the time is Spark
-    plan-compilation overhead, not data work (BASELINE.md documents
-    this; the scale story is the sharded parallel scan)."""
+    """Best-of-3 full OSM ETL (split, parse, six tables counted). On the
+    reference's own sample it is comparable to BASELINE.md's measured
+    2.75 s reference wall time (same input, same six outputs). At 3.9 MB
+    the time is Spark plan-compilation overhead, not data work
+    (BASELINE.md documents this; the scale story is the sharded scan)."""
     import shutil
     import tempfile
     from concurrent.futures import ThreadPoolExecutor
@@ -605,6 +377,27 @@ def _bench_osm_etl(spark, osm: str, psi: str) -> float:
     return round(best, 3)
 
 
+def _osm_etl(spark) -> dict:
+    """Time the OSM ETL on the Sha Tin sample, or, when the sample is
+    absent, on a generated extract with the sample's element counts."""
+    import tempfile
+
+    osm = "/root/reference/shatin.osm"
+    psi = "/root/reference/PSI_Street Name_062017.xml"
+    if os.path.exists(osm):
+        sec = _bench_osm_etl(spark, osm, psi)
+        return {"osm_etl_sec": sec, "osm_etl_input": "shatin",
+                "osm_etl_shatin_sec": sec}
+    sys.path.append(os.path.join(_REPO, "perfbench"))
+    from gen_osm import generate
+
+    with tempfile.TemporaryDirectory(prefix="bench_gen_osm_") as d:
+        generate(d, seed=7, scale=1.0)
+        sec = _bench_osm_etl(spark, os.path.join(d, "extract.osm"),
+                             os.path.join(d, "psi.xml"))
+    return {"osm_etl_sec": sec, "osm_etl_input": "gen_osm seed=7 scale=1.0"}
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
@@ -622,139 +415,42 @@ def main() -> None:
     # Warm the JVM/session so per-query numbers measure the queries.
     queries["table_counts"](spark, sf_dir).collect()
 
-    calib_pre = _calibration(spark)
+    # Full OSM ETL, measured FIRST, right after warm-up: after ~90 query
+    # collects the long-lived JVM accumulates enough code-cache/GC churn
+    # to inflate a plan-construction-bound measurement 2-3x (observed),
+    # and the reference baseline (2.75 s) ran in a fresh process.
+    etl = _osm_etl(spark)
 
-    # Full OSM ETL on the reference's own sample — measured FIRST,
-    # right after warm-up: after ~90 query collects the long-lived JVM
-    # accumulates enough code-cache/GC churn to inflate a
-    # plan-construction-bound measurement 2-3x (observed), and the
-    # reference baseline (2.75 s) ran in a fresh process.
-    osm = "/root/reference/shatin.osm"
-    psi = "/root/reference/PSI_Street Name_062017.xml"
-    osm_etl_sec = None
-    if os.path.exists(osm):
-        osm_etl_sec = _bench_osm_etl(spark, osm, psi)
+    def run(name: str) -> float:
+        t0 = time.time()
+        queries[name](spark, sf_dir).collect()
+        sec = time.time() - t0
+        # Several dedup queries cache intermediate frames (shingles,
+        # candidate pairs) that stay referenced after collect; dropping
+        # them between passes keeps later timings free of GC pressure
+        # from dead caches.
+        spark.catalog.clearCache()
+        return sec
 
-    # Per-query adaptive timing: sample until the two fastest runs agree
-    # within 10% (min 2, max 4 passes), record the min. Single-shot and
-    # plain best-of-2 numbers drifted ~21% round-over-round on this rig
-    # (CPU steal / JVM GC state) and burned three verdict cycles
-    # adjudicating noise; requiring two concordant fast runs makes the
-    # recorded number reproducible on an immediate re-run while keeping
-    # wall time near the old best-of-2 cost for stable queries.
     timings: dict[str, float] = {}
     query_runs: dict[str, dict] = {}
-    # Interleaved JVM probe series (VERDICT r11 item 2): the endpoint
-    # calibration pair cannot certify the minutes in between — a judge
-    # session measured this rig's JVM throughput swinging 1.17x->2.59x
-    # within minutes. One hot-JVM probe every ~20 queries (~0.3 s each,
-    # <5 s total) makes a mid-run squeeze visible; resolve_series_flag
-    # marks the run non-adjudicable when the series is unsteady.
-    probe_series: list[float] = []
-    cpu_series: list[float] = []
-    probe_every = 20
-    for qi, name in enumerate(HEADLINE):
-        if qi % probe_every == 0:
-            # GC breather first: without it the probe measures the
-            # PREVIOUS query's garbage (both r12 adjudication runs
-            # read 1.9-2.5x swings that tracked which heavy query
-            # preceded the probe, with CPython probes flat).
-            spark._jvm.System.gc()
-            probe_series.append(round(_jvm_probe(spark), 4))
-            # The single-thread CPython probe is immune to JVM state —
-            # it isolates true HOST squeeze (CPU steal, thermal,
-            # co-tenant) from session-intrinsic GC/JIT drift.
-            cpu_series.append(round(_cpu_probe(), 4))
-        runs: list[float] = []
-        for attempt in range(4):
-            t0 = time.time()
-            queries[name](spark, sf_dir).collect()
-            runs.append(time.time() - t0)
-            # Several dedup queries cache intermediate frames (shingles,
-            # candidate pairs) that stay referenced after collect;
-            # dropping them between passes keeps later timings free of
-            # GC pressure from dead caches.
-            spark.catalog.clearCache()
-            if attempt >= 1:
-                fast2 = sorted(runs)[:2]
-                if fast2[1] <= fast2[0] * 1.10:
-                    break
-                # discordant fast pair — a host stall may have landed on
-                # a run; give the JVM a GC breather before resampling
-                spark._jvm.System.gc()
-        fast2 = sorted(runs)[:2]
-        query_runs[name] = {
-            "runs": [round(r, 3) for r in runs],
-            # False after 4 attempts means every pairing disagreed >10%
-            # — flags the queries whose recorded min is least trustworthy
-            "concordant": fast2[1] <= fast2[0] * 1.10,
-        }
-        timings[name] = round(min(runs), 3)
-
-    calib_post = _calibration(spark)
-    probe_series.append(calib_post["jvm_probe_sec"])
-    cpu_series.append(calib_post["cpu_probe_sec"])
-    # Host-speed factor: how much slower this rig ran than the pinned
-    # reference (1.0 = reference speed; 1.2 = 20% slower host). Policy
-    # and rationale in resolve_host_factor — the post-run JVM codegen
-    # probe adjudicates the CPython probes (VERDICT r10 item 2), the
-    # interleaved probe series catches a mid-run squeeze the endpoints
-    # miss (VERDICT r11 item 2), and a discordant/unsteady rig is
-    # flagged non-adjudicable-by-normalization: its value_normalized
-    # is set to the RAW total so the flagged number cannot be
-    # compared across rounds as if it were calibrated (ADVICE r11).
-    factor_info = resolve_host_factor(calib_pre, calib_post,
-                                      jvm_series=probe_series,
-                                      cpu_series=cpu_series)
-    # Two series, two calibrated tolerances (SERIES_TOL_*): the CPython
-    # series is the clean host signal; the JVM series keeps a looser
-    # band (ramp point excluded) because even GC-breathered codegen
-    # throughput wanders ~1.9x healthy with session state — it exists
-    # to catch the 2.6x-class squeezes the judge measured, not to
-    # re-litigate ordinary JIT wander.
-    series_info = resolve_series_flag(probe_series,
-                                      tolerance=SERIES_TOL_JVM,
-                                      skip_ramp=1)
-    cpu_series_info = resolve_series_flag(cpu_series,
-                                          tolerance=SERIES_TOL_CPU)
-    factor_info["series"] = series_info
-    factor_info["cpu_series"] = cpu_series_info
-    concordant = (factor_info["concordant"] and series_info["steady"]
-                  and cpu_series_info["steady"])
-    # Two scopes, two names (ADVICE r12): host_factor_info.concordant
-    # stays ENDPOINT-only (do the pre/post probes agree), while the
-    # run-level flag additionally requires both interleaved series
-    # steady. Store the combined flag inside host_factor_info too, so
-    # a reader of the side file never has to recombine it by hand.
-    factor_info["run_concordant_combined"] = concordant
-    host_speed_factor = factor_info["factor"]
+    for name in HEADLINE:
+        t = time_query(lambda: run(name), on_discord=spark._jvm.System.gc)
+        query_runs[name] = {"runs": [round(r, 3) for r in t["runs"]],
+                            "concordant": t["concordant"]}
+        timings[name] = round(t["best"], 3)
 
     total = round(sum(timings.values()), 3)
-    total_normalized = (
-        round(total / host_speed_factor, 3) if concordant else total
-    )
-    # The full per-query map (120+ entries) once made the stdout line so
-    # long the driver tail-truncated it (BENCH_r02.json parsed: null).
-    # Keep the printed line SHORT — totals, sf, ETL, and the slowest
-    # queries — and write the complete map to a side file. The DEFAULT
-    # side file is gitignored (BENCH_QUERIES.local.json) so a driver
-    # bench run leaves the tree clean; the builder refreshes the
-    # committed snapshot explicitly with
+    # The printed line stays short (a full per-query map once got it
+    # tail-truncated, BENCH_r02.json); the complete map goes to a side
+    # file, gitignored by default. Refresh the committed snapshot with
     # SPARK_GRAFT_BENCH_QUERIES_OUT=BENCH_QUERIES.json.
-    queries_file = os.environ.get(
-        "SPARK_GRAFT_BENCH_QUERIES_OUT", "BENCH_QUERIES.local.json"
-    )
-    slowest = dict(
-        sorted(timings.items(), key=lambda kv: -kv[1])[:10]
-    )
+    queries_file = os.environ.get("SPARK_GRAFT_BENCH_QUERIES_OUT",
+                                  "BENCH_QUERIES.local.json")
+    slowest = dict(sorted(timings.items(), key=lambda kv: -kv[1])[:10])
     out = {
         "metric": "headline_queries_wall_sec",
         "value": total,
-        "value_normalized": total_normalized,
-        "host_speed_factor": host_speed_factor,
-        "calibration_concordant": concordant,
-        "probe_series_steady": (series_info["steady"]
-                                and cpu_series_info["steady"]),
         "unit": "sec",
         "n_queries": len(timings),
         "queries": slowest,
@@ -762,29 +458,14 @@ def main() -> None:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "cpus": bench_cpus,
         "master": bench_master,
+        **etl,
     }
-    if osm_etl_sec is not None:
-        out["osm_etl_shatin_sec"] = osm_etl_sec
-    discordant = sorted(
-        n for n, r in query_runs.items() if not r["concordant"]
-    )
-    with open(
-        os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                     queries_file),
-        "w",
-    ) as f:
+    discordant = sorted(n for n, r in query_runs.items()
+                        if not r["concordant"])
+    with open(os.path.join(_REPO, queries_file), "w") as f:
         json.dump({"sf": out["sf"], "cpus": out["cpus"],
-                   "master": bench_master, "total_sec": total,
-                   "total_sec_normalized": total_normalized,
-                   "host_speed_factor": host_speed_factor,
-                   "host_factor_info": factor_info,
-                   "calibration": {"ref": CALIBRATION_REF,
-                                   "pre": calib_pre, "post": calib_post,
-                                   "jvm_probe_series": probe_series,
-                                   "cpu_probe_series": cpu_series,
-                                   "probe_every_queries": probe_every},
-                   "discordant_queries": discordant,
-                   "osm_etl_shatin_sec": osm_etl_sec, "queries": timings,
+                   "master": bench_master, "total_sec": total, **etl,
+                   "discordant_queries": discordant, "queries": timings,
                    "query_runs": query_runs},
                   f, indent=1, sort_keys=True)
     print(json.dumps(out))

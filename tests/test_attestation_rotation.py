@@ -1,11 +1,10 @@
 """Driver-attestation rotation (VERDICT r10 item 3).
 
 The driver's correctness harness hash-checks the first ~50 names of
-``queries()``; from round 11 that order is the _VERIFY_FIRST hoist
-(current-round semantics changes only) followed by every other query
-least-recently-attested first, per the committed ATTESTATION.json. The
-round-11 driver sample therefore lands on names last attested in
-rounds 1-2 — stale for 9+ rounds under the old hand-maintained hoist.
+``queries()``; that order is every query least-recently-attested first,
+per the committed ATTESTATION.json alone (no hand-maintained hoist). The
+driver sample therefore lands on the names attested longest ago — the
+old hand-maintained hoist left some stale for 9+ rounds.
 
 No SparkSession needed: order is a pure function of the registry and
 the committed JSON.
@@ -39,32 +38,25 @@ def test_attestation_file_matches_correctness_archives():
 
 
 def test_order_is_hoist_then_least_recently_attested():
+    """No hoist (length 0): the whole order is least-recently-attested
+    first."""
     queries, oracles = registry.load_all()
     names = list(queries)
     last = _attestation()["last_attested_round"]
-    k = len(registry._VERIFY_FIRST)
-    assert names[:k] == [n for n in registry._VERIFY_FIRST if n in queries]
-    tail_rounds = [last.get(n, 0) for n in names[k:]]
-    assert tail_rounds == sorted(tail_rounds), (
-        "post-hoist order must be least-recently-attested first"
+    rounds = [last.get(n, 0) for n in names]
+    assert rounds == sorted(rounds), (
+        "order must be least-recently-attested first"
     )
 
 
 def test_driver_window_covers_the_stalest_tail():
     """The ~50-name driver budget must land on the least-recently
-    attested names: outside the (bounded) semantics hoist, every name
-    in the window must be staler than every name after the window."""
+    attested names: every name in the window must be staler than every
+    name after the window."""
     queries, _ = registry.load_all()
     names = list(queries)
     last = _attestation()["last_attested_round"]
-    assert len(registry._VERIFY_FIRST) <= 25, (
-        "the semantics hoist is for THIS round's changed queries only; "
-        "a growing hoist starves the rotation (the r5-r10 failure mode)"
-    )
-    window = names[len(registry._VERIFY_FIRST):50]
-    if not window:
-        return
-    worst_in_window = max(last.get(n, 0) for n in window)
+    worst_in_window = max(last.get(n, 0) for n in names[:50])
     best_after = min(last.get(n, 0) for n in names[50:])
     assert worst_in_window <= best_after
 
@@ -83,13 +75,12 @@ def test_every_registered_query_is_tracked():
     stale_records = sorted(set(last) - set(queries))
     assert not stale_records, f"attested names no longer registered: {stale_records}"
     names = list(queries)
-    k = len(registry._VERIFY_FIRST)
     for n in untracked:
         # ADVICE r11: the old `or last.get(n) is None` arm was vacuously
         # true for every untracked name — assert the position directly:
-        # an unattested query must lead the rotation (right after the
-        # semantics hoist, before any attested name).
-        assert names.index(n) < k + len(untracked), (
+        # an unattested query must lead the rotation, before any
+        # attested name.
+        assert names.index(n) < len(untracked), (
             f"untracked query {n!r} not at rotation front "
-            f"(index {names.index(n)}, hoist {k}, untracked {len(untracked)})"
+            f"(index {names.index(n)}, untracked {len(untracked)})"
         )

@@ -383,10 +383,7 @@ def test_register_rejects_duplicate_names():
     assert registry.QUERIES[existing].__name__ != "_dup"
 
 
-def test_bench_manifest_covers_registry():
-    """Every registered query is either benched (HEADLINE) or named in
-    BENCH_EXCLUDED with a reason — a new registry entry can't silently
-    skip the bench, and neither list carries stale names."""
+def _bench():
     import importlib.util
     import os
 
@@ -396,7 +393,15 @@ def test_bench_manifest_covers_registry():
     spec = importlib.util.spec_from_file_location("bench_manifest", bench_path)
     bench = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(bench)
+    return bench
 
+
+@pytest.mark.guard
+def test_bench_manifest_covers_registry():
+    """Every registered query is either benched (HEADLINE) or named in
+    BENCH_EXCLUDED with a reason — a new registry entry can't silently
+    skip the bench, and neither list carries stale names."""
+    bench = _bench()
     queries, _ = registry.load_all()
     headline, excluded = set(bench.HEADLINE), set(bench.BENCH_EXCLUDED)
     assert len(bench.HEADLINE) == len(headline), "duplicate HEADLINE names"
@@ -413,42 +418,24 @@ def test_bench_manifest_covers_registry():
     assert all(bench.BENCH_EXCLUDED.values()), "empty exclusion reason"
 
 
-def test_bench_calibration_probes(spark):
-    """The bench's environment fingerprint (VERDICT r9 item 2) must
-    produce sane, reproducible numbers: the CPU probe is a fixed
-    deterministic workload whose cost sits within a broad band of the
-    pinned reference (an order-of-magnitude excursion means the probe
-    workload changed without re-pinning CALIBRATION_REF), and the JVM
-    probe runs a real 32-partition job. Two back-to-back CPU probes must
-    agree closely — that stability is what makes the normalized bench
-    total trustworthy."""
-    import importlib.util
-    import os
-
-    bench_path = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "bench.py"
-    )
-    spec = importlib.util.spec_from_file_location("bench_calib", bench_path)
-    bench = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(bench)
-
-    ref = bench.CALIBRATION_REF["cpu_probe_sec"]
-    p1, p2 = bench._cpu_probe(), bench._cpu_probe()
-    # Band is deliberately wide (0.2x–5x): it tolerates any plausible
-    # rig, and only trips when the probe's WORKLOAD no longer matches
-    # the pinned reference constant.
-    assert 0.2 * ref < p1 < 5 * ref, f"re-pin CALIBRATION_REF: probe {p1}"
-    assert min(p1, p2) / max(p1, p2) > 0.7, (p1, p2)
-
-    mt_ref = bench.CALIBRATION_REF["mt_probe_sec"]
-    mt = bench._mt_probe()
-    # the all-core probe runs in its own subprocess pool; same re-pin band
-    assert 0.2 * mt_ref < mt < 5 * mt_ref, f"re-pin mt_probe_sec: {mt}"
-
-    calib = bench._calibration(spark)
-    assert calib["jvm_probe_sec"] > 0
-    assert len(calib["loadavg"]) == 3
-    assert calib["cpu_count"] >= 1
+@pytest.mark.guard
+@pytest.mark.parametrize("durations, n_runs, concordant, discords", [
+    ([1.0, 1.5, 1.05], 3, True, 1),
+    ([1, 2, 3, 4], 4, False, 3),
+    ([1.0, 1.05], 2, True, 0),
+], ids=["third_run_agrees", "never_agrees", "first_pair_agrees"])
+def test_bench_time_query_stops_on_concordant_pair(
+    durations, n_runs, concordant, discords
+):
+    """The bench's one timing rule: run until the two fastest runs agree
+    within 10% (2 to 4 runs), record the min, and breathe after each
+    discordant pair."""
+    it, breathers = iter(durations), []
+    t = _bench().time_query(lambda: next(it),
+                            on_discord=lambda: breathers.append(1))
+    assert t == {"runs": durations[:n_runs], "concordant": concordant,
+                 "best": min(durations)}
+    assert len(breathers) == discords
 
 
 def test_q2_min_cost_supplier_window_decorrelation(spark):

@@ -3,16 +3,17 @@ archives (VERDICT r10 item 3).
 
 The driver's correctness harness hash-checks the FIRST ~50 names of
 ``queries()`` each round. Through round 9 that order was a
-hand-maintained ``_VERIFY_FIRST`` hoist plus registration order, so the
-same names kept being re-attested while others aged (84 of 253 names
-were last driver-attested in rounds 1-2 as of r10 — though, contrary
-to VERDICT r10's "~150 never attested", the union of CORRECTNESS_r1-r10
-covers all 253 names at least once; this tool prints the audit).
+hand-maintained hoist list plus registration order, so the same names
+kept being re-attested while others aged (84 of 253 names were last
+driver-attested in rounds 1-2 as of r10 — though, contrary to VERDICT
+r10's "~150 never attested", the union of CORRECTNESS_r1-r10 covers all
+253 names at least once; this tool prints the audit).
 
-From round 11 the post-hoist order is LEAST-RECENTLY-ATTESTED first,
-driven by the committed ATTESTATION.json this tool writes: each round
-the driver attests the stalest 50, this file is regenerated from the
-new CORRECTNESS_r*.json, and those names rotate to the back — a
+``registry.load_all`` now orders every query LEAST-RECENTLY-ATTESTED
+first (stable on registration order), from the committed
+ATTESTATION.json this tool writes and nothing else: each round the
+driver attests the stalest 50, this file is regenerated from the new
+CORRECTNESS_r*.json, and those names rotate to the back — a
 self-advancing rotation with no per-round hand edits.
 
 Usage: python tools/attestation.py        # rewrites ATTESTATION.json

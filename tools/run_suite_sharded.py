@@ -14,7 +14,8 @@ its own mkdtemp warehouse.
 Shards are balanced by recorded per-file durations
 (TEST_DURATIONS.json, refreshed on every run from pytest's junitxml),
 falling back to file size for new files. Each shard gets
-SPARK_GRAFT_CPUS = 32/shards so the rig is not oversubscribed.
+SPARK_GRAFT_CPUS = os.cpu_count()//shards (at least 2) so the host is
+not oversubscribed.
 
 Usage: python tools/run_suite_sharded.py [--shards 4] [extra pytest args]
 Exit code: 0 iff every shard passed.
@@ -50,6 +51,14 @@ def _weights(files: list[str]) -> dict[str, float]:
     return out
 
 
+def case_file(classname: str) -> str:
+    """File name of a junit test case: pytest's classname is
+    ``tests.test_x`` or ``tests.test_x.TestC``, the file is the
+    ``test_*`` component (a classname without one is kept as is)."""
+    return next((p + ".py" for p in classname.split(".")
+                 if p.startswith("test_")), classname)
+
+
 def _partition(files: list[str], weights: dict[str, float],
                n: int) -> list[list[str]]:
     """Greedy longest-processing-time-first bin packing."""
@@ -65,7 +74,7 @@ def main() -> int:
     ap.add_argument("--shards", type=int,
                     default=int(os.environ.get("SUITE_SHARDS", "4")))
     ap.add_argument("--cpus", type=int, default=0,
-                    help="SPARK_GRAFT_CPUS per shard (default 32/shards)")
+                    help="SPARK_GRAFT_CPUS per shard (default cpu_count/shards)")
     ap.add_argument("pytest_args", nargs="*")
     args = ap.parse_args()
 
@@ -114,7 +123,7 @@ def main() -> int:
                 totals[k] += int(suite.get(k, 0))
             per_file: dict[str, float] = {}
             for case in suite.iter("testcase"):
-                src = case.get("classname", "").split(".")[0] + ".py"
+                src = case_file(case.get("classname", ""))
                 per_file[src] = per_file.get(src, 0.0) + float(
                     case.get("time", 0.0))
             new_durations.update(

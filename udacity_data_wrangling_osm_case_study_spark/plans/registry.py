@@ -54,88 +54,6 @@ _QUERY_MODULES = (
 
 _loaded = False
 
-# Names surfaced first to the driver's correctness harness — ONLY the
-# current round's schema/semantics-changed queries (the driver must
-# re-attest those before anything else). Everything after the hoist is
-# ordered LEAST-RECENTLY-ATTESTED first from the committed
-# ATTESTATION.json (regenerated each round by tools/attestation.py from
-# the driver's CORRECTNESS_r*.json archives), so the driver's bounded
-# ~50-name budget rotates through the registry tail by construction —
-# the r5-r10 hand-maintained hoist kept re-attesting the same names
-# while 84 of 253 aged back to rounds 1-2 (VERDICT r10 item 3).
-_VERIFY_FIRST: tuple[str, ...] = (
-    # ADVICE r12 (registry.py:88): the round-12 exact_floor_div
-    # widening (DECIMAL(38,0) before the pmod subtraction) also flows
-    # through range_join (operators/temporal.py), whose registered
-    # consumers were NOT hoisted in r12 — error_followup_pairs never
-    # landed in CORRECTNESS_r12 at all. Hoist both range_join-backed
-    # queries now so every consumer of the changed expression has a
-    # post-change driver attestation.
-    "error_followup_pairs",
-    "multitouch_attribution",
-    # Round-13 plan change: label_propagation / clustering_coefficient
-    # superstep tails now repartition on the vertex key at the
-    # operator's own edge_partitions instead of inheriting the session
-    # shuffle count (VERDICT r12 item 2). Same rows, different
-    # exchange placement; the driver should confirm.
-    "part_communities",
-    "part_clustering_coeff",
-    # Round-13 s-fuzz fixes (seed 1s), value-identical on clean driver
-    # data but the driver should confirm: the centroid cosine now
-    # guards its zero-norm denominator (try_divide + coalesce, the
-    # oracle's declared COALESCE/NULLIF semantics), and the trend sign
-    # is an exact DECIMAL when-chain matching the oracle CASE (an
-    # all-NULL-value group reports 0, not NULL).
-    "source_centroid_cosine",
-    "event_value_trend",
-    # Representatives of the round-13 ORACLE-side whitespace mirror
-    # (trim(x, ' ') + explicit [ \t\n\x0b\f\r] class across the _NORM
-    # consumers — Spark plans untouched): one dedup-family and one
-    # token-stats attestation.
-    "minhash_lsh_dupes",
-    "corpus_token_stats",
-    # Round-13 OPTIMIZATION plan changes (results oracle-proven
-    # identical at sf0.01 + sf0.001 before shipping; the driver should
-    # re-attest): the per-key Arrow cogroup retired for the built-in
-    # aggregate plan; the post-symmetrize distinct removed; four
-    # fan_out_scan sites (one added round-robin exchange above heavy
-    # row-local scan stages).
-    "cogrouped_entity_profile",
-    "entity_profile_native",
-    "part_random_walk_pairs",
-    "bootstrap_mean_ci",
-    "pricing_summary",
-    "salted_priority_revenue",
-    "customer_geo_pairs",
-    # …and the funnel's single-normalize rewrite (norm reused by the
-    # shingle stage via pre_normalized=True; raw text dropped from the
-    # stage caches).
-    "corpus_curation_funnel",
-    # Round-13 OPTIMIZATION, second pass: pagerank's edge build folded
-    # into a single-exchange collect_set adjacency (pair distinct +
-    # src repartition → one co-partitioned aggregation; supersteps now
-    # join the vertex-sized adjacency and explode row-locally), and
-    # random_walks' adjacency build repartitions BEFORE its groupBy
-    # (plus the caller's now-redundant pair distinct removed — the
-    # collect_set dedups). Results oracle-proven identical at
-    # sf0.001/0.01/0.1 before shipping; part_random_walk_pairs is
-    # already hoisted above.
-    "part_pagerank",
-)
-
-# The hoist list is an honest record of verification priority; a name
-# listed twice means a later block silently shadows an earlier intent
-# (harmless to load_all's dict rebuild, misleading to a reader). Keep
-# it duplicate-free by construction — and NOT via assert, which
-# ``python -O`` strips (ADVICE r12 on the same pattern in the fuzzer).
-if len(_VERIFY_FIRST) != len(set(_VERIFY_FIRST)):
-    raise ValueError(
-        "duplicate names in _VERIFY_FIRST: "
-        + ", ".join(sorted(
-            n for n in set(_VERIFY_FIRST) if _VERIFY_FIRST.count(n) > 1
-        ))
-    )
-
 
 def register(
     name: str, oracle: str | None = None, scan_budget: int | None = None
@@ -263,9 +181,9 @@ def load_all() -> tuple[dict, dict]:
 
     Order — which IS the driver's attestation priority, since its
     correctness harness hash-checks the first ~50 names each round:
-    the ``_VERIFY_FIRST`` hoist (this round's semantics-changed names),
-    then every other query least-recently-attested first (stable on
-    registration order within a round), per ATTESTATION.json. Each
+    least-recently-attested first per the committed ATTESTATION.json
+    (regenerated by tools/attestation.py from the CORRECTNESS_r*.json
+    archives), stable on registration order within a round. Each
     round's driver sample thus covers the stalest tail, and the
     regenerated ATTESTATION.json rotates it to the back.
     """
@@ -274,13 +192,9 @@ def load_all() -> tuple[dict, dict]:
         for mod in _QUERY_MODULES:
             import_module(mod)
         last = _last_attested()
-        front = [n for n in _VERIFY_FIRST if n in QUERIES]
-        reg_idx = {n: i for i, n in enumerate(QUERIES)}
-        rest = sorted(
-            (n for n in QUERIES if n not in _VERIFY_FIRST),
-            key=lambda n: (last.get(n, 0), reg_idx[n]),
-        )
-        reordered = {n: QUERIES[n] for n in (*front, *rest)}
+        # sorted() is stable, so ties keep registration order
+        order = sorted(QUERIES, key=lambda n: last.get(n, 0))
+        reordered = {n: QUERIES[n] for n in order}
         QUERIES.clear()
         QUERIES.update(reordered)
         _loaded = True
