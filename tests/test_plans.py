@@ -339,6 +339,31 @@ def test_scan_budget_tags_cover_known_loops():
     assert all(1 <= b <= 4 for b in registry.SCAN_BUDGETS.values())
 
 
+@pytest.mark.guard
+def test_lineage_cuts_only_through_iterative():
+    """Every lineage cut in the package goes through operators/
+    iterative.py, so reliable-checkpoint mode covers all of them: a bare
+    ``.localCheckpoint(`` or ``.checkpoint(`` call anywhere else would
+    keep executor-local blocks whose loss is unrecoverable."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(registry.__file__).resolve().parents[1]
+    assert pkg.name == "udacity_data_wrangling_osm_case_study_spark"
+    bare = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == pkg / "operators" / "iterative.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("localCheckpoint", "checkpoint")
+            ):
+                bare.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert bare == [], bare
+
+
 def test_kmv_windows_are_keyed(spark):
     """The KMV k-smallest selection must stay two-phase: every window
     in the plan is partitioned by the sketch key (event_type — the
@@ -351,7 +376,6 @@ def test_kmv_windows_are_keyed(spark):
         assert "event_type" in spec, spec
 
 
-@pytest.mark.guard
 def test_disjunctive_predicates_push_to_both_scans(spark):
     """Q19 shape: the mixed OR spans both join sides, but Catalyst must
     push each side's INFERRED disjunction into its own parquet scan —

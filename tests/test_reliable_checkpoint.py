@@ -20,11 +20,15 @@ each superstep snapshot — and prove:
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_DIR
 from udacity_data_wrangling_osm_case_study_spark.operators import dedup, graph
 from udacity_data_wrangling_osm_case_study_spark.operators import iterative
+from udacity_data_wrangling_osm_case_study_spark.plans import registry
 
 CONF = iterative.CONF_KEY
 
@@ -265,3 +269,31 @@ def test_checkpoint_files_reclaimed_in_long_sessions(spark, tmp_path):
             spark.sparkContext._jsc.sc().setCheckpointDir(None)
         else:
             spark.sparkContext.setCheckpointDir(prior)
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["event_markov_stationary", "part_price_smoothing", "weighted_jaccard_pairs"],
+)
+def test_query_lineage_cuts_write_checkpoint_files(
+    spark, monkeypatch, tmp_path, name
+):
+    """The registry queries' lineage cuts go through the session's
+    snapshot mode too: in reliable mode each writes checkpoint files
+    and, with every stored block lost before each snapshot, the query
+    still returns the local-mode rows."""
+    query = registry.load_all()[0][name]
+    want = sorted(map(tuple, query(spark, SF_DIR).collect()))
+    ckpt = tmp_path / "ckpt"
+    spark.conf.set(CONF, str(ckpt))
+    killer = _KillingSnapshots(spark)
+    monkeypatch.setattr(iterative, "snapshotter", killer)
+    monkeypatch.setattr(graph, "snapshotter", killer)
+    try:
+        got = sorted(map(tuple, query(spark, SF_DIR).collect()))
+    finally:
+        spark.conf.unset(CONF)
+    files = [f for _, _, fs in os.walk(ckpt) for f in fs if f.startswith("part-")]
+    assert got == want
+    assert files, f"{name}: no checkpoint files under {ckpt}"
+    assert killer.kills >= 1

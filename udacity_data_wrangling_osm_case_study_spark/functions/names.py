@@ -73,7 +73,3 @@ def extract_chinese_name(value: Column) -> Column:
     """F3: first non-Latin run of a combined bilingual name, or NULL."""
     return F.nullif(F.regexp_extract(value, CHI_NAME_RE, 1), F.lit(""))
 
-
-def combined_name(chi: Column, eng: Column) -> Column:
-    """F6: the reference's combined ``name`` form ``<chi> <eng>`` (:447)."""
-    return F.concat_ws(" ", chi, eng)

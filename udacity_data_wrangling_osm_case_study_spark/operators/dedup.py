@@ -25,10 +25,15 @@ for this operator family.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from udacity_data_wrangling_osm_case_study_spark.operators.iterative import snap_eager
+from udacity_data_wrangling_osm_case_study_spark.operators.iterative import (
+    snap_eager,
+    snap_lazy,
+)
 
 HEX = "0123456789abcdef"
 
@@ -250,6 +255,70 @@ def lsh_candidate_pairs(
     )
 
 
+def docvec_pairs(
+    candidates: DataFrame,
+    items: DataFrame,
+    per_doc: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Merge-verify step shared by every candidate-generation family
+    (MinHash-LSH, PPJoin prefix filter, containment, weighted Jaccard):
+    each candidate pair with one per-doc row joined onto both sides.
+
+    ``candidates``: DISTINCT (id_a, id_b) pairs — what
+    :func:`lsh_candidate_pairs`, :func:`containment_candidates` and the
+    prefix-filter candidate stage emit. A duplicated row would
+    duplicate its output row; rows with id_a >= id_b are dropped.
+    ``items``: rows keyed by ``id`` (shingle hashes, raw documents).
+    ``per_doc(items)`` builds one row per doc: ``id`` plus the inputs of
+    the caller's measure (a hash list and its size, a token→count map
+    and its total). Each per-doc column ``c`` arrives twice, as
+    ``c + "a"`` and ``c + "b"`` (``id`` as ``id_a`` and ``id_b``).
+
+    The candidate frame is snapshotted once, through
+    :func:`~.iterative.snap_lazy`: the endpoint semi-join and the pair
+    frame both read it, and Spark shares no subplan across DAG
+    branches. ``items`` are semi-joined to the candidate docs BEFORE
+    ``per_doc``, so the pass scales with the candidate set, not the
+    corpus. The per-doc rows are cached, as both pair-join sides read
+    them. The pair frame then joins these two doc-keyed relations and
+    the caller computes its measure row-locally: no token-level row
+    ever enters the pair join's shuffle.
+    """
+    cand = (
+        candidates.select("id_a", "id_b")
+        .filter(F.col("id_a") < F.col("id_b"))
+        .transform(snap_lazy)
+    )
+    docvecs = per_doc(items.join(pair_endpoints(cand), "id", "left_semi")).cache()
+
+    def side(s: str) -> DataFrame:
+        return docvecs.select(
+            *[
+                F.col(c).alias(f"id_{s}" if c == "id" else c + s)
+                for c in docvecs.columns
+            ]
+        )
+
+    return cand.join(side("a"), "id_a").join(side("b"), "id_b")
+
+
+def _set_overlap(candidates: DataFrame, hashed: DataFrame) -> DataFrame:
+    """(id_a, id_b, inter, size_a, size_b) of each candidate pair over
+    the (id, g) shingle-hash sets: :func:`docvec_pairs` with each doc's
+    hash list, intersected row-locally."""
+    pairs = docvec_pairs(
+        candidates,
+        hashed,
+        lambda d: d.groupBy("id").agg(
+            F.collect_list("g").alias("v"),
+            F.count("*").alias("size_"),  # → size_a, size_b
+        ),
+    )
+    return pairs.withColumn(
+        "inter", F.size(F.array_intersect("va", "vb")).cast("long")
+    )
+
+
 def jaccard_pairs(
     shingles: DataFrame,
     candidates: DataFrame | None = None,
@@ -258,13 +327,9 @@ def jaccard_pairs(
     """Exact word-shingle Jaccard per pair via the inverted-index join.
 
     (id_a, id_b, inter, size_a, size_b, jaccard). If ``candidates`` is
-    given, only those pairs are scored (the LSH-verify path); otherwise
-    all co-shingled pairs are scored (small corpora / audits).
-
-    ``candidates`` contract: DISTINCT canonical pairs (id_a < id_b) —
-    what every in-module producer (:func:`lsh_candidate_pairs`,
-    :func:`containment_candidates`) emits; a duplicated candidate row
-    would duplicate its output row on the docvec path below.
+    given, only those pairs are scored (the LSH-verify path,
+    :func:`docvec_pairs`, same contract); otherwise all co-shingled
+    pairs are scored (small corpora / audits).
     """
     # Join on a 60-bit hash of the shingle, not the string: the
     # inverted-index shuffle carries 8-byte keys instead of ~20-char
@@ -273,7 +338,7 @@ def jaccard_pairs(
     # engine — the oracle hashes the same way — and cannot create a
     # pair on their own, only nudge an intersection count. One
     # divergence under an INTRA-doc collision (ADVICE r13): the docvec
-    # path below dedups hash values per doc (array_intersect over the
+    # path dedups hash values per doc (array_intersect over the
     # collect_list), while the no-candidates inverted-index path counts
     # join-row multiplicity — so if two distinct shingles of one doc
     # collide into one 60-bit value, the two physical paths can differ
@@ -282,99 +347,38 @@ def jaccard_pairs(
     # so that failure mode is documented rather than mysterious.
     hashed = shingles.select("id", shingle_hash().alias("g"))
     if candidates is not None:
-        # Verify-only-candidates, DOCVEC form (round 13, guide §2.3 —
-        # the merge-verify shape already proven in prefix_filter_pairs
-        # and weighted_jaccard_pairs): candidate docs are NEAR-DUPS of
-        # each other, so the old token-level inverted-index join over
-        # them was its own worst case — every shared shingle of every
-        # co-shingled candidate-doc pair (including non-candidate
-        # pairs, discarded only after the groupBy) entered the g-keyed
-        # shuffle. Instead: one token→hash array row per candidate doc
-        # (semi-join BEFORE the aggregation, so the pass scales with
-        # the candidate set, not the corpus — the LSH point at
-        # 100 TB), two doc-keyed joins from the pair frame, and the
-        # intersection as a row-local array_intersect: verify cost is
-        # O(|pairs|·avg_set) compute with no token-level shuffle.
-        # Measured (isolated, warm inputs, interleaved ×6 at sf0.1):
-        # 2.03 → 1.05 s. ``inter >= 1`` mirrors the old path exactly —
-        # it only ever emitted co-shingled pairs; docvecs is cached
-        # because both pair-join sides reference it (the
-        # weighted_jaccard_pairs lesson: uncached, the semi-join +
-        # collect_list subtree runs twice).
-        cand_ids = pair_endpoints(candidates)
-        docvecs = (
-            hashed.join(cand_ids, "id", "left_semi")
-            .groupBy("id")
-            .agg(F.collect_list("g").alias("v"), F.count("*").alias("sz"))
-            .cache()
-        )
-        scored = (
-            candidates.select("id_a", "id_b")
+        # inter >= 1: the inverted-index path only emits co-shingled pairs
+        scored = _set_overlap(candidates, hashed).filter(F.col("inter") >= 1)
+    else:
+        sizes = shingles.groupBy("id").agg(F.count("*").alias("sz"))
+        a = hashed.select(F.col("id").alias("id_a"), "g")
+        b = hashed.select(F.col("id").alias("id_b"), "g")
+        inter = (
+            a.join(b, "g")
             .filter(F.col("id_a") < F.col("id_b"))
-            .join(
-                docvecs.select(
-                    F.col("id").alias("id_a"),
-                    F.col("v").alias("va"),
-                    F.col("sz").alias("size_a"),
-                ),
-                "id_a",
-            )
-            .join(
-                docvecs.select(
-                    F.col("id").alias("id_b"),
-                    F.col("v").alias("vb"),
-                    F.col("sz").alias("size_b"),
-                ),
-                "id_b",
-            )
-            .withColumn(
-                "inter", F.size(F.array_intersect("va", "vb")).cast("long")
-            )
-            .filter(F.col("inter") >= 1)
-            .withColumn(
-                "jaccard",
-                F.round(
-                    F.col("inter")
-                    / (F.col("size_a") + F.col("size_b") - F.col("inter")),
-                    6,
-                ),
-            )
+            .groupBy("id_a", "id_b")
+            .agg(F.count("*").alias("inter"))
         )
-        return scored.filter(F.col("jaccard") >= min_jaccard).select(
-            "id_a", "id_b", "inter", "size_a", "size_b", "jaccard"
-        )
-    sizes = shingles.groupBy("id").agg(F.count("*").alias("sz"))
-    a = hashed.select(F.col("id").alias("id_a"), "g")
-    b = hashed.select(F.col("id").alias("id_b"), "g")
-    inter = (
-        a.join(b, "g")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .groupBy("id_a", "id_b")
-        .agg(F.count("*").alias("inter"))
-    )
-    # sizes is one row per doc — always broadcast-sized relative to the
-    # pair frame (docs ≪ pairs); hint it so neither join shuffles inter.
-    scored = (
-        inter.join(
+        # sizes is one row per doc — always broadcast-sized relative to
+        # the pair frame (docs ≪ pairs); hint it so neither join
+        # shuffles inter.
+        scored = inter.join(
             F.broadcast(
                 sizes.withColumnRenamed("id", "id_a").withColumnRenamed("sz", "size_a")
             ),
             "id_a",
-        )
-        .join(
+        ).join(
             F.broadcast(
                 sizes.withColumnRenamed("id", "id_b").withColumnRenamed("sz", "size_b")
             ),
             "id_b",
         )
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("inter")
-                / (F.col("size_a") + F.col("size_b") - F.col("inter")),
-                6,
-            ),
-        )
+    scored = scored.withColumn(
+        "jaccard",
+        F.round(
+            F.col("inter") / (F.col("size_a") + F.col("size_b") - F.col("inter")),
+            6,
+        ),
     )
     return scored.filter(F.col("jaccard") >= min_jaccard).select(
         "id_a", "id_b", "inter", "size_a", "size_b", "jaccard"
@@ -665,11 +669,6 @@ def incremental_near_dupes(
         cand.unpersist()
         return out
     return scored
-
-
-def _hex_digit_value(c):
-    """Portable hex-digit → int (works identically in DuckDB SQL)."""
-    return F.when(F.ascii(c) >= 97, F.ascii(c) - 87).otherwise(F.ascii(c) - 48)
 
 
 def simhash64(
@@ -1501,46 +1500,17 @@ def prefix_filter_pairs(
         .select("id_a", "id_b")
         .distinct()
     )
-    # Exact verify, docvec form: each candidate DOC's hash set is
-    # collected into one array row (docs ≪ pairs ≪ shingle collisions),
-    # the pair frame joins those two small per-doc relations, and the
-    # intersection count is a row-local array_intersect — no shingle-
-    # level explode ever re-enters a shuffle, so verify cost is
-    # O(|pairs| · avg_set) compute with only doc-keyed joins (the same
-    # merge-verify every set-similarity system runs after candidate
-    # generation). The candidate pair set is materialized once (it is
-    # referenced twice; Spark has no common-subplan sharing across DAG
-    # branches).
-    cand = cand.transform(snap_eager)
-    cand_ids = pair_endpoints(cand)
-    docvecs = (
-        hashed.join(cand_ids, "id", "left_semi")
-        .groupBy("id")
-        .agg(F.collect_list("g").alias("v"), F.count("*").alias("sz"))
-    )
-    out = (
-        cand.join(
-            docvecs.select(
-                F.col("id").alias("id_a"),
-                F.col("v").alias("va"),
-                F.col("sz").alias("size_a"),
-            ),
-            "id_a",
-        )
-        .join(
-            docvecs.select(
-                F.col("id").alias("id_b"),
-                F.col("v").alias("vb"),
-                F.col("sz").alias("size_b"),
-            ),
-            "id_b",
-        )
-        .withColumn("inter", F.size(F.array_intersect("va", "vb")).cast("long"))
-    )
+    return _jaccard_bp(_set_overlap(cand, hashed), threshold_num, threshold_den)
+
+
+def _jaccard_bp(pairs: DataFrame, threshold_num: int, threshold_den: int) -> DataFrame:
+    """(id_a, id_b, inter, size_a, size_b, jaccard_bp) for the pairs
+    with J ≥ num/den — integer cross-multiplied threshold, no float
+    compare; Jaccard in basis points."""
     keep = (threshold_den + threshold_num) * F.col("inter") >= threshold_num * (
         F.col("size_a") + F.col("size_b")
     )
-    return out.filter(keep).select(
+    return pairs.filter(keep).select(
         "id_a",
         "id_b",
         "inter",
@@ -1621,18 +1591,7 @@ def similarity_pairs(
     """
     if _df_skew_probe(sh, max_df2_ratio):
         return prefix_filter_pairs(sh, threshold_num, threshold_den)
-    scored = jaccard_pairs(sh)
-    keep = (threshold_den + threshold_num) * F.col("inter") >= threshold_num * (
-        F.col("size_a") + F.col("size_b")
-    )
-    return scored.filter(keep).select(
-        "id_a",
-        "id_b",
-        "inter",
-        "size_a",
-        "size_b",
-        F.expr("inter * 10000 div (size_a + size_b - inter)").alias("jaccard_bp"),
-    )
+    return _jaccard_bp(jaccard_pairs(sh), threshold_num, threshold_den)
 
 
 def containment_candidates(
@@ -1703,7 +1662,6 @@ def containment_pairs_adaptive(
     cand = None
     if _df_skew_probe(sh, max_df2_ratio):
         cand = containment_candidates(sh, threshold_num, threshold_den)
-        cand = cand.transform(snap_eager)
     return containment_pairs(sh, threshold_num, threshold_den, candidates=cand)
 
 

@@ -30,26 +30,6 @@ def tokens(col):
     return F.split(normalize_text(col), " ")
 
 
-def token_count(col):
-    return F.size(tokens(col))
-
-
-def word_count_of(col, word: str):
-    return F.size(F.filter(tokens(col), lambda w: w == F.lit(word)))
-
-
-def stopword_ratio(col):
-    stops = F.size(F.filter(tokens(col), lambda w: w.isin(STOPWORDS)))
-    return stops / token_count(col)
-
-
-def avg_token_length(col):
-    total = F.aggregate(
-        tokens(col), F.lit(0), lambda acc, w: acc + F.length(w)
-    )
-    return total / token_count(col)
-
-
 def lang_id(col):
     """First matching marker word wins; 'und' when none present."""
     expr = None
@@ -57,15 +37,6 @@ def lang_id(col):
         cond = F.array_contains(tokens(col), word)
         expr = F.when(cond, lang) if expr is None else expr.when(cond, lang)
     return expr.otherwise(F.lit("und"))
-
-
-def quality_score(col):
-    """Composite [0,1]-ish score: stopword share + token-length shape.
-
-    score = round(0.5*stop_ratio + 0.5*(1 - |avg_len - 5|/10), 4)
-    """
-    shape = F.lit(1.0) - F.abs(avg_token_length(col) - F.lit(5.0)) / F.lit(10.0)
-    return F.round(F.lit(0.5) * stopword_ratio(col) + F.lit(0.5) * shape, 4)
 
 
 def doc_profile(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:

@@ -193,13 +193,11 @@ def corpus_curation_funnel(spark, sf_dir):
     # Persist points (round-7 audit): sh feeds 4 branches; bands feeds
     # both sides of the bucket self-join (the two sides project
     # different columns, so Spark never gives a ReusedExchange — without
-    # the cache the minhash aggregation runs twice); cand feeds the two
-    # candidate-doc semi-joins plus the final pair semi-join inside
-    # jaccard_pairs (×3 recompute of the whole LSH chain before).
+    # the cache the minhash aggregation runs twice).
     sh = dedup.word_shingles(s2, text_col="norm", pre_normalized=True).cache()
     sigs = dedup.minhash_signatures(sh, num_hashes=8)
     bands = dedup.lsh_bands(sigs, rows_per_band=2).cache()
-    cand = dedup.lsh_candidate_pairs(bands).cache()
+    cand = dedup.lsh_candidate_pairs(bands)
     verified = dedup.jaccard_pairs(sh, candidates=cand, min_jaccard=0.5)
     drops = verified.select(F.col("id_b").alias("doc_id")).distinct().cache()
 

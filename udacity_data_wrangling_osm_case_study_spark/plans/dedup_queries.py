@@ -134,16 +134,15 @@ def ngram_jaccard_pairs(spark, sf_dir):
 def minhash_lsh_dupes(spark, sf_dir):
     """MinHash(8) + LSH(4 bands × 2 rows) candidate generation, then
     exact-Jaccard verification restricted to candidate docs — the
-    sub-quadratic fuzzy-dedup path. Shingles, bands and candidates are
-    cached: shingles and candidates each feed multiple plan branches,
-    and bands feeds both sides of the bucket self-join (differing
-    projections defeat ReusedExchange, so uncached the minhash
-    aggregation would run twice)."""
+    sub-quadratic fuzzy-dedup path. Shingles and bands are cached:
+    shingles feed multiple plan branches, and bands feeds both sides of
+    the bucket self-join (differing projections defeat ReusedExchange,
+    so uncached the minhash aggregation would run twice)."""
     docs = table(spark, sf_dir, "documents")
     sh = dedup.word_shingles(docs).cache()
     sigs = dedup.minhash_signatures(sh, num_hashes=8)
     bands = dedup.lsh_bands(sigs, rows_per_band=2).cache()
-    cand = dedup.lsh_candidate_pairs(bands).cache()
+    cand = dedup.lsh_candidate_pairs(bands)
     verified = dedup.jaccard_pairs(sh, candidates=cand, min_jaccard=0.5)
     return verified.select("id_a", "id_b", "jaccard").orderBy("id_a", "id_b")
 
@@ -994,50 +993,26 @@ def weighted_jaccard_pairs(spark, sf_dir):
     # integer threshold as the oracle's candidate CTE
     # (10·I ≥ 3·union) — no float ≥ 0.3 gate, and the prefix-filter
     # path engages under df² boilerplate skew.
-    cand = (
-        dedup.similarity_pairs(sh, 3, 10)
-        .select("id_a", "id_b")
-        .localCheckpoint(eager=True)
-    )
-    # Verify cost scales with the candidate set (LSH-verify economics),
-    # so tokenize ONLY candidate docs — the semi-join runs before the
-    # explode, and the per-doc total Σc comes from the same counts
-    # (Σc over a doc's count map = its token count), so the old
-    # full-corpus tokenize+count pass and its cache are gone entirely.
-    cand_ids = dedup.pair_endpoints(cand)
-    tok = docs.join(
-        cand_ids.withColumnRenamed("id", "doc_id"), "doc_id", "left_semi"
-    ).select(
-        F.col("doc_id").alias("id"),
-        F.explode(F.split(dedup.normalize_text(F.col("text")), " ")).alias("tok"),
-    )
-    # Docvec verify (the prefix_filter_pairs merge-verify shape): each
-    # candidate doc's token→count map in ONE row, the pair frame joins
-    # two doc-keyed relations, and Σmin(cₐ,c_b) is a row-local
-    # map_zip_with — no token-level rows ever enter the pair join's
-    # shuffle (guide §2.3: shuffle keys and per-doc aggregates, not
-    # token payloads).
-    docvecs = (
-        tok.groupBy("id", "tok")
-        .agg(F.count("*").alias("c"))
-        .groupBy("id")
-        .agg(
-            F.map_from_entries(F.collect_list(F.struct("tok", "c"))).alias("m"),
-            F.sum("c").alias("tot"),
+    cand = dedup.similarity_pairs(sh, 3, 10)
+
+    def token_counts(d):
+        # the token→count map and its total Σc (= the doc's token count)
+        tok = d.select(
+            "id",
+            F.explode(F.split(dedup.normalize_text(F.col("text")), " ")).alias("tok"),
         )
-    ).cache()  # referenced by BOTH pair-join sides — without the cache
-    # the candidate-doc tokenize+count subtree (and its docs scan)
-    # would run once per side
-    out = cand.join(
-        docvecs.select(
-            F.col("id").alias("id_a"), F.col("m").alias("ma"), F.col("tot").alias("ta")
-        ),
-        "id_a",
-    ).join(
-        docvecs.select(
-            F.col("id").alias("id_b"), F.col("m").alias("mb"), F.col("tot").alias("tb")
-        ),
-        "id_b",
+        return (
+            tok.groupBy("id", "tok")
+            .agg(F.count("*").alias("c"))
+            .groupBy("id")
+            .agg(
+                F.map_from_entries(F.collect_list(F.struct("tok", "c"))).alias("m"),
+                F.sum("c").alias("t"),
+            )
+        )
+
+    out = dedup.docvec_pairs(
+        cand, docs.select(F.col("doc_id").alias("id"), "text"), token_counts
     )
     min_sum = F.aggregate(
         F.map_values(

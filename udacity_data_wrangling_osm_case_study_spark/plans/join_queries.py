@@ -2183,7 +2183,7 @@ def part_price_smoothing(spark, sf_dir):
             F.col("p_partkey").alias("v"),
             F.round(F.col("p_retailprice") * 100).cast("long").alias("h"),
         )
-        .localCheckpoint(eager=False)
+        .transform(snap_lazy)
     )
     h2 = graph.feature_propagation(sym, h0, n_iter=2)
     return (

@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from udacity_data_wrangling_osm_case_study_spark.operators.iterative import snap_lazy
 from udacity_data_wrangling_osm_case_study_spark.plans.registry import register, table
 
 
@@ -1902,7 +1903,7 @@ def event_markov_stationary(spark, sf_dir):
     p = (
         pairs.join(F.broadcast(tot), "a")
         .select("a", "b", F.expr("n * 1000000 DIV t").alias("pm"))
-        .localCheckpoint(eager=False)
+        .transform(snap_lazy)
     )
     pi = p.select("a").distinct().select(
         F.col("a").alias("s"), F.lit(1_000_000).cast("long").alias("r")

@@ -14,7 +14,8 @@ one ``query_mix`` pass about 150, so at 100 every repeated op evicted
 its own classes and compiled all of them again. The cache is sized at
 :data:`CODEGEN_CACHE_ENTRIES`, so a repeated op compiles almost none.
 
-On the test rig this runs ``local[32]``; on a real cluster the same
+Locally this runs ``local[<usable cores>]`` (what ``nproc`` prints)
+unless ``SPARK_GRAFT_CPUS`` says otherwise; on a real cluster the same
 declarative plans scale out — nothing here hand-schedules execution.
 """
 
@@ -47,7 +48,7 @@ def get_spark(
     shuffle partitions once — round-9 notes). In-process callers that
     need the session should receive it, not re-create it.
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
     master = master or os.environ.get("SPARK_MASTER", f"local[{cpus}]")
     shuffle = str(
         shuffle_partitions

@@ -26,8 +26,3 @@ def read_output_table(spark: SparkSession, out_dir: str, name: str) -> DataFrame
         .csv(f"{out_dir}/{name}")
     )
 
-
-def register_output_views(spark: SparkSession, out_dir: str) -> None:
-    """Register all six output tables as SQL views from a CSV export."""
-    for name in TABLE_SCHEMAS:
-        read_output_table(spark, out_dir, name).createOrReplaceTempView(name)

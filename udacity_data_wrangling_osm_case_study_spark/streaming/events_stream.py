@@ -561,86 +561,3 @@ def debounce_user_events(events: DataFrame) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-
-
-TIMEOUT_SESSION_SCHEMA = (
-    "user_id bigint, session_start timestamp, session_end timestamp,"
-    " n_events bigint"
-)
-TIMEOUT_SESSION_STATE = "start_us long, end_us long, n long"
-
-
-def timeout_sessions(
-    events: DataFrame, gap_minutes: int = 30, watermark: str = "0 seconds"
-) -> DataFrame:
-    """Sessionization as a custom stateful operator with EVENT-TIME
-    TIMEOUT — the state-EXPIRY half of the arbitrary-state API the
-    other stateful operators here don't exercise: a user's open
-    session lives in the state store and is emitted ONLY when the
-    watermark passes ``session_end + gap`` (GroupStateTimeout.
-    EventTimeTimeout → ``state.hasTimedOut``), i.e. when no on-time
-    event can extend it anymore. Within a micro-batch, events extend
-    the open session when they fall inside the gap or roll it over
-    (emitting the closed one immediately). State per user is three
-    longs — bounded regardless of event volume; the watermark bounds
-    how long it can linger.
-
-    Contrast with ``session_window_stats`` (the built-in
-    ``session_window`` aggregation): same semantics, but here the
-    session is inspectable, mergeable state — the shape a pipeline
-    needs when sessions must carry custom payloads (funnels, carts)
-    that a windowed agg can't express. Emitted rows are final (append
-    semantics). NB: sessions still open when a bounded source drains
-    are never emitted — exactly the streaming contract (no watermark
-    past them); tests advance the watermark with a sentinel event.
-    """
-    gap_us = gap_minutes * 60 * 1_000_000
-
-    def update(
-        key, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        def emit(start_us: int, end_us: int, n: int) -> pd.DataFrame:
-            return pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "session_start": [pd.Timestamp(start_us, unit="us")],
-                    "session_end": [pd.Timestamp(end_us, unit="us")],
-                    "n_events": [n],
-                }
-            )
-
-        if state.hasTimedOut:
-            start_us, end_us, n = state.get
-            state.remove()
-            yield emit(start_us, end_us, n)
-            return
-        cur = state.get if state.exists else None
-        # Arrow hands the group's rows in storage chunks, not time
-        # order — gather the whole batch before the sweep.
-        all_us: list[int] = []
-        for pdf in pdfs:
-            if not pdf.empty:
-                all_us.extend(int(t) // 1000 for t in pdf["ts"].astype("int64"))
-        for t in sorted(all_us):
-            if cur is None:
-                cur = (t, t, 1)
-            elif t - cur[1] <= gap_us:
-                cur = (cur[0], max(cur[1], t), cur[2] + 1)
-            else:
-                yield emit(*cur)
-                cur = (t, t, 1)
-        if cur is not None:
-            state.update(cur)
-            state.setTimeoutTimestamp((cur[1] + gap_us) // 1000)
-
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            update,
-            outputStructType=TIMEOUT_SESSION_SCHEMA,
-            stateStructType=TIMEOUT_SESSION_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
-    )
