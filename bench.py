@@ -23,205 +23,13 @@ sys.path.insert(0, _REPO)
 from udacity_data_wrangling_osm_case_study_spark.plans import registry
 from udacity_data_wrangling_osm_case_study_spark.session import get_spark
 
-HEADLINE = [
-    "pricing_summary",
-    "shipping_priority",
-    "supplier_nation_volume",
-    "revenue_rollup",
-    "order_lineitem_balance",
-    "region_rollup",
-    "top_parts_by_revenue",
-    "top_contributors",
-    "orders_column_profile",
-    "user_sessions",
-    "event_type_tumbling_5min",
-    "event_spikes",
-    "pmi_collocations",
-    "phone_canonicalization",
-    "exact_dedup_prefix_groups",
-    "chunk_dedup_docs",
-    "source_overlap_matrix",
-    "duplicated_span_share",
-    "ngram_jaccard_pairs",
-    "prefix_filter_jaccard_pairs",
-    "doc_fingerprints",
-    "fingerprint_near_pairs",
-    "minhash_lsh_dupes",
-    "simhash_clusters",
-    "simhash_near_pairs",
-    # embedding_near_dupes (the per-pair expression fold) is the
-    # strict-oracle variant, not a recommended pipeline — the Arrow
-    # blockwise-matmul path below is the production shape at scale and
-    # is what the headline measures.
-    "embedding_near_dupes_arrow",
-    "semantic_dedup",
-    "benchmark_contamination",
-    "incremental_dedup",
-    "knn_bruteforce",
-    "knn_ivf",
-    "knn_srp_lsh",
-    "knn_pq_adc",
-    "kmeans_step",
-    "pq_codes",
-    "sq_codes",
-    "cms_heavy_hitters",
-    "fuzzy_typo_repair",
-    "customer_geo_pairs",
-    "part_pagerank",
-    "classifier_auc",
-    # dedup_survivors (iterative connected components) is measured by
-    # its oracle run, like dedup_clusters — the per-iteration driver
-    # overhead at tiny scale says nothing about the 100 TB posture.
-    "doc_profiles",
-    "quality_classifier",
-    "unigram_surprisal",
-    "bigram_surprisal",
-    "hot_ngrams",
-    "subword_vocab",
-    "repetition_quality",
-    "pii_term_scrub",
-    "top_words",
-    "purchase_click_attribution",
-    "error_followup_pairs",
-    "event_value_resample_locf",
-    "event_value_ewma",
-    "event_value_cusum",
-    "event_value_trend",
-    "keyword_search_topk",
-    "event_value_time_weighted_avg",
-    "sorted_neighborhood_pairs",
-    "event_value_median_histogram",
-    "partkey_skew_report",
-    "multitouch_attribution",
-    "source_quantile_normalize",
-    "source_slot_allocation",
-    "phrase_search",
-    "part_similarity_topk",
-    "quantity_weighted_median_price",
-    "event_hourly_seasonality",
-    "bpe_encode_fixed",
-    "customers_asof_version",
-    "order_price_tiers",
-    "part_2hop_reach",
-    "embedding_covariance",
-    "session_peak_concurrency",
-    "event_transition_matrix",
-    "event_value_mad_outliers",
-    "part_pareto_frontier",
-    "stratified_doc_sample",
-    "train_val_test_split",
-    "training_order_shuffle",
-    "sequence_packing",
-    "per_source_cap",
-    "source_temperature_mix",
-    "corpus_curation_funnel",
-    "training_batch_manifest",
-    "event_value_resample_interp",
-    "balance_band_pairs",
-    "lineitem_bucket_checksums",
-    "media_near_dupes",
-    "record_linkage_matches",
-    "containment_dupes",
-    "ann_rank_overlap_rbo",
-    "nation_revenue_share",
-    "bloom_prefilter_contamination",
-    "leakage_safe_split",
-    "hard_negative_mining",
-    "mlm_masked_docs",
-    "next_event_training_pairs",
-    "cumulative_unique_users",
-    "recency_weighted_user_value",
-    "source_token_l1_drift",
-    "event_value_ks_test",
-    "rolling_active_users_exact",
-    "telemetry_debounce",
-    "theilsen_user_trend",
-    "loo_target_encoding",
-    "k_anonymity_audit",
-    "corpus_release_manifest",
-    "audience_overlap_bitmap",
-    "value_log2_histogram",
-    "monotonic_counter_repair",
-    "embedding_standardize",
-    "source_distinctive_terms",
-    "media_shared_frames",
-    "annotator_agreement_kappa",
-    "weighted_jaccard_pairs",
-    "user_event_diversity",
-    "near_dup_rate_by_source",
-    "order_backlog_timeline",
-    "supplier_lead_time_median",
-    "customer_rfm_segments",
-    "cdc_apply_snapshot",
-    "orders_status_priority_cube",
-    "dsir_importance_weights",
-    "embedding_random_projection",
-    "hybrid_search_rrf",
-    "rake_keyphrases",
-    "salted_priority_revenue",
-    "cogrouped_entity_profile",
-    "entity_profile_native",
-    "negative_sampling_pairs",
-    "user_activity_gaps",
-    "feature_hash_crosses",
-    "l_diversity_report",
-    "part_random_walk_pairs",
-    "weighted_doc_sample_aes",
-    "part_clustering_coeff",
-    "kmv_distinct_sketch",
-    "t_closeness_report",
-    "part_communities",
-    "benford_first_digit_audit",
-    "part_kcore",
-    "part_bfs_hops",
-    "event_type_hour_chisq",
-    "mannwhitney_click_view",
-    "bootstrap_mean_ci",
-    "source_centroid_cosine",
-    "customer_spend_gini",
-    "daily_count_autocorr",
-    "event_markov_stationary",
-    "event_bigram_entropy",
-    "nation_market_share",
-    "part_price_smoothing",
-    "part_cheapest_path",
-    "sole_late_suppliers",
-    "dp_event_type_counts",
-    "substring_span_coverage",
-    "substring_dedup_removal",
-    "top_boilerplate_grams",
-    "incremental_substring_coverage",
-    "customer_order_counts_dist",
-    "small_qty_part_revenue",
-    "large_quantity_orders",
-    "idle_rich_customers",
-    "late_order_priority_check",
-    "top_quarter_supplier",
-    "disjunctive_promo_revenue",
-    "conversion_funnel_ordered",
-    "weekly_retention_cohorts",
-    "discount_revenue_forecast",
-    "bilateral_shipping_volume",
-    "returned_item_customers",
-    "late_shipment_priority_split",
-    "promo_revenue_share_monthly",
-    "supplier_count_by_part_attr",
-    "substring_threshold_profile",
-    "boilerplate_share_by_source",
-    "min_cost_supplier",
-    "nation_profit_rollup",
-    "important_stock_parts",
-    "promotable_part_suppliers",
-]
-
-
 def _excl(reason: str, *names: str) -> dict[str, str]:
     return {n: reason for n in names}
 
 
-# Every registered query is either in HEADLINE or named here with a
-# reason — tests/test_plans.py asserts the partition is exact, so a new
-# query can't silently skip the bench.
+# Every registered query not named here is timed (``bench_names``), so a
+# new query joins the bench by registering; tests/test_plans.py asserts
+# every name here is registered and carries a reason.
 BENCH_EXCLUDED: dict[str, str] = {
     **_excl(
         "warm-up query — always runs first, outside the timed set",
@@ -320,6 +128,11 @@ BENCH_EXCLUDED: dict[str, str] = {
         "json_props_udtf",
     ),
 }
+
+
+def bench_names(queries) -> list[str]:
+    """The timed queries: every registered name not in BENCH_EXCLUDED."""
+    return sorted(n for n in queries if n not in BENCH_EXCLUDED)
 
 
 def time_query(run, on_discord=lambda: None) -> dict:
@@ -434,7 +247,7 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     query_runs: dict[str, dict] = {}
-    for name in HEADLINE:
+    for name in bench_names(queries):
         t = time_query(lambda: run(name), on_discord=spark._jvm.System.gc)
         query_runs[name] = {"runs": [round(r, 3) for r in t["runs"]],
                             "concordant": t["concordant"]}

@@ -85,7 +85,7 @@ def test_persisted_tables_match_oracle(batch, extract):
 
 def test_staged_tables_equal_persisted(spark, batch, extract):
     staged = pipeline.build_tables(
-        spark, extract["osm"], extract["psi"], persist=False,
+        spark, extract["osm"], extract["psi"],
         stage_dir=str(extract["dir"] / "stage"),
     )
     _check_oracle(staged, extract["oracle"])

@@ -1416,17 +1416,6 @@ def test_bfs_hops_min_distance_on_diamond_with_shortcut(spark):
     }
 
 
-def test_bfs_hops_rejects_bad_partition_count(spark):
-    import pytest as _pytest
-
-    from udacity_data_wrangling_osm_case_study_spark.operators import graph
-
-    edges = spark.createDataFrame([(1, 2)], ["src", "dst"])
-    seeds = spark.createDataFrame([(1,)], ["seed"])
-    with _pytest.raises(ValueError):
-        graph.bfs_hops(edges, seeds, n_hops=1, edge_partitions=0)
-
-
 def test_histogram_median_matches_sorted_definition(spark):
     import random
 
@@ -1914,39 +1903,35 @@ def test_weighted_bottom_k_aes_deterministic(spark):
 def test_random_walks_partition_validation_and_reliable_checkpoint(
     spark, tmp_path
 ):
-    """edge_partitions=0 is an error (not silently replaced by the
-    default); the reliable-checkpoint escape hatch for executor-churn
-    clusters yields the identical corpus as the local-checkpoint path."""
-    import pytest as _pytest
-
+    """The corpus does not depend on the input partitioning, and the
+    reliable-checkpoint mode for executor-churn clusters (a session
+    checkpoint directory) yields the identical corpus as the
+    local-checkpoint path."""
     from udacity_data_wrangling_osm_case_study_spark.operators import graph
 
     edges = [(1, 2), (2, 1), (2, 3), (3, 2), (3, 1), (1, 3)]
     df = spark.createDataFrame(edges, ["src", "dst"])
-    with _pytest.raises(ValueError, match="edge_partitions"):
-        graph.random_walks(df, n_steps=2, edge_partitions=0)
 
-    local = {
-        (r.anchor, r.step): r.context
-        for r in graph.random_walks(df, n_steps=2).collect()
-    }
-    # random_walks sets the SESSION-WIDE checkpoint dir when none is
-    # configured (documented); since round 10 an app-level dir flips
-    # EVERY superstep operator to reliable snapshots (iterative.py
-    # resolution rule 4), so restore the shared fixture session's
-    # default or later tests inherit reliable mode.
-    had_dir = spark.sparkContext.getCheckpointDir()
-    try:
-        reliable = {
+    def corpus(frame):
+        return {
             (r.anchor, r.step): r.context
-            for r in graph.random_walks(
-                df, n_steps=2,
-                reliable_checkpoint_dir=str(tmp_path / "ckpt"),
-            ).collect()
+            for r in graph.random_walks(frame, n_steps=2).collect()
         }
+
+    had_dir = spark.sparkContext.getCheckpointDir()
+    local = corpus(df)
+    assert corpus(df.repartition(3)) == local
+    # The checkpoint directory is session-wide and flips EVERY
+    # superstep operator to reliable snapshots, so restore the shared
+    # fixture session's setting or later tests inherit reliable mode.
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
+    try:
+        reliable = corpus(df)
     finally:
         if had_dir is None:
             spark.sparkContext._jsc.sc().setCheckpointDir(None)
+        else:
+            spark.sparkContext.setCheckpointDir(had_dir)
     assert local == reliable and len(local) == 3 * 2
 
 
@@ -2010,15 +1995,9 @@ def test_label_propagation_two_triangles(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 3, 5: 3, 6: 3}
     got2 = {
         r.v: r.lbl
-        for r in graph.label_propagation(
-            df.repartition(7), n_iter=3, edge_partitions=3
-        ).collect()
+        for r in graph.label_propagation(df.repartition(7), n_iter=3).collect()
     }
     assert got2 == got
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="edge_partitions"):
-        graph.label_propagation(df, n_iter=1, edge_partitions=0)
 
 
 def test_kcore_peel_hand_graph(spark):
@@ -2035,9 +2014,7 @@ def test_kcore_peel_hand_graph(spark):
     assert got == {1: 2, 2: 2, 3: 2}
     got2 = {
         r.v: r.core_deg
-        for r in graph.kcore_peel(
-            df.repartition(5), k=2, n_rounds=3, edge_partitions=2
-        ).collect()
+        for r in graph.kcore_peel(df.repartition(5), k=2, n_rounds=3).collect()
     }
     assert got2 == got
     # k higher than any degree empties the graph

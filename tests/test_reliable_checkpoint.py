@@ -13,7 +13,8 @@ each superstep snapshot — and prove:
 
 - in the default local mode the loss is lethal (the witness that the
   simulation reproduces the r9 failure mode, not a no-op);
-- with ``spark.graft.reliableCheckpointDir`` set, the same operators
+- with a session checkpoint directory set (Spark's
+  ``setCheckpointDir``, the one switch), the same operators
   complete under the same kills AND return the same answers (each
   round's snapshot re-reads reliable checkpoint files).
 """
@@ -30,8 +31,6 @@ from udacity_data_wrangling_osm_case_study_spark.operators import dedup, graph
 from udacity_data_wrangling_osm_case_study_spark.operators import iterative
 from udacity_data_wrangling_osm_case_study_spark.plans import registry
 
-CONF = iterative.CONF_KEY
-
 
 def _kill_all_blocks(spark):
     """Simulate executor block loss: drop the SQL cache and unpersist
@@ -44,35 +43,34 @@ def _kill_all_blocks(spark):
 
 
 class _KillingSnapshots:
-    """Wrap iterative.snapshotter so every snapshot call first kills
-    all stored blocks — the worst-case schedule (loss before every
+    """Wrap iterative._snapshot so every snapshot call first kills all
+    stored blocks — the worst-case schedule (loss before every
     superstep materialization)."""
 
     def __init__(self, spark):
         self.spark = spark
         self.kills = 0
-        self._real = iterative.snapshotter
+        self._real = iterative._snapshot
 
-    def __call__(self, sess, explicit_dir=None, eager=False):
-        snap = self._real(sess, explicit_dir, eager=eager)
+    def __call__(self, df, eager):
+        _kill_all_blocks(self.spark)
+        self.kills += 1
+        return self._real(df, eager)
 
-        def killing_snap(df):
-            _kill_all_blocks(self.spark)
-            self.kills += 1
-            return snap(df)
 
-        return killing_snap
+def _clear_checkpoint_dir(spark):
+    # setCheckpointDir(null) clears it (Option(null) = None)
+    spark.sparkContext._jsc.sc().setCheckpointDir(None)
 
 
 @pytest.fixture(autouse=True)
 def _pristine_checkpoint_state(spark):
     """These tests assert against the DEFAULT snapshot mode, so any
-    session-wide checkpoint dir another test left behind (random_walks
-    sets one when asked for reliable mode) must be cleared first and
-    restored after — resolution rule 4 would otherwise flip the module
-    to reliable mode by accident."""
+    session-wide checkpoint dir another test left behind must be
+    cleared first and restored after — it would otherwise flip every
+    snapshot to reliable mode by accident."""
     had = spark.sparkContext.getCheckpointDir()
-    spark.sparkContext._jsc.sc().setCheckpointDir(None)
+    _clear_checkpoint_dir(spark)
     try:
         yield
     finally:
@@ -83,15 +81,11 @@ def _pristine_checkpoint_state(spark):
 def reliable(spark, tmp_path):
     """Reliable-checkpoint mode for the duration of one test, fully
     undone after (the session fixture is shared)."""
-    spark.conf.set(CONF, str(tmp_path / "ckpt"))
-    had_dir = spark.sparkContext.getCheckpointDir()
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt"))
     try:
         yield
     finally:
-        spark.conf.unset(CONF)
-        if had_dir is None:
-            # setCheckpointDir(null) clears it (Option(null) = None)
-            spark.sparkContext._jsc.sc().setCheckpointDir(None)
+        _clear_checkpoint_dir(spark)
 
 
 def _pairs(spark):
@@ -108,9 +102,9 @@ def test_local_mode_block_kill_is_lethal(spark, monkeypatch):
     """Witness that the kill harness reproduces the r9 failure mode:
     in default local-checkpoint mode, losing blocks mid-iteration
     makes connected_components unrecoverable."""
-    assert iterative.reliable_dir(spark) is None  # default mode
+    assert spark.sparkContext.getCheckpointDir() is None  # default mode
     killer = _KillingSnapshots(spark)
-    monkeypatch.setattr(iterative, "snapshotter", killer)
+    monkeypatch.setattr(iterative, "_snapshot", killer)
     with pytest.raises(Exception) as e:
         dedup.connected_components(_pairs(spark)).collect()
     assert "heckpoint" in str(e.value) or "lock" in str(e.value)
@@ -121,7 +115,7 @@ def test_reliable_mode_survives_block_kill_mid_iteration(
     spark, monkeypatch, reliable
 ):
     killer = _KillingSnapshots(spark)
-    monkeypatch.setattr(iterative, "snapshotter", killer)
+    monkeypatch.setattr(iterative, "_snapshot", killer)
     got = {
         r.id: r.comp
         for r in dedup.connected_components(_pairs(spark)).collect()
@@ -150,10 +144,9 @@ def test_reliable_mode_graph_ops_survive_and_match_local(
         r.v: r.rank_micro for r in graph.pagerank(edges, n_iter=3).collect()
     }
 
-    spark.conf.set(CONF, str(tmp_path / "ckpt2"))
-    had_dir = spark.sparkContext.getCheckpointDir()
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "ckpt2"))
     killer = _KillingSnapshots(spark)
-    monkeypatch.setattr(graph, "snapshotter", killer)
+    monkeypatch.setattr(iterative, "_snapshot", killer)
     try:
         got_bfs = sorted(
             (r.seed, r.v, r.hop)
@@ -164,9 +157,7 @@ def test_reliable_mode_graph_ops_survive_and_match_local(
             for r in graph.pagerank(edges, n_iter=3).collect()
         }
     finally:
-        spark.conf.unset(CONF)
-        if had_dir is None:
-            spark.sparkContext._jsc.sc().setCheckpointDir(None)
+        _clear_checkpoint_dir(spark)
     assert got_bfs == want_bfs
     assert got_pr == want_pr
     assert killer.kills >= 4
@@ -184,32 +175,47 @@ def test_post_hoc_block_loss_rereads_checkpoint_files(spark, reliable):
     assert first == second == EXPECTED_COMPS
 
 
-class TestResolutionOrder:
-    def test_default_is_local(self, spark):
-        assert iterative.reliable_dir(spark) is None
+def test_snapshot_mode_follows_checkpoint_dir(spark, tmp_path):
+    """The session's checkpoint directory is the one switch: without
+    it a snapshot keeps executor-local blocks and writes no file; with
+    it the same call writes checkpoint files under that directory."""
 
-    def test_explicit_beats_conf(self, spark, tmp_path):
-        spark.conf.set(CONF, "/conf/dir")
-        try:
-            assert iterative.reliable_dir(spark, "/explicit") == "/explicit"
-            assert iterative.reliable_dir(spark) == "/conf/dir"
-        finally:
-            spark.conf.unset(CONF)
+    def files(root):
+        return [f for _, _, fs in os.walk(root) for f in fs if f.startswith("part-")]
 
-    def test_env_var_enables(self, spark, monkeypatch):
-        monkeypatch.setenv(iterative.ENV_KEY, "/env/dir")
-        assert iterative.reliable_dir(spark) == "/env/dir"
+    frame = spark.range(0, 100, 1, 2)
+    assert spark.sparkContext.getCheckpointDir() is None
+    assert iterative.snap_eager(frame).count() == 100
+    assert iterative.snap_lazy(frame).count() == 100
+    assert not files(tmp_path)
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "eager"))
+    try:
+        assert iterative.snap_eager(frame).count() == 100
+        assert files(tmp_path / "eager")
+        spark.sparkContext.setCheckpointDir(str(tmp_path / "lazy"))
+        lazy = iterative.snap_lazy(frame)
+        assert not files(tmp_path / "lazy")  # no job at call time
+        assert lazy.count() == 100
+        assert files(tmp_path / "lazy")
+    finally:
+        _clear_checkpoint_dir(spark)
 
-    def test_app_checkpoint_dir_is_honored(self, spark, tmp_path):
-        had = spark.sparkContext.getCheckpointDir()
-        assert had is None
-        spark.sparkContext.setCheckpointDir(str(tmp_path / "appdir"))
-        try:
-            assert str(iterative.reliable_dir(spark)).endswith(
-                str(tmp_path.name) + "/appdir"
-            ) or "appdir" in str(iterative.reliable_dir(spark))
-        finally:
-            spark.sparkContext._jsc.sc().setCheckpointDir(None)
+
+def test_env_var_sets_spark_checkpoint_dir(monkeypatch):
+    """``SPARK_GRAFT_CHECKPOINT_DIR`` reaches Spark as
+    ``spark.checkpoint.dir`` at session build, and nothing sets it
+    without the variable."""
+    from pyspark.sql import SparkSession
+
+    from udacity_data_wrangling_osm_case_study_spark import session
+
+    monkeypatch.setattr(
+        SparkSession.Builder, "getOrCreate", lambda self: dict(self._options)
+    )
+    monkeypatch.delenv("SPARK_GRAFT_CHECKPOINT_DIR", raising=False)
+    assert "spark.checkpoint.dir" not in session.get_spark()
+    monkeypatch.setenv("SPARK_GRAFT_CHECKPOINT_DIR", "/ckpt")
+    assert session.get_spark()["spark.checkpoint.dir"] == "/ckpt"
 
 
 def test_checkpoint_files_reclaimed_in_long_sessions(spark, tmp_path):
@@ -264,9 +270,9 @@ def test_checkpoint_files_reclaimed_in_long_sessions(spark, tmp_path):
     finally:
         if prior is None:
             # clear, don't just repoint: a lingering dir flips every
-            # later superstep operator to reliable mode (rule 4) under
+            # later superstep operator to reliable mode under
             # full-suite ordering — the module's established restore
-            spark.sparkContext._jsc.sc().setCheckpointDir(None)
+            _clear_checkpoint_dir(spark)
         else:
             spark.sparkContext.setCheckpointDir(prior)
 
@@ -285,14 +291,13 @@ def test_query_lineage_cuts_write_checkpoint_files(
     query = registry.load_all()[0][name]
     want = sorted(map(tuple, query(spark, SF_DIR).collect()))
     ckpt = tmp_path / "ckpt"
-    spark.conf.set(CONF, str(ckpt))
+    spark.sparkContext.setCheckpointDir(str(ckpt))
     killer = _KillingSnapshots(spark)
-    monkeypatch.setattr(iterative, "snapshotter", killer)
-    monkeypatch.setattr(graph, "snapshotter", killer)
+    monkeypatch.setattr(iterative, "_snapshot", killer)
     try:
         got = sorted(map(tuple, query(spark, SF_DIR).collect()))
     finally:
-        spark.conf.unset(CONF)
+        _clear_checkpoint_dir(spark)
     files = [f for _, _, fs in os.walk(ckpt) for f in fs if f.startswith("part-")]
     assert got == want
     assert files, f"{name}: no checkpoint files under {ckpt}"

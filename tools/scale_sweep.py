@@ -1,5 +1,5 @@
-"""One-pass completion sweep of the bench HEADLINE queries at a
-replicated scale (see tools/replicate_sf.py).
+"""One-pass completion sweep of the benched queries
+(``bench.bench_names``) at a replicated scale (see tools/replicate_sf.py).
 
 This is NOT an oracle comparison — at 10x the bench SF the point is
 "does the plan survive the next decade of volume": no overflow-nulled
@@ -73,7 +73,7 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/tmp/spark_graft_sf1x10"
     out_path = sys.argv[2] if len(sys.argv) > 2 else "SCALE_SWEEP.json"
     queries, _ = registry.load_all()
-    names = sys.argv[3:] or [n for n in bench.HEADLINE if n in queries]
+    names = sys.argv[3:] or bench.bench_names(queries)
 
     spark = get_spark(
         app_name="scale_sweep",
@@ -121,9 +121,9 @@ def main() -> int:
             traceback.print_exc(limit=2)
         finally:
             spark.catalog.clearCache()
-            # Reliable-checkpoint mode (SPARK_GRAFT_CHECKPOINT_DIR —
-            # how a long sweep session survives block shedding, see
-            # operators/iterative.py): purge the finished query's
+            # Reliable-checkpoint mode (a checkpoint directory, e.g.
+            # from SPARK_GRAFT_CHECKPOINT_DIR — how a long sweep session
+            # survives block shedding, see operators/iterative.py): purge the finished query's
             # checkpoint files so 30+ heavy queries don't accumulate
             # GBs of dead snapshots (the ContextCleaner only reclaims
             # them under cleanCheckpoints=true, and only on GC).

@@ -893,7 +893,6 @@ def embedding_near_duplicates(
 def connected_components(
     pairs: DataFrame,
     max_iter: int = 20,
-    reliable_checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Transitive closure of the duplicate-pair graph: (id, comp) where
     comp is the minimum id reachable from id — the canonical keeper of
@@ -916,28 +915,14 @@ def connected_components(
     label data never leaves the executors. ``max_iter`` bounds runaway
     graphs. On clusters with executor churn (or long sessions under
     block-shedding memory pressure — the round-9 30x sweep's failure
-    mode), pass ``reliable_checkpoint_dir`` or set the session conf
-    ``spark.graft.reliableCheckpointDir`` so each round snapshots to
-    reliable storage instead of executor-local blocks.
+    mode), give the session a checkpoint directory
+    (``spark.checkpoint.dir``) so each round snapshots to reliable
+    storage instead of executor-local blocks.
     """
     from udacity_data_wrangling_osm_case_study_spark.operators.graph import (
         symmetrize,
     )
-    from udacity_data_wrangling_osm_case_study_spark.operators.iterative import snapshotter
 
-    snap_round = snapshotter(
-        pairs.sparkSession, reliable_checkpoint_dir, eager=True
-    )
-    # Round frames snapshot LAZILY: the changed-count action below
-    # materializes the snapshot AND reads the count in ONE job, where
-    # the old eager-snapshot-then-count shape paid two driver jobs per
-    # round — pure fixed overhead on small graphs (measured 3.1 s for
-    # a 256-edge run at 32 shuffle partitions). The recovery contract
-    # is unchanged: the checkpoint still lands at the same plan point,
-    # written when the count job first computes the frame.
-    snap_round_lazy = snapshotter(
-        pairs.sparkSession, reliable_checkpoint_dir, eager=False
-    )
     edges = pairs.select("id_a", "id_b")
     # The symmetric edge frame is probed every round — materialize it
     # once with truncated lineage instead of re-shuffling the distinct.
@@ -953,7 +938,7 @@ def connected_components(
     sym = (
         symmetrize(edges, "id_a", "id_b")
         .distinct()
-        .transform(snap_round)
+        .transform(snap_eager)
     )
     # Fused first hop (round 14): initialize comp(id) = min(id, min
     # neighbor) instead of comp(id) = id. The identity init spent the
@@ -969,7 +954,7 @@ def connected_components(
         sym.groupBy("id_a")
         .agg(F.least(F.min("id_b"), F.col("id_a")).alias("comp"))
         .withColumnRenamed("id_a", "id")
-        .transform(snap_round)
+        .transform(snap_eager)
     )
     for _ in range(max_iter):
         neighbor_min = (
@@ -992,6 +977,10 @@ def connected_components(
         parents = stepped.select(
             F.col("id").alias("pid"), F.col("hop").alias("pcomp")
         )
+        # Lazy: the changed-count action below materializes the snapshot
+        # and reads the count in one job; an eager snapshot would add a
+        # second driver job per round (3.1 s measured for a 256-edge run
+        # at 32 shuffle partitions).
         updated = (
             stepped.join(parents, stepped.hop == parents.pid, "left")
             .select(
@@ -999,7 +988,7 @@ def connected_components(
                 F.coalesce(F.col("pcomp"), F.col("hop")).alias("new_comp"),
                 "old_comp",
             )
-            .transform(snap_round_lazy)
+            .transform(snap_lazy)
         )
         changed = updated.filter(F.col("new_comp") != F.col("old_comp")).count()
         labels = updated.select("id", F.col("new_comp").alias("comp"))

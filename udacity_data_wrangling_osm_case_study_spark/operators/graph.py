@@ -32,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from udacity_data_wrangling_osm_case_study_spark.operators.iterative import snapshotter
+from udacity_data_wrangling_osm_case_study_spark.operators.iterative import snap_lazy
 
 
 def symmetrize(
@@ -62,33 +62,19 @@ def symmetrize(
     )
 
 
-def _edge_partition_count(spark, edge_partitions: int | None) -> int:
-    """Resolve the edge-frame partition count shared by every iterative
-    operator here: defaultParallelism/4 when unset (supersteps are short
-    scan+partial-agg tasks, so fewer, fatter partitions beat task-launch
-    overhead — pass ``edge_partitions`` explicitly for graphs whose edge
-    count warrants more). The spark.conf lookup keeps this
-    Spark-Connect-compatible (no sparkContext there); an explicit value
-    is validated, never silently replaced (``edge_partitions=0`` is an
-    error, not "use the default")."""
-    if edge_partitions is None:
-        par = spark.conf.get("spark.default.parallelism", None)
-        if par is None:
-            try:
-                par = spark.sparkContext.defaultParallelism
-            except Exception:  # Spark Connect: no sparkContext
-                par = 8
-        return max(2, int(par) // 4)
-    if edge_partitions < 1:
-        raise ValueError("edge_partitions must be >= 1")
-    return edge_partitions
+def _edge_partition_count(spark) -> int:
+    """The edge-frame partition count shared by every iterative
+    operator here: a quarter of the default parallelism (supersteps are
+    short scan+partial-agg tasks, so fewer, fatter partitions beat
+    task-launch overhead). Spark's ``spark.default.parallelism`` sets
+    it for the whole session."""
+    return max(2, spark.sparkContext.defaultParallelism // 4)
 
 
 def copurchase_pairs(
     df: DataFrame,
     group_col: str,
     item_col: str,
-    max_items_per_group: int | None = None,
 ) -> DataFrame:
     """Co-occurrence pair stream: for every group, all (a, b) item
     pairs with a < b — one output row per (group, pair). The edge
@@ -100,22 +86,10 @@ def copurchase_pairs(
     shuffle, map-side combinable) and expands the pairs ROW-LOCALLY
     with nested higher-order transforms — the k² work happens in
     codegen on one row, never through a shuffle.
-
-    ``max_items_per_group`` (opt-in, default None = no cap) bounds the
-    dense-group tail: a group with k items emits k(k−1)/2 pairs, so
-    one pathological basket (a crawler order with 10⁴ parts) would
-    otherwise dominate the whole edge build at corpus scale. When set,
-    groups are truncated to their ``max_items_per_group`` LOWEST-keyed
-    items (deterministic) — an explicit, caller-visible result change,
-    which is why it is not on by default.
     """
     base = df.groupBy(group_col).agg(
         F.array_sort(F.collect_set(item_col)).alias("items")
     )
-    if max_items_per_group is not None:
-        base = base.select(
-            group_col, F.slice("items", 1, max_items_per_group).alias("items")
-        )
     n = F.size("items")
     items = F.col("items")
     starts = F.when(n >= 2, F.sequence(F.lit(1), n - 1)).otherwise(
@@ -269,7 +243,6 @@ def _edge_triangles(
 
 def clustering_coefficient(
     edges: DataFrame,
-    edge_partitions: int | None = None,
     assume_canonical: bool = False,
 ) -> DataFrame:
     """Per-vertex local clustering coefficient — how tightly each
@@ -291,8 +264,7 @@ def clustering_coefficient(
     item 2) instead of ``spark.sql.shuffle.partitions``: the vertex
     and triangle frames are tiny relative to the fact scans the
     session count is sized for, and at a 100×-sized session count
-    (126+) the extra task launches cost 10-20% (NOTES_r12 §6). Pass
-    ``edge_partitions`` for graphs whose edge count warrants more.
+    (126+) the extra task launches cost 10-20% (NOTES_r12 §6).
 
     ``assume_canonical``: opt-in assertion that ``edges`` is already
     one row per undirected edge with src < dst, no self-loops, no
@@ -305,7 +277,7 @@ def clustering_coefficient(
     Caches internal frames and does not unpersist (module cache
     contract — clearCache between queries in long-lived sessions).
     """
-    parts = _edge_partition_count(edges.sparkSession, edge_partitions)
+    parts = _edge_partition_count(edges.sparkSession)
     tri_edges, deg = _edge_triangles(edges, parts, assume_canonical)
     # tri_edges feeds three corner legs — cache so the wedge join runs
     # once (same rationale as the _edge_triangles internals).
@@ -405,7 +377,6 @@ def bfs_hops(
     edges: DataFrame,
     seeds: DataFrame,
     n_hops: int = 3,
-    edge_partitions: int | None = None,
 ) -> DataFrame:
     """Multi-source BFS with hop DISTANCES — unlike ``khop_reach``
     (which only counts the reachable set), this labels every reached
@@ -439,17 +410,15 @@ def bfs_hops(
     — one join per hop regardless of seed count. Same executor-loss
     caveat as ``random_walks``'s local checkpoints.
     """
-    spark = edges.sparkSession
-    snap = snapshotter(spark)
-    parts = _edge_partition_count(spark, edge_partitions)
+    parts = _edge_partition_count(edges.sparkSession)
     e = (
         edges.select("src", "dst")
         .repartition(parts, "src")
-        .transform(snap)
+        .transform(snap_lazy)
     )
     v0 = seeds.select(
         "seed", F.col("seed").alias("v"), F.lit(0).cast("int").alias("hop")
-    ).transform(snap)
+    ).transform(snap_lazy)
     frontier = v0.select("seed", "v")
     visited_kv = frontier
     hop_frames = [v0]
@@ -463,7 +432,7 @@ def bfs_hops(
         )
         frontier = cand.join(
             visited_kv, ["seed", "v"], "left_anti"
-        ).transform(snap)
+        ).transform(snap_lazy)
         visited_kv = visited_kv.unionAll(frontier)
         hop_frames.append(
             frontier.select(
@@ -480,7 +449,6 @@ def pagerank(
     edges: DataFrame,
     n_iter: int = 3,
     damping_pct: int = 85,
-    edge_partitions: int | None = None,
 ) -> DataFrame:
     """Integer-exact PageRank over an undirected simple graph.
 
@@ -519,9 +487,7 @@ def pagerank(
     hub costs O(d) longs (~8 MB at d = 10⁶) where the old edge-row
     layout spread it. Fine for the bounded-degree co-occurrence graphs
     callers pass (and exercised by a synthetic 10⁵-degree-hub test);
-    at web scale cap/sample hub adjacency upstream (the
-    ``copurchase_pairs`` ``max_items_per_group`` economics) before
-    calling.
+    at web scale cap/sample hub adjacency upstream before calling.
 
     Returns (v, rank_micro).
     """
@@ -556,13 +522,8 @@ def pagerank(
     # would otherwise appear n_iter+2 times in the plan and be
     # re-analyzed on every Dataset creation (classic-mode PySpark) —
     # same rationale as dedup.connected_components' per-round
-    # checkpoint. Default partition count is defaultParallelism/4:
-    # supersteps are short scan+partial-agg tasks, so fewer, fatter
-    # partitions beat task-launch overhead; pass ``edge_partitions``
-    # explicitly for graphs whose edge count warrants more.
-    spark = edges.sparkSession
-    snap = snapshotter(spark)
-    parts = _edge_partition_count(spark, edge_partitions)
+    # checkpoint. Partition count: ``_edge_partition_count``.
+    parts = _edge_partition_count(edges.sparkSession)
     # eager=False: defer block materialization to the caller's first
     # action (no hidden job at call time); blocks are reclaimed by the
     # ContextCleaner once the returned lineage is unreachable.
@@ -570,7 +531,7 @@ def pagerank(
         sym.repartition(parts, "src")
         .groupBy("src")
         .agg(F.sort_array(F.collect_set("dst")).alias("nb"))
-        .transform(snap)
+        .transform(snap_lazy)
     )
     outdeg = adj.select("src", F.size("nb").cast("long").alias("outdeg"))
     base = F.lit((100 - damping_pct) * 10_000).cast("long")
@@ -600,7 +561,6 @@ def pagerank(
 def label_propagation(
     edges: DataFrame,
     n_iter: int = 3,
-    edge_partitions: int | None = None,
 ) -> DataFrame:
     """Synchronous label-propagation community detection (Raghavan et
     al. 2007), made deterministic: every vertex starts labeled with its
@@ -631,13 +591,11 @@ def label_propagation(
 
     Returns (v, lbl) — final community label per vertex.
     """
-    spark = edges.sparkSession
-    snap = snapshotter(spark)
-    parts = _edge_partition_count(spark, edge_partitions)
+    parts = _edge_partition_count(edges.sparkSession)
     e = (
         edges.select("src", "dst")
         .repartition(parts, "dst")
-        .transform(snap)
+        .transform(snap_lazy)
     )
     labels = e.select("src").distinct().select(
         F.col("src").alias("v"), F.col("src").alias("lbl")
@@ -668,7 +626,7 @@ def label_propagation(
             .withColumn("rn", F.row_number().over(w))
             .filter(F.col("rn") == 1)
             .select("v", "lbl")
-            .transform(snap)
+            .transform(snap_lazy)
         )
     return labels
 
@@ -677,7 +635,6 @@ def kcore_peel(
     edges: DataFrame,
     k: int = 3,
     n_rounds: int = 4,
-    edge_partitions: int | None = None,
 ) -> DataFrame:
     """k-core peeling (Seidman 1983): iteratively delete vertices whose
     CURRENT degree is < k; what survives is the graph's dense core —
@@ -702,13 +659,11 @@ def kcore_peel(
     Returns (v, core_deg) — surviving vertices with their degree
     inside the surviving subgraph.
     """
-    spark = edges.sparkSession
-    snap = snapshotter(spark)
-    parts = _edge_partition_count(spark, edge_partitions)
+    parts = _edge_partition_count(edges.sparkSession)
     alive = (
         edges.select("src", "dst")
         .repartition(parts, "src")
-        .transform(snap)
+        .transform(snap_lazy)
     )
     for _ in range(n_rounds):
         survivors = (
@@ -722,7 +677,7 @@ def kcore_peel(
             .join(
                 survivors.withColumnRenamed("src", "dst"), "dst", "left_semi"
             )
-            .transform(snap)
+            .transform(snap_lazy)
         )
     return alive.groupBy("src").agg(
         F.count("*").cast("long").alias("core_deg")
@@ -733,8 +688,6 @@ def random_walks(
     edges: DataFrame,
     n_steps: int = 3,
     salt: str = "walk",
-    edge_partitions: int | None = None,
-    reliable_checkpoint_dir: str | None = None,
 ) -> DataFrame:
     """Deterministic random-walk corpus generation — the positive-pair
     sampler behind DeepWalk/node2vec-style graph embeddings (Perozzi et
@@ -752,8 +705,8 @@ def random_walks(
     walker frame (vertex-sized) against the adjacency table plus a
     row-local element_at — k steps cost k vertex-sized shuffles, never
     an edge-sized one. At web scale, hub adjacency arrays should be
-    capped/sampled (same opt-in economics as ``copurchase_pairs``);
-    uncapped here since callers pass bounded-degree graphs.
+    capped/sampled upstream; uncapped here since callers pass
+    bounded-degree graphs.
 
     Storage lifecycle (mirrors ``pagerank``): Spark has no cross-branch
     common-subplan elimination, so the k union branches would otherwise
@@ -775,15 +728,11 @@ def random_walks(
     the lineage truncated — losing an executor after the first action
     (including a dynamic-allocation scale-down) makes the returned
     DataFrame unrecoverable and fails subsequent jobs on it. On a
-    cluster with executor churn, pass ``reliable_checkpoint_dir`` (or
-    pre-set ``sparkContext.setCheckpointDir``) to use reliable
-    ``checkpoint()`` snapshots on shared storage instead; single-node /
-    static-allocation callers keep the cheaper local path. When the
-    argument is given and no checkpoint directory is configured yet,
-    this call sets it — a session-wide setting that persists after the
-    call returns; if the application already configured one, that
-    existing directory wins and the argument only switches the snapshot
-    mode.
+    cluster with executor churn, give the session a checkpoint
+    directory (``spark.checkpoint.dir``) and every snapshot here becomes
+    a reliable ``checkpoint()`` on shared storage (see
+    ``operators.iterative``); single-node / static-allocation callers
+    keep the cheaper local path.
 
     ``edges``: directed (src, dst); pass both directions for undirected
     graphs. Vertices with no out-edges start no walk and absorb none
@@ -791,11 +740,7 @@ def random_walks(
 
     Returns (anchor, step, context), steps 1..n_steps.
     """
-    spark = edges.sparkSession
-    parts = _edge_partition_count(spark, edge_partitions)
-
-    _snapshot = snapshotter(spark, reliable_checkpoint_dir)
-
+    parts = _edge_partition_count(edges.sparkSession)
     # repartition BEFORE the groupBy (round 13, guide §2.4): the
     # src-hash exchange of the raw pair stream is the one exchange the
     # aggregation needs — co-partitioned, collect_set then builds (and
@@ -808,7 +753,7 @@ def random_walks(
     # rare in co-occurrence graphs — same call as pagerank's layout),
     # and because collect_set dedups here, callers need not (and
     # should not) pre-distinct the pair stream.
-    adj = _snapshot(
+    adj = snap_lazy(
         edges.repartition(parts, "src")
         .groupBy("src")
         .agg(F.sort_array(F.collect_set("dst")).alias("nb"))
@@ -844,7 +789,7 @@ def random_walks(
         nxt = F.element_at(
             "nb", (h % F.size("nb")).cast("int") + F.lit(1)
         )
-        walk = _snapshot(joined.select("anchor", nxt.alias("cur")))
+        walk = snap_lazy(joined.select("anchor", nxt.alias("cur")))
         outs.append(
             walk.select(
                 "anchor",
@@ -862,7 +807,6 @@ def feature_propagation(
     edges: DataFrame,
     features: DataFrame,
     n_iter: int = 2,
-    edge_partitions: int | None = None,
 ) -> DataFrame:
     """Integer-exact neighbor-mean feature smoothing — the aggregation
     primitive of graph neural networks / label propagation on features
@@ -891,16 +835,14 @@ def feature_propagation(
     frames checkpoint per step so k supersteps never recompute the
     prefix. Returns (v, h) after ``n_iter`` rounds.
     """
-    spark = edges.sparkSession
-    snap = snapshotter(spark)
-    parts = _edge_partition_count(spark, edge_partitions)
+    parts = _edge_partition_count(edges.sparkSession)
     e = (
         edges.select("src", "dst")
         .repartition(parts, "src")
-        .transform(snap)
+        .transform(snap_lazy)
     )
     deg = e.groupBy("dst").agg(F.count("*").alias("deg"))
-    h = features.select("v", "h").transform(snap)
+    h = features.select("v", "h").transform(snap_lazy)
     for _ in range(n_iter):
         nbsum = (
             e.join(
@@ -921,7 +863,7 @@ def feature_propagation(
                 .otherwise(F.col("h"))
                 .alias("h"),
             )
-            .transform(snap)
+            .transform(snap_lazy)
         )
     return h
 
@@ -930,7 +872,6 @@ def bellman_ford(
     edges: DataFrame,
     seeds: DataFrame,
     n_rounds: int = 3,
-    edge_partitions: int | None = None,
 ) -> DataFrame:
     """Bounded-round Bellman-Ford: multi-source WEIGHTED shortest
     paths over the min-plus semiring — the companion to ``bfs_hops``
@@ -955,17 +896,15 @@ def bellman_ford(
     scan-budget enforced). All-integer arithmetic — distances hash
     bit-identically across engines.
     """
-    spark = edges.sparkSession
-    snap = snapshotter(spark)
-    parts = _edge_partition_count(spark, edge_partitions)
+    parts = _edge_partition_count(edges.sparkSession)
     e = (
         edges.select("src", "dst", "w")
         .repartition(parts, "src")
-        .transform(snap)
+        .transform(snap_lazy)
     )
     dist = seeds.select(
         "seed", F.col("seed").alias("v"), F.lit(0).cast("long").alias("d")
-    ).transform(snap)
+    ).transform(snap_lazy)
     for _ in range(n_rounds):
         cand = (
             dist.withColumnRenamed("v", "src")
@@ -981,6 +920,6 @@ def bellman_ford(
             dist.unionAll(cand)
             .groupBy("seed", "v")
             .agg(F.min("d").alias("d"))
-            .transform(snap)
+            .transform(snap_lazy)
         )
     return dist

@@ -18,29 +18,24 @@ sweep, which died at query 25/32 with "Block rdd_N does not exist")
 block-manager shedding after ~10 min of heavy queries in one session —
 makes the frame unrecoverable: routine on a 1000-executor cluster.
 
-``snapshotter(spark)`` therefore returns the step-snapshot function
-for the session, choosing RELIABLE ``checkpoint()`` (files on shared
-storage survive any block loss; lineage re-reads them) whenever a
-checkpoint directory is configured, in resolution order:
+One fact picks the snapshot kind: Spark's own checkpoint directory
+(``sparkContext.getCheckpointDir()``). With a directory set, every
+snapshot is a RELIABLE ``checkpoint()`` (files on shared storage
+survive any block loss; lineage re-reads them); without one, it is
+the cheap local path, so single-node and static-allocation callers
+pay nothing. The directory is Spark's setting, set once per session:
+``spark.checkpoint.dir`` at session build (``session.get_spark`` maps
+``SPARK_GRAFT_CHECKPOINT_DIR`` onto it) or
+``sparkContext.setCheckpointDir`` by the application. No operator
+takes a storage argument, and nothing in this module writes the
+setting.
 
-1. the operator's explicit ``reliable_checkpoint_dir`` argument;
-2. session conf ``spark.graft.reliableCheckpointDir`` (set once,
-   every superstep operator in the session switches — how a cluster
-   job or the scale sweep opts in without threading an argument
-   through every call site);
-3. environment variable ``SPARK_GRAFT_CHECKPOINT_DIR``;
-4. an application-level ``sparkContext.setCheckpointDir`` already in
-   effect (checkpoint-dir-aware: if the app configured reliable
-   checkpoint storage, use it).
-
-With none of the four, the cheap local path is kept — single-node and
-static-allocation callers pay nothing. Reliable mode costs one extra
-computation of each snapshotted frame (Spark writes checkpoint files
-by re-running the RDD after the materializing job — the documented
-``RDD.checkpoint`` behavior) plus a file round-trip per step; that is
-the price of surviving block loss, and the checkpoint files are
-reclaimed by the ContextCleaner only under
-``spark.cleaner.referenceTracking.cleanCheckpoints=true`` — long
+Reliable mode costs one extra computation of each snapshotted frame
+(Spark writes checkpoint files by re-running the RDD after the
+materializing job — the documented ``RDD.checkpoint`` behavior) plus a
+file round-trip per step; that is the price of surviving block loss,
+and the checkpoint files are reclaimed by the ContextCleaner only
+under ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` — long
 sweeps should point the directory at scratch space.
 
 Both snapshot kinds produce the same plan leaf (``LogicalRDD``, which
@@ -51,86 +46,24 @@ the operator docstrings rely on are identical in either mode.
 
 from __future__ import annotations
 
-import os
-
-from pyspark.sql import DataFrame, SparkSession
-
-CONF_KEY = "spark.graft.reliableCheckpointDir"
-ENV_KEY = "SPARK_GRAFT_CHECKPOINT_DIR"
+from pyspark.sql import DataFrame
 
 
-def reliable_dir(
-    spark: SparkSession, explicit: str | None = None
-) -> str | None:
-    """Resolve the reliable-checkpoint directory for this session, or
-    None for the local-checkpoint default (resolution order in the
-    module docstring)."""
-    if explicit:
-        return explicit
-    try:
-        conf = spark.conf.get(CONF_KEY, None)
-    except Exception:
-        conf = None
-    if conf:
-        return conf
-    env = os.environ.get(ENV_KEY)
-    if env:
-        return env
-    try:
-        # Spark Connect sessions have no sparkContext — same
-        # compatibility posture as graph._edge_partition_count.
-        return spark.sparkContext.getCheckpointDir()
-    except Exception:
-        return None
-
-
-def snapshotter(
-    spark: SparkSession,
-    explicit_dir: str | None = None,
-    eager: bool = False,
-):
-    """Return a one-arg ``snap(df) -> DataFrame`` for this session:
-    reliable ``checkpoint`` when a directory is configured (see
-    :func:`reliable_dir`), else ``localCheckpoint``. One-arg so call
-    chains stay chains: ``df.repartition(...).transform(snap)``.
-
-    ``eager`` mirrors the checkpoint APIs' flag: operators whose loop
-    logic needs the frame materialized NOW (e.g. a convergence count
-    read in the same round) build an eager snapshotter; plan-building
-    operators keep the lazy default (no hidden job at call time)."""
-    d = reliable_dir(spark, explicit_dir)
-    if d is None:
-        def snap(df: DataFrame) -> DataFrame:
-            return df.localCheckpoint(eager=eager)
-
-        return snap
-
-    # setCheckpointDir is a SESSION-WIDE mutation that would silently
-    # override (and outlive) any directory the application already
-    # configured — only set it when none is set; an existing directory
-    # wins and the resolved value only switches the snapshot mode.
-    try:
-        if spark.sparkContext.getCheckpointDir() is None:
-            spark.sparkContext.setCheckpointDir(d)
-    except Exception:
-        # Spark Connect: no sparkContext — route the directory through
-        # the conf the connect server reads for Dataset.checkpoint.
-        spark.conf.set("spark.checkpoint.dir", d)
-
-    def snap(df: DataFrame) -> DataFrame:
-        return df.checkpoint(eager=eager)
-
-    return snap
+def _snapshot(df: DataFrame, eager: bool) -> DataFrame:
+    """Cut ``df``'s lineage: reliable ``checkpoint`` when the session
+    has a checkpoint directory, else ``localCheckpoint``."""
+    if df.sparkSession.sparkContext.getCheckpointDir() is None:
+        return df.localCheckpoint(eager=eager)
+    return df.checkpoint(eager=eager)
 
 
 def snap_eager(df: DataFrame) -> DataFrame:
-    """One-shot eager snapshot of ``df`` under the session's resolved
-    mode — drop-in for ``.localCheckpoint(eager=True)`` in a chain:
-    ``frame.transform(snap_eager)``."""
-    return snapshotter(df.sparkSession, eager=True)(df)
+    """Eager snapshot, for loops that read the frame in the same round
+    (a convergence count): ``frame.transform(snap_eager)``."""
+    return _snapshot(df, eager=True)
 
 
 def snap_lazy(df: DataFrame) -> DataFrame:
-    """One-shot lazy snapshot (``eager=False``) under the session's
-    resolved mode."""
-    return snapshotter(df.sparkSession)(df)
+    """Lazy snapshot: no job at call time; the blocks or files are
+    written by the caller's first action."""
+    return _snapshot(df, eager=False)

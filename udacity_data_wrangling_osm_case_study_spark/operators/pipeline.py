@@ -27,7 +27,6 @@ def build_tables(
     spark: SparkSession,
     osm_path: str,
     psi_path: str,
-    persist: bool = True,
     shard_dir: str | None = None,
     shard_bytes: int = 128 * 1024 * 1024,
     include_relations: bool = False,
@@ -45,23 +44,22 @@ def build_tables(
     array), so the sinks share one parse and the way side never
     shuffles.
 
-    ``persist`` pins the two cleaned element frames: six sinks
-    otherwise re-parse the XML per action — the multi-sink economics of
-    SURVEY.md §4. ``shard_dir`` routes the input through the
-    element-aligned splitter first (sources/osm_split.py): Spark's XML
-    source doesn't split within one file, so sharding is what makes
-    the parse scale with cores/executors.
+    Without the persist, six sinks re-parse the XML per action — the
+    multi-sink economics of SURVEY.md §4. ``shard_dir`` routes the
+    input through the element-aligned splitter first
+    (sources/osm_split.py): Spark's XML source doesn't split within one
+    file, so sharding is what makes the parse scale with
+    cores/executors.
 
-    ``stage_dir`` (mutually composable with ``persist=False``) swaps
-    the block-manager cache for PARQUET STAGING: each cleaned element
-    frame is written once to ``{stage_dir}/<name>`` and read back, so
-    the six sinks share it through the filesystem instead of executor
-    storage. This is the city-scale-and-up memory posture: the
-    round-9 100x run peaked at 11.0 GB tree RSS (~27x the input)
-    because the cached parses (nested tag arrays, columnar batches)
-    plus six concurrent sink jobs all lived in one heap, and at corpus
-    scale a cache of input-sized frames only guarantees eviction
-    churn. Staged frames cost two extra file round-trips but bound
+    ``stage_dir`` swaps the block-manager cache for PARQUET STAGING:
+    each cleaned element frame is written once to
+    ``{stage_dir}/<name>`` and read back, so the six sinks share it
+    through the filesystem instead of executor storage. This is the
+    city-scale-and-up memory posture: the round-9 100x run peaked at
+    11.0 GB tree RSS (~27x the input) because the cached parses
+    (nested tag arrays, columnar batches) plus six concurrent sink
+    jobs all lived in one heap, and at corpus scale a cache of
+    input-sized frames only guarantees eviction churn. Staged frames cost two extra file round-trips but bound
     executor storage at zero, prune columns on every downstream
     re-read (the cache always rehydrates whole batches), and a lost
     executor re-reads files instead of re-parsing XML. Measured at
@@ -94,7 +92,7 @@ def build_tables(
                 .parquet(f"{stage_dir}/{name}")
             )
             return spark.read.parquet(f"{stage_dir}/{name}")
-        return df.persist(StorageLevel.MEMORY_AND_DISK) if persist else df
+        return df.persist(StorageLevel.MEMORY_AND_DISK)
 
     dictionary = official_streets.street_dictionary(
         official_streets.clean_official_streets(

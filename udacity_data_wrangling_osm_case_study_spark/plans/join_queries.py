@@ -11,11 +11,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from udacity_data_wrangling_osm_case_study_spark.operators.iterative import snap_lazy
 from udacity_data_wrangling_osm_case_study_spark.plans.registry import (
     fan_out_scan,
     register,
     table,
 )
+from udacity_data_wrangling_osm_case_study_spark.session import ensure_session_contract
 
 _DEC = "decimal(18,4)"
 
@@ -905,10 +907,6 @@ def part_bfs_hops(spark, sf_dir):
         .filter(F.col("shared") >= 2)
         .select("src", "dst")
     )
-    from udacity_data_wrangling_osm_case_study_spark.operators.iterative import (
-        snap_lazy,
-    )
-
     # ONE lazy snapshot of the symmetric edge frame shared by the seeds
     # derivation AND the BFS operator (round 14, guide §2.4/§5): both
     # consumers previously re-derived the whole co-purchase edge build
@@ -1668,7 +1666,7 @@ def customer_rfm_segments(spark, sf_dir):
     from pyspark.sql import Window
 
     o = table(spark, sf_dir, "orders")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    ensure_session_contract(spark)
     asof = o.agg(F.max("o_orderdate").alias("t"))
     rfm = (
         o.groupBy(F.col("o_custkey").alias("custkey"))
@@ -2159,10 +2157,6 @@ def part_price_smoothing(spark, sf_dir):
         .filter(F.col("shared") >= 2)
         .select("src", "dst")
     )
-    from udacity_data_wrangling_osm_case_study_spark.operators.iterative import (
-        snap_lazy,
-    )
-
     # ONE lazy snapshot of the symmetric edge frame shared by the
     # vertex derivation (inside h0's checkpoint) AND the propagation
     # operator (round 14, guide §2.4/§5): h0 and the operator's edge
@@ -2271,10 +2265,6 @@ def part_cheapest_path(spark, sf_dir):
         .filter(F.col("shared") >= 2)
         .select("src", "dst", F.expr("1000 DIV shared").alias("w"))
     )
-    from udacity_data_wrangling_osm_case_study_spark.operators.iterative import (
-        snap_lazy,
-    )
-
     # ONE lazy snapshot of the symmetric weighted edge frame shared by
     # the seeds derivation AND the Bellman-Ford operator (round 14,
     # guide §2.4/§5): the operator checkpoints its copy, so without the

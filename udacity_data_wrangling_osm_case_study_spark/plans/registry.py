@@ -101,18 +101,8 @@ def fan_out_scan(df: DataFrame, spark: SparkSession) -> DataFrame:
     plans the extra round-robin exchange of raw rows costs more than
     the single-core scan stage it parallelizes (measured on the graph
     edge build and five aggregate queries, round 13)."""
-    par = spark.conf.get("spark.default.parallelism", None)
-    if par is None:
-        try:
-            par = spark.sparkContext.defaultParallelism
-        except Exception:  # Spark Connect sessions have no sparkContext
-            par = 8
-    par = int(par)
-    try:
-        n_splits = df.rdd.getNumPartitions()
-    except Exception:  # Spark Connect: no df.rdd — skip the fan-out
-        return df
-    if n_splits < max(par // 2, 2):
+    par = spark.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() < max(par // 2, 2):
         return df.repartition(par)
     return df
 

@@ -8,6 +8,7 @@ from pyspark.sql import functions as F
 
 from udacity_data_wrangling_osm_case_study_spark.operators import temporal
 from udacity_data_wrangling_osm_case_study_spark.plans.registry import register, table
+from udacity_data_wrangling_osm_case_study_spark.session import ensure_session_contract
 
 
 @register(
@@ -1020,7 +1021,7 @@ def order_backlog_timeline(spark, sf_dir):
     # orderdate/shipdate scan as TIMESTAMP_NTZ in some testdata
     # generations; the UTC session zone makes the LTZ cast a wall-clock
     # identity (same normalization registry.table applies to events.ts)
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    ensure_session_contract(spark)
     o = table(spark, sf_dir, "orders").withColumn(
         "o_orderdate", F.col("o_orderdate").cast("timestamp")
     )
@@ -1078,7 +1079,7 @@ def supplier_lead_time_median(spark, sf_dir):
     re-attesting the histogram shortcut's exactness with ties."""
     from udacity_data_wrangling_osm_case_study_spark.operators import stats
 
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    ensure_session_contract(spark)
     o = table(spark, sf_dir, "orders").select(
         "o_orderkey", F.col("o_orderdate").cast("timestamp").alias("od")
     )

@@ -12,7 +12,14 @@ entries (default 100). The working set of one ETL op is about 280
 classes (six sinks, both audits, the 12 exploration statements) and of
 one ``query_mix`` pass about 150, so at 100 every repeated op evicted
 its own classes and compiled all of them again. The cache is sized at
-:data:`CODEGEN_CACHE_ENTRIES`, so a repeated op compiles almost none.
+:data:`CODEGEN_CACHE_ENTRIES`.
+The cache is keyed by the generated source, and by default Spark puts
+the whole-stage codegen id into the class name. Under AQE that id
+depends on the order in which a query's stages finish, so a repeat of
+the same plan could miss the cache and compile again (``row_counts``,
+a six-way ``UNION ALL`` of counts, did so on 6 of 40 repeats).
+``spark.sql.codegen.useIdInClassName=false`` leaves the id out of the
+name, and a repeated op compiles nothing.
 
 Locally this runs ``local[<usable cores>]`` (what ``nproc`` prints)
 unless ``SPARK_GRAFT_CPUS`` says otherwise; on a real cluster the same
@@ -39,7 +46,9 @@ def get_spark(
     """Build (or fetch) the tuned SparkSession.
 
     Honors ``SPARK_GRAFT_CPUS`` for local parallelism so the driver's
-    bench harness and pytest share one configuration path.
+    bench harness and pytest share one configuration path, and
+    ``SPARK_GRAFT_CHECKPOINT_DIR`` as Spark's ``spark.checkpoint.dir``
+    (reliable lineage cuts, see ``operators/iterative.py``).
 
     One call per process: ``getOrCreate`` applies this call's RUNTIME
     confs (shuffle partitions etc.) onto an already-existing session,
@@ -55,6 +64,7 @@ def get_spark(
         or os.environ.get("SPARK_SHUFFLE_PARTITIONS", DEFAULT_SHUFFLE_PARTITIONS)
     )
     driver_mem = os.environ.get("SPARK_DRIVER_MEMORY", "16g")
+    checkpoint_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -75,6 +85,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         # Static conf: the codegen cache reads it once, when it is built.
         .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # Driver testdata's events.ts is TIMESTAMP(NANOS), which the
         # vectorized parquet reader rejects; read as raw int64 nanos and
         # convert at the source (registry.table) — lossless, the data
@@ -97,6 +108,8 @@ def get_spark(
         # built here; foreign sessions keep their own policy.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
+    if checkpoint_dir:
+        builder = builder.config("spark.checkpoint.dir", checkpoint_dir)
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)
     return builder.getOrCreate()
