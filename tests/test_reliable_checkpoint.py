@@ -175,30 +175,38 @@ def test_post_hoc_block_loss_rereads_checkpoint_files(spark, reliable):
     assert first == second == EXPECTED_COMPS
 
 
-def test_snapshot_mode_follows_checkpoint_dir(spark, tmp_path):
-    """The session's checkpoint directory is the one switch: without
-    it a snapshot keeps executor-local blocks and writes no file; with
-    it the same call writes checkpoint files under that directory."""
+def _part_files(root):
+    return [f for _, _, fs in os.walk(root) for f in fs if f.startswith("part-")]
 
-    def files(root):
-        return [f for _, _, fs in os.walk(root) for f in fs if f.startswith("part-")]
 
-    frame = spark.range(0, 100, 1, 2)
-    assert spark.sparkContext.getCheckpointDir() is None
-    assert iterative.snap_eager(frame).count() == 100
-    assert iterative.snap_lazy(frame).count() == 100
-    assert not files(tmp_path)
-    spark.sparkContext.setCheckpointDir(str(tmp_path / "eager"))
-    try:
+class TestResolutionOrder:
+    """The session's checkpoint directory is the one switch for the
+    snapshot mode of ``snap_eager``/``snap_lazy``."""
+
+    def test_default_is_local(self, spark, tmp_path):
+        """Without a checkpoint directory a snapshot keeps
+        executor-local blocks and writes no file."""
+        frame = spark.range(0, 100, 1, 2)
+        assert spark.sparkContext.getCheckpointDir() is None
         assert iterative.snap_eager(frame).count() == 100
-        assert files(tmp_path / "eager")
-        spark.sparkContext.setCheckpointDir(str(tmp_path / "lazy"))
-        lazy = iterative.snap_lazy(frame)
-        assert not files(tmp_path / "lazy")  # no job at call time
-        assert lazy.count() == 100
-        assert files(tmp_path / "lazy")
-    finally:
-        _clear_checkpoint_dir(spark)
+        assert iterative.snap_lazy(frame).count() == 100
+        assert not _part_files(tmp_path)
+
+    def test_app_checkpoint_dir_is_honored(self, spark, tmp_path):
+        """An app-level ``setCheckpointDir`` makes the same calls write
+        checkpoint files under that directory (lazily for snap_lazy)."""
+        frame = spark.range(0, 100, 1, 2)
+        spark.sparkContext.setCheckpointDir(str(tmp_path / "eager"))
+        try:
+            assert iterative.snap_eager(frame).count() == 100
+            assert _part_files(tmp_path / "eager")
+            spark.sparkContext.setCheckpointDir(str(tmp_path / "lazy"))
+            lazy = iterative.snap_lazy(frame)
+            assert not _part_files(tmp_path / "lazy")  # no job at call time
+            assert lazy.count() == 100
+            assert _part_files(tmp_path / "lazy")
+        finally:
+            _clear_checkpoint_dir(spark)
 
 
 def test_env_var_sets_spark_checkpoint_dir(monkeypatch):
