@@ -454,6 +454,16 @@ def test_connected_components_deep_chain(spark):
     assert {r.comp for r in labels} == {0}
 
 
+def test_connected_components_raises_when_unconverged(spark, monkeypatch):
+    # A 16-edge chain needs several doubling rounds; with one round
+    # allowed the labels are still changing, which must raise rather
+    # than return them.
+    monkeypatch.setattr(dedup, "CC_MAX_ROUNDS", 1)
+    chain = spark.createDataFrame([(i, i + 1) for i in range(16)], ["id_a", "id_b"])
+    with pytest.raises(RuntimeError, match="still changing"):
+        dedup.connected_components(chain)
+
+
 def test_connected_components_multiple_clusters(spark):
     # Two chains and an isolated pair: min-reachable-id per component.
     edges = [(1, 2), (2, 3), (10, 11), (11, 12), (20, 21)]
@@ -1509,20 +1519,29 @@ def test_prefix_filter_exact_recall_vs_full_index(docs):
 
 
 def test_similarity_pairs_both_physical_paths_agree(docs):
-    """The cost-based pair join must return identical results whether
-    the df-skew probe picks the inverted index or the prefix filter —
-    forced here by setting the gate to always/never trip."""
+    """The inverted-index front door and the PPJoin prefix filter are
+    two exact algorithms for the same join: at the threshold the
+    queries use they must return identical rows on all six columns."""
     sh = dedup.word_shingles(docs)
-    via_inverted = {
-        (r.id_a, r.id_b, r.inter, r.size_a, r.size_b, r.jaccard_bp)
-        for r in dedup.similarity_pairs(sh, 1, 2, max_df2_ratio=10**9).collect()
-    }
-    via_prefix = {
-        (r.id_a, r.id_b, r.inter, r.size_a, r.size_b, r.jaccard_bp)
-        for r in dedup.similarity_pairs(sh, 1, 2, max_df2_ratio=0).collect()
-    }
+    via_inverted = {tuple(r) for r in dedup.similarity_pairs(sh, 1, 2).collect()}
+    via_prefix = {tuple(r) for r in dedup.prefix_filter_pairs(sh, 1, 2).collect()}
     assert via_inverted == via_prefix
     assert via_inverted  # the fixture corpus has planted dup pairs
+
+
+def test_set_similarity_front_doors_fire_no_job_while_building(spark, docs):
+    """Building the pair plans is lazy: no job runs before an action
+    (a plan-time probe would fire its job here)."""
+    sc = spark.sparkContext
+    sh = dedup.word_shingles(docs)  # uncached
+    group = "front-doors-build"
+    sc.setJobGroup(group, "build similarity_pairs and containment_pairs")
+    try:
+        dedup.similarity_pairs(sh, 1, 2)
+        dedup.containment_pairs(sh, 4, 5)
+        assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    finally:
+        sc._jsc.clearJobGroup()
 
 
 def test_jaccard_pairs_candidate_docvec_matches_full(docs):
@@ -1558,44 +1577,23 @@ def test_jaccard_pairs_candidate_docvec_matches_full(docs):
     assert got == []
 
 
-def test_df_skew_probe_sampled_decision(spark, docs):
-    """The 1/16 instance-sampled df-skew probe (round 13) must keep
-    the decisions the full census made: trip on a hot-key corpus (the
-    adversary instance sampling exists for — a key-coherent sample
-    would miss the one hot shingle 15/16 of the time), stay calm on
-    the low-skew fixture at the default gate, and keep the forced
-    extremes meaningful (ratio 0 trips on ANY non-empty sample, so
-    the both-paths-agree tests above really exercise both paths)."""
-    from pyspark.sql import functions as F
-
-    sh_fixture = dedup.word_shingles(docs)
-    assert dedup._df_skew_probe(sh_fixture, 0) is True
-    assert dedup._df_skew_probe(sh_fixture, 10**9) is False
-
-    # one shingle shared by every doc: df = n, ratio -> n/2 >> 64
-    n = 4096
-    hot = spark.range(n).select(
-        F.col("id"), F.lit("the same hot shingle").alias("shingle")
-    )
-    assert dedup._df_skew_probe(hot, 64) is True
-
-    empty = hot.filter(F.col("id") < 0)
-    assert dedup._df_skew_probe(empty, 0) is False
-
-
 def test_containment_adaptive_both_paths_agree(docs):
+    """containment_pairs against a pure-Python brute force over the
+    fixture's shingle sets: smaller side contained (ties → lower id),
+    C = |A∩B|/|A| ≥ 4/5, basis points floored."""
     sh = dedup.word_shingles(docs)
-    direct = {
-        tuple(r) for r in dedup.containment_pairs(sh, 4, 5).collect()
-    }
-    via_prefix = {
-        tuple(r)
-        for r in dedup.containment_pairs_adaptive(
-            sh, 4, 5, max_df2_ratio=0
-        ).collect()
-    }
-    assert direct == via_prefix
-    assert direct
+    sets: dict[int, set[str]] = {}
+    for r in sh.collect():
+        sets.setdefault(r.id, set()).add(r.shingle)
+    want = set()
+    for a, sa in sets.items():
+        for b, sb in sets.items():
+            inter = len(sa & sb)
+            if (len(sa), a) < (len(sb), b) and inter and 5 * inter >= 4 * len(sa):
+                want.add((a, b, inter, len(sa), inter * 10000 // len(sa)))
+    got = {tuple(r) for r in dedup.containment_pairs(sh, 4, 5).collect()}
+    assert got == want
+    assert got
 
 
 def test_payload_byte_grams_positions_and_short_drop(spark):

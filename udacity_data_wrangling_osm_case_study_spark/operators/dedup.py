@@ -36,6 +36,10 @@ from udacity_data_wrangling_osm_case_study_spark.operators.iterative import (
 )
 
 HEX = "0123456789abcdef"
+# Round bound of connected_components: pointer doubling closes a
+# component of diameter d in ~log2(d) rounds, so 20 rounds cover
+# diameters up to about 2^20; running out of rounds raises.
+CC_MAX_ROUNDS = 20
 
 
 def normalize_text(col):
@@ -261,13 +265,13 @@ def docvec_pairs(
     per_doc: Callable[[DataFrame], DataFrame],
 ) -> DataFrame:
     """Merge-verify step shared by every candidate-generation family
-    (MinHash-LSH, PPJoin prefix filter, containment, weighted Jaccard):
-    each candidate pair with one per-doc row joined onto both sides.
+    (MinHash-LSH, PPJoin prefix filter, weighted Jaccard): each
+    candidate pair with one per-doc row joined onto both sides.
 
     ``candidates``: DISTINCT (id_a, id_b) pairs — what
-    :func:`lsh_candidate_pairs`, :func:`containment_candidates` and the
-    prefix-filter candidate stage emit. A duplicated row would
-    duplicate its output row; rows with id_a >= id_b are dropped.
+    :func:`lsh_candidate_pairs` and the prefix-filter candidate stage
+    emit. A duplicated row would duplicate its output row; rows with
+    id_a >= id_b are dropped.
     ``items``: rows keyed by ``id`` (shingle hashes, raw documents).
     ``per_doc(items)`` builds one row per doc: ``id`` plus the inputs of
     the caller's measure (a hash list and its size, a token→count map
@@ -329,7 +333,8 @@ def jaccard_pairs(
     (id_a, id_b, inter, size_a, size_b, jaccard). If ``candidates`` is
     given, only those pairs are scored (the LSH-verify path,
     :func:`docvec_pairs`, same contract); otherwise all co-shingled
-    pairs are scored (small corpora / audits).
+    pairs are scored (the :func:`similarity_pairs` and
+    :func:`containment_pairs` path).
     """
     # Join on a 60-bit hash of the shingle, not the string: the
     # inverted-index shuffle carries 8-byte keys instead of ~20-char
@@ -337,14 +342,16 @@ def jaccard_pairs(
     # join at sf0.1). Collisions (~n²/2^61) are identical in every
     # engine — the oracle hashes the same way — and cannot create a
     # pair on their own, only nudge an intersection count. One
-    # divergence under an INTRA-doc collision (ADVICE r13): the docvec
-    # path dedups hash values per doc (array_intersect over the
-    # collect_list), while the no-candidates inverted-index path counts
-    # join-row multiplicity — so if two distinct shingles of one doc
-    # collide into one 60-bit value, the two physical paths can differ
+    # divergence under an INTRA-doc collision: the ``candidates`` path
+    # (and prefix_filter_pairs, which verifies the same way) dedups
+    # hash values per doc (array_intersect over the collect_list),
+    # while the full inverted-index path counts join-row multiplicity
+    # — so if two distinct shingles of one doc collide into one 60-bit
+    # value, a candidate-verified pair can differ from the full path
     # by 1 on inter/jaccard. Acceptably rare (and absent from every
-    # tested corpus — the both-paths-agree tests would catch it); noted
-    # so that failure mode is documented rather than mysterious.
+    # tested corpus — the docvec-vs-full and prefix-vs-full tests
+    # would catch it); noted so that failure mode is documented
+    # rather than mysterious.
     hashed = shingles.select("id", shingle_hash().alias("g"))
     if candidates is not None:
         # inter >= 1: the inverted-index path only emits co-shingled pairs
@@ -385,9 +392,9 @@ def jaccard_pairs(
     )
 
 
-def shingle_hash(col_name: str = "shingle"):
-    """60-bit integer surrogate of a shingle string (join-key form)."""
-    return F.conv(F.substring(F.md5(col_name), 1, 15), 16, 10).cast("long")
+def shingle_hash():
+    """60-bit integer surrogate of the ``shingle`` string (join-key form)."""
+    return F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("long")
 
 
 def build_dedup_index(
@@ -890,10 +897,7 @@ def embedding_near_duplicates(
     return pairs.filter(F.col("cosine") >= threshold).select("id_a", "id_b", "cosine")
 
 
-def connected_components(
-    pairs: DataFrame,
-    max_iter: int = 20,
-) -> DataFrame:
+def connected_components(pairs: DataFrame) -> DataFrame:
     """Transitive closure of the duplicate-pair graph: (id, comp) where
     comp is the minimum id reachable from id — the canonical keeper of
     each near-dup cluster.
@@ -912,10 +916,11 @@ def connected_components(
     superseded round storage is released by the context cleaner when
     the previous frame goes out of scope — no cache pinning across
     rounds. The driver loop only ever sees a changed-count per round;
-    label data never leaves the executors. ``max_iter`` bounds runaway
-    graphs. On clusters with executor churn (or long sessions under
-    block-shedding memory pressure — the round-9 30x sweep's failure
-    mode), give the session a checkpoint directory
+    label data never leaves the executors. A graph that has not
+    converged within ``CC_MAX_ROUNDS`` rounds raises instead of
+    returning unconverged labels. On clusters with executor churn (or
+    long sessions under block-shedding memory pressure — the round-9
+    30x sweep's failure mode), give the session a checkpoint directory
     (``spark.checkpoint.dir``) so each round snapshots to reliable
     storage instead of executor-local blocks.
     """
@@ -956,7 +961,7 @@ def connected_components(
         .withColumnRenamed("id_a", "id")
         .transform(snap_eager)
     )
-    for _ in range(max_iter):
+    for _ in range(CC_MAX_ROUNDS):
         neighbor_min = (
             sym.join(labels, sym.id_b == labels.id)
             .groupBy("id_a")
@@ -993,8 +998,10 @@ def connected_components(
         changed = updated.filter(F.col("new_comp") != F.col("old_comp")).count()
         labels = updated.select("id", F.col("new_comp").alias("comp"))
         if changed == 0:
-            break
-    return labels
+            return labels
+    raise RuntimeError(
+        f"connected_components: labels still changing after {CC_MAX_ROUNDS} rounds"
+    )
 
 
 def contamination_report(
@@ -1509,156 +1516,32 @@ def _jaccard_bp(pairs: DataFrame, threshold_num: int, threshold_den: int) -> Dat
     )
 
 
-def _df_skew_probe(sh: DataFrame, max_df2_ratio: int) -> bool:
-    """The cost-based plan chooser's df-skew decision, from a 1/16
-    DETERMINISTIC instance sample (round 13, guide §1): filter shingle
-    INSTANCES by hash of (id, shingle), census the sample, and
-    un-bias. Instance (not key) sampling is what makes the probe safe
-    against the exact adversary it exists for: a single mega-hot
-    shingle is sampled ~df/16 times (binomial concentration) and its
-    df² term survives proportionally, where a key-coherent 1/16 sample
-    would MISS it outright 15 times in 16.
-
-    Unbiasing: with X_s ~ Binomial(df_s, p), E[ΣX²] = p²·Σdf² +
-    p(1−p)·Σdf and E[ΣX] = p·Σdf, so ŝ2 = (ΣX² − (1−p)·ΣX)/p² and
-    ŝ1 = ΣX/p. ŝ2 ≥ ΣX/p² > 0 for any non-empty sample (ΣX² ≥ ΣX),
-    so the forced-path extremes (ratio 0 / huge) keep their meaning.
-    The probe is a PLAN chooser only — both physical paths are exact,
-    so estimator noise near the threshold can never change a result,
-    only which exact plan computes it. Deterministic: fixed hash, no
-    rand(). An empty sample (tiny corpora) chooses the inverted index,
-    which is optimal there anyway.
-    """
-    p_inv = 16  # sample 1 instance in 16
-    samp = (
-        sh.filter(F.pmod(F.xxhash64("id", "shingle"), F.lit(p_inv)) == 0)
-        .groupBy("shingle")
-        .agg(F.count("*").alias("df"))
-        .agg(
-            F.sum(F.col("df") * F.col("df")).alias("x2"),
-            F.sum("df").alias("x1"),
-        )
-        .first()
-    )
-    if samp.x1 is None:
-        return False
-    s2_hat = (samp.x2 - (p_inv - 1) / p_inv * samp.x1) * p_inv * p_inv
-    s1_hat = samp.x1 * p_inv
-    return s2_hat > max_df2_ratio * s1_hat
-
-
 def similarity_pairs(
     sh: DataFrame,
     threshold_num: int = 1,
     threshold_den: int = 2,
-    max_df2_ratio: int = 64,
 ) -> DataFrame:
-    """Exact set-similarity self-join with a COST-BASED physical choice
-    — the adaptive front door for the J ≥ num/den pair queries.
-
-    The two exact strategies have opposite cost profiles: the inverted-
-    index join's collision count is Σ_s df(s)² (optimal on low-skew
-    corpora, quadratic the moment one boilerplate shingle goes hot),
-    while PPJoin prefix filtering pays fixed extra passes (df ranking,
-    prefix windows, candidate dedup) to make the hot-shingle blowup
-    structurally impossible. Neither dominates — so, AQE-style, one
-    cheap aggregate over the df distribution (a metadata-scale action:
-    two longs) picks the plan: inverted index while
-    ``Σdf² ≤ max_df2_ratio · Σdf`` (collision rows per shingle row
-    bounded), prefix filter beyond it. Both paths are EXACT at the
-    integer cross-multiplied threshold, so the choice never changes
-    the result — only the plan.
+    """Exact set-similarity self-join — the front door for the
+    J ≥ num/den pair queries: the full inverted-index join
+    (:func:`jaccard_pairs`) under the integer cross-multiplied
+    threshold. Building the plan fires no job.
 
     Returns (id_a, id_b, inter, size_a, size_b, jaccard_bp), the
     :func:`prefix_filter_pairs` schema.
 
-    The df census behind the choice runs on a 1/16 deterministic
-    instance sample (:func:`_df_skew_probe`) — the probe was the
-    single most expensive part of the low-skew path (a full
-    corpus-wide census per run, ~1.4 s warm of a 2.7 s query at
-    sf0.1) and its only job is a one-bit plan decision.
+    The inverted index's collision count is Σ_s df(s)²: optimal on
+    low-skew corpora, quadratic once one boilerplate shingle goes hot.
+    On such a corpus call :func:`prefix_filter_pairs` (PPJoin prefix
+    filtering, exact, same schema) instead, or cap the shingle df at
+    the source with ``word_shingles(max_shingle_df=)``.
     """
-    if _df_skew_probe(sh, max_df2_ratio):
-        return prefix_filter_pairs(sh, threshold_num, threshold_den)
     return _jaccard_bp(jaccard_pairs(sh), threshold_num, threshold_den)
-
-
-def containment_candidates(
-    sh: DataFrame, threshold_num: int = 4, threshold_den: int = 5
-) -> DataFrame:
-    """Candidate pairs for the containment join via an asymmetric
-    prefix filter — exact recall for C(A→B) = |A∩B|/|A| ≥ num/den
-    where A is the smaller side.
-
-    C ≥ t forces |A∩B| ≥ ⌈t·|A|⌉, so the intersection cannot avoid
-    A's ``|A| − ⌈t·|A|⌉ + 1`` RAREST shingles (global (df, shingle)
-    order — pigeonhole on the complement). Joining each doc's prefix
-    against the FULL index of every other doc therefore finds every
-    qualifying pair; taking prefixes from both sides covers either
-    ordering of sizes. Hot boilerplate shingles rank LAST in the
-    (df, shingle) order and never enter a prefix, so the df² blowup of
-    the symmetric inverted-index join cannot occur on the prefix side
-    of this join — per-shingle cost is df_prefix·df, with df_prefix ≈ 0
-    exactly where df is large.
-
-    All joins and the rank sort run on the 60-bit shingle hash (see
-    :func:`prefix_filter_pairs` for the collision analysis).
-    """
-    from pyspark.sql import Window
-
-    hashed = sh.select("id", shingle_hash().alias("g"))
-    dfreq = hashed.groupBy("g").agg(F.count("*").alias("df"))
-    ranked = hashed.join(dfreq, "g")
-    w = Window.partitionBy("id").orderBy("df", "g")
-    wn = Window.partitionBy("id")
-    pref = ranked.withColumn("rn", F.row_number().over(w)).withColumn(
-        "sz", F.count("*").over(wn)
-    )
-    p = (
-        F.col("sz")
-        - F.expr(
-            f"({threshold_num} * sz + {threshold_den} - 1) div {threshold_den}"
-        )
-        + 1
-    )
-    prefix = pref.filter(F.col("rn") <= p).select(
-        F.col("id").alias("pid"), "g"
-    )
-    joined = prefix.join(
-        hashed.select(F.col("id").alias("oid"), "g"), "g"
-    ).filter(F.col("pid") != F.col("oid"))
-    return (
-        joined.select(
-            F.least("pid", "oid").alias("id_a"),
-            F.greatest("pid", "oid").alias("id_b"),
-        )
-        .distinct()
-    )
-
-
-def containment_pairs_adaptive(
-    sh: DataFrame,
-    threshold_num: int = 4,
-    threshold_den: int = 5,
-    max_df2_ratio: int = 64,
-) -> DataFrame:
-    """Cost-based front door for the containment join — same adaptive
-    physical choice as :func:`similarity_pairs`: full inverted index on
-    low-skew corpora, :func:`containment_candidates` prefix filtering
-    (exact recall) when the df distribution says hot shingles would
-    make the collision count quadratic. Result-identical either way.
-    """
-    cand = None
-    if _df_skew_probe(sh, max_df2_ratio):
-        cand = containment_candidates(sh, threshold_num, threshold_den)
-    return containment_pairs(sh, threshold_num, threshold_den, candidates=cand)
 
 
 def containment_pairs(
     shingles: DataFrame,
     threshold_num: int = 4,
     threshold_den: int = 5,
-    candidates: DataFrame | None = None,
 ) -> DataFrame:
     """Asymmetric set-containment near-dup detection: pairs where the
     SMALLER document's shingles are mostly inside the larger one —
@@ -1667,14 +1550,13 @@ def containment_pairs(
     quote/boilerplate duplication in a training corpus is exactly this
     shape (Broder's containment, 1997).
 
-    Reuses the inverted-index pair statistics (:func:`jaccard_pairs` —
-    same (inter, size_a, size_b) triple, same candidate-restriction
-    path at scale); containment is a different projection of that
-    triple, integer cross-multiplied. Output names the direction:
+    Reuses the inverted-index pair statistics (:func:`jaccard_pairs`'
+    (inter, size_a, size_b) triple); containment is a different
+    projection of that triple, integer cross-multiplied. Output names the direction:
     (contained_id, container_id, inter, contained_size,
     containment_bp); equal sizes break toward the lower id.
     """
-    pairs = jaccard_pairs(shingles, candidates=candidates)
+    pairs = jaccard_pairs(shingles)
     small = F.least("size_a", "size_b")
     a_is_small = (F.col("size_a") < F.col("size_b")) | (
         (F.col("size_a") == F.col("size_b")) & (F.col("id_a") < F.col("id_b"))

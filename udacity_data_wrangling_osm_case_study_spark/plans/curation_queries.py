@@ -625,9 +625,7 @@ def leakage_safe_split(spark, sf_dir):
 
     docs = table(spark, sf_dir, "documents")
     sh = dedup.word_shingles(docs).cache()
-    # Pair generation via the cost-based exact pair join (inverted
-    # index on low-skew corpora, prefix filter under df² boilerplate
-    # skew — result-identical either way).
+    # Pair generation via the exact inverted-index pair join.
     pairs = dedup.similarity_pairs(sh, 1, 2).select("id_a", "id_b")
     return sampling.leakage_safe_split(docs, pairs).orderBy("id")
 

@@ -81,15 +81,11 @@ def exact_dedup_prefix_groups(spark, sf_dir):
 )
 def ngram_jaccard_pairs(spark, sf_dir):
     """Exact word-3-gram Jaccard near-dup pairs (J ≥ 1/2, integer
-    cross-multiplied) via the cost-based pair join
-    (operators.dedup.similarity_pairs): a one-aggregate df-skew probe
-    picks the inverted-index join on low-skew corpora and PPJoin
-    prefix filtering when hot boilerplate shingles would make the
-    collision count df²-quadratic — both exact, result-identical.
-    The oracle is always the FULL inverted-index join, so whenever the
-    prefix path runs this is a cross-algorithm match. The shingle
-    frame feeds several plan branches; cache it so the explode runs
-    once."""
+    cross-multiplied) via the exact inverted-index pair join
+    (operators.dedup.similarity_pairs), the same join the oracle
+    runs; ``prefix_filter_jaccard_pairs`` is the cross-algorithm
+    match. The shingle frame feeds several plan branches; cache it so
+    the explode runs once."""
     docs = table(spark, sf_dir, "documents")
     sh = dedup.word_shingles(docs).cache()
     return dedup.similarity_pairs(sh, 1, 2).orderBy("id_a", "id_b")
@@ -318,11 +314,9 @@ def embedding_near_dupes(spark, sf_dir):
 def dedup_clusters(spark, sf_dir):
     """Near-dup pairs → transitive clusters via iterative min-label
     propagation (each cluster labeled by its minimum doc id — the
-    keeper). Pair generation goes through the cost-based exact pair
-    join (similarity_pairs: inverted index on low-skew corpora, prefix
-    filtering under boilerplate df² skew — result-identical). Oracle:
-    recursive-CTE transitive closure over the FULL inverted-index
-    pairs."""
+    keeper). Pair generation goes through the exact inverted-index
+    pair join (similarity_pairs). Oracle: recursive-CTE transitive
+    closure over the same inverted-index pairs."""
     docs = table(spark, sf_dir, "documents")
     sh = dedup.word_shingles(docs).cache()
     pairs = dedup.similarity_pairs(sh, 1, 2).select("id_a", "id_b")
@@ -863,15 +857,10 @@ def containment_dupes(spark, sf_dir):
     inverted-index pair statistics as ``ngram_jaccard_pairs``
     (operators.dedup.containment_pairs reuses the (inter, size, size)
     triple); only the projection and the integer threshold differ.
-    Pair generation is cost-based (containment_pairs_adaptive): the
-    full inverted index on low-skew corpora, or the containment-
-    adapted prefix filter (each doc's rarest ``(1−t)·|S|+1`` shingles
-    joined against the full index — exact recall by pigeonhole) when
-    the df distribution says hot shingles would go quadratic. The
-    oracle is always the full inverted-index join."""
+    Pairs come from the full inverted-index join, as in the oracle."""
     docs = table(spark, sf_dir, "documents")
     sh = dedup.word_shingles(docs).cache()
-    return dedup.containment_pairs_adaptive(sh, 4, 5).orderBy(
+    return dedup.containment_pairs(sh, 4, 5).orderBy(
         "contained_id", "container_id"
     )
 
@@ -989,10 +978,9 @@ def weighted_jaccard_pairs(spark, sf_dir):
     cross-multiplied threshold (≥ 1/2), basis-point output."""
     docs = table(spark, sf_dir, "documents")
     sh = dedup.word_shingles(docs).cache()
-    # Candidates via the cost-based exact pair join at the SAME
+    # Candidates via the exact inverted-index pair join at the SAME
     # integer threshold as the oracle's candidate CTE
-    # (10·I ≥ 3·union) — no float ≥ 0.3 gate, and the prefix-filter
-    # path engages under df² boilerplate skew.
+    # (10·I ≥ 3·union) — no float ≥ 0.3 gate.
     cand = dedup.similarity_pairs(sh, 3, 10)
 
     def token_counts(d):
