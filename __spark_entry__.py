@@ -32,7 +32,7 @@ def _fresh_cache(fn: Callable[[SparkSession, str], DataFrame]):
     Several registered queries cache shared intermediate frames
     (shingles, candidate pairs, canonical tag unions) that stay
     referenced for the life of the session; a harness that runs all
-    ~100 queries in one session would otherwise accumulate every dead
+    253 queries in one session would otherwise accumulate every dead
     cache and trade executor memory for GC pressure. bench.py clears
     between queries itself (keeping its intentional warm second run);
     this wrapper gives the correctness harness the same hygiene.

@@ -444,7 +444,7 @@ def test_arrow_cosine_tiled_matches_bruteforce_multichunk(spark):
 def test_connected_components_deep_chain(spark):
     # A 1000-edge chain is the worst case for one-hop label propagation
     # (diameter = vertex count). Pointer doubling must close it within
-    # the default max_iter=20 — and localCheckpoint keeps the per-round
+    # dedup.CC_MAX_ROUNDS (20) — and localCheckpoint keeps the per-round
     # lineage flat, so this also guards against analyzer blowup.
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1000)], ["id_a", "id_b"]

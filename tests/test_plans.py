@@ -364,6 +364,101 @@ def test_lineage_cuts_only_through_iterative():
     assert bare == [], bare
 
 
+# Deployment settings: the caller's environment picks them, so they
+# stay settable even though nothing in the repository passes them.
+UNPASSED_ALLOWED = {
+    ("get_spark", "master"): "cluster URL of the deployment",
+    ("get_spark", "extra_conf"): "per-deployment Spark settings",
+    ("main", "argv"): "CLI entry point; None reads sys.argv",
+    ("start_corpus_intake", "gram_index_dir"): "optional index artifact path",
+}
+
+
+def _after_close(text: str, i: int) -> int:
+    """Offset just past the bracket that closes ``text[i]``; tokenized,
+    so brackets inside strings do not count."""
+    import io
+    import tokenize
+
+    for size in (4000, len(text)):
+        lines = text[i:i + size].splitlines(keepends=True)
+        depth, used = 0, 0
+        try:
+            for t in tokenize.generate_tokens(io.StringIO("".join(lines)).readline):
+                if t.type != tokenize.OP:
+                    continue
+                depth += (t.string in "([{") - (t.string in ")]}")
+                if depth == 0:
+                    return i + sum(map(len, lines[: t.end[0] - 1])) + t.end[1]
+        except (tokenize.TokenError, SyntaxError):
+            continue
+    raise ValueError(f"no closing bracket for offset {i}")
+
+
+@pytest.mark.guard
+def test_every_defaulted_parameter_is_passed_somewhere():
+    """A defaulted parameter of a module-level public package function
+    that no call in the repository passes (by keyword or position) is
+    an option with one value in use: it belongs in the body as a
+    constant. Calls are matched by function name across the package,
+    tests/, tools/, perfbench/ and bench.py; a ``*args``/``**kwargs``
+    call counts as passing everything. Only signatures and call
+    argument lists are parsed, which keeps the guard run fast."""
+    import ast
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(registry.__file__).resolve().parents[1]
+    root = pkg.parent
+    paths = [*pkg.rglob("*.py"), root / "bench.py"]
+    for d in ("tests", "tools", "perfbench"):
+        paths += (root / d).rglob("*.py")
+    texts = {p: p.read_text() for p in paths}
+
+    defaulted = {}  # name -> {param: positional index, None if kw-only}
+    for p, text in texts.items():
+        if pkg not in p.parents:
+            continue
+        for m in re.finditer(r"^def ([A-Za-z]\w*)\(", text, re.M):
+            header = text[m.start():_after_close(text, m.end() - 1)] + ": pass"
+            a = ast.parse(header).body[0].args
+            pos = a.posonlyargs + a.args
+            params = defaulted.setdefault(m.group(1), {})
+            for i in range(len(pos) - len(a.defaults), len(pos)):
+                params[pos[i].arg] = i
+            for arg, d in zip(a.kwonlyargs, a.kw_defaults):
+                if d is not None:
+                    params[arg.arg] = None
+
+    names = "|".join(n for n, ps in defaulted.items() if ps)
+    passed = set()
+    for text in texts.values():
+        for m in re.finditer(rf"(?<!def )\b({names})\(", text):
+            try:
+                call = ast.parse(
+                    "f" + text[m.end() - 1:_after_close(text, m.end() - 1)],
+                    mode="eval",
+                ).body
+            except (SyntaxError, ValueError):
+                continue  # prose in a docstring or comment, not a call
+            kws = {k.arg for k in call.keywords}
+            star = any(isinstance(x, ast.Starred) for x in call.args)
+            for param, idx in defaulted[m.group(1)].items():
+                if (
+                    None in kws
+                    or param in kws
+                    or (idx is not None and (star or idx < len(call.args)))
+                ):
+                    passed.add((m.group(1), param))
+    unpassed = {
+        (n, p) for n, ps in defaulted.items() for p in ps
+    } - passed - set(UNPASSED_ALLOWED)
+    assert sorted(unpassed) == []
+    assert all(p in defaulted.get(n, ()) for n, p in UNPASSED_ALLOWED), (
+        "stale allowlist entry"
+    )
+
+
 def test_kmv_windows_are_keyed(spark):
     """The KMV k-smallest selection must stay two-phase: every window
     in the plan is partitioned by the sketch key (event_type — the

@@ -209,6 +209,50 @@ class TestResolutionOrder:
             _clear_checkpoint_dir(spark)
 
 
+def test_snapshot_jobs_fired_at_call(spark):
+    """Jobs a snapshot fires while the plan is built (local mode, AQE
+    on). A lazy snapshot of a narrow frame runs nothing, but of a
+    shuffled frame it runs the map stage: ``localCheckpoint(eager=
+    False)`` plans the physical RDD, and AQE executes the exchange to
+    do so. The eager one adds its materializing job; ``.cache()``
+    stays lazy."""
+    import itertools
+
+    from pyspark.sql import functions as F
+
+    sc = spark.sparkContext
+    assert sc.getCheckpointDir() is None
+    groups = itertools.count()
+
+    def jobs(build) -> int:
+        group = f"snapshot-jobs-at-call-{next(groups)}"
+        sc.setJobGroup(group, "build one snapshot")
+        try:
+            build()
+        finally:
+            sc._jsc.clearJobGroup()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    def narrow():
+        return spark.range(0, 1000, 1, 4).withColumn("snap_y", F.col("id") * 2)
+
+    def shuffled():
+        return spark.range(0, 1000, 1, 4).groupBy(
+            (F.col("id") % 7).alias("snap_k")
+        ).count()
+
+    assert jobs(lambda: iterative.snap_lazy(narrow())) == 0
+    assert jobs(lambda: iterative.snap_eager(narrow())) == 1
+    assert jobs(lambda: iterative.snap_lazy(shuffled())) == 1
+    assert jobs(lambda: iterative.snap_eager(shuffled())) == 2
+    cached = shuffled()
+    try:
+        assert jobs(cached.cache) == 0
+    finally:
+        cached.unpersist()
+
+
 def test_env_var_sets_spark_checkpoint_dir(monkeypatch):
     """``SPARK_GRAFT_CHECKPOINT_DIR`` reaches Spark as
     ``spark.checkpoint.dir`` at session build, and nothing sets it

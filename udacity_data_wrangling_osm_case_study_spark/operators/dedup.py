@@ -65,12 +65,10 @@ def pair_endpoints(pairs: DataFrame, out_col: str = "id") -> DataFrame:
     )
 
 
-def exact_duplicate_groups(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def exact_duplicate_groups(df: DataFrame) -> DataFrame:
     """Exact dedup: group by content hash; keeper = min id per group."""
     return (
-        df.select(F.col(id_col).alias("id"), content_fingerprint(F.col(text_col)).alias("fp"))
+        df.select(F.col("doc_id").alias("id"), content_fingerprint(F.col("text")).alias("fp"))
         .groupBy("fp")
         .agg(
             F.min("id").alias("keeper_id"),
@@ -102,7 +100,6 @@ def cap_shingle_df(shingles: DataFrame, max_df: int) -> DataFrame:
 
 def word_shingles(
     df: DataFrame,
-    id_col: str = "doc_id",
     text_col: str = "text",
     n: int = 3,
     max_shingle_df: int | None = None,
@@ -133,7 +130,7 @@ def word_shingles(
         F.col(text_col) if pre_normalized else normalize_text(F.col(text_col))
     )
     base = df.select(
-        F.col(id_col).alias("id"),
+        F.col("doc_id").alias("id"),
         F.split(norm_col, " ").alias("toks"),
     )
     tokens = F.col("toks")
@@ -397,13 +394,15 @@ def shingle_hash():
     return F.conv(F.substring(F.md5("shingle"), 1, 15), 16, 10).cast("long")
 
 
+# Shingling and banding of the persisted near-dup index, written to its
+# meta.json (the defaults of word_shingles, minhash_signatures and
+# lsh_bands).
+_INDEX_CONFIG = {"num_hashes": 8, "rows_per_band": 2, "n": 3, "max_shingle_df": None}
+
+
 def build_dedup_index(
     docs: DataFrame,
     index_dir: str,
-    num_hashes: int = 8,
-    rows_per_band: int = 2,
-    n: int = 3,
-    max_shingle_df: int | None = None,
 ) -> None:
     """Persist the near-dup index of a curated corpus as a build-once
     artifact, so each new ingest batch is deduplicated against the
@@ -450,11 +449,17 @@ def build_dedup_index(
 
     index_dir = index_dir.rstrip("/")
     stage = f"{index_dir}.stage-{uuid.uuid4().hex[:12]}"
-    sh = word_shingles(docs, n=n, max_shingle_df=max_shingle_df)
+    sh = word_shingles(docs)
     sh = sh.persist()
     try:
-        _write_index_batch(sh, stage, "base", num_hashes, rows_per_band,
-                           overwrite_mode="static")
+        _write_index_batch(
+            sh,
+            stage,
+            "base",
+            _INDEX_CONFIG["num_hashes"],
+            _INDEX_CONFIG["rows_per_band"],
+            overwrite_mode="static",
+        )
     finally:
         sh.unpersist()
     # Persist the build configuration beside the relations: appends and
@@ -462,15 +467,7 @@ def build_dedup_index(
     # index partitions become mutually inconsistent (asymmetric
     # postings corrupt Jaccard; mismatched bands miss candidates).
     with open(os.path.join(stage, "meta.json"), "w") as f:
-        json.dump(
-            {
-                "num_hashes": num_hashes,
-                "rows_per_band": rows_per_band,
-                "n": n,
-                "max_shingle_df": max_shingle_df,
-            },
-            f,
-        )
+        json.dump(_INDEX_CONFIG, f)
     try:
         # fast path: target absent — one atomic rename publishes
         os.rename(stage, index_dir)
@@ -575,9 +572,6 @@ def dedup_index_append(
 def incremental_near_dupes(
     new_docs: DataFrame,
     index_dir: str,
-    num_hashes: int | None = None,
-    rows_per_band: int | None = None,
-    n: int | None = None,
     min_jaccard: float = 0.5,
     materialize: bool = False,
 ) -> DataFrame:
@@ -599,18 +593,13 @@ def incremental_near_dupes(
     lazy/inspectable; its caches live until the next catalog clear.
     """
     spark = new_docs.sparkSession
-    # Probe parameters default to the index's persisted build config —
+    # Probe parameters are the index's persisted build config —
     # shingling the batch differently than the corpus was shingled
     # would silently miss candidates / skew Jaccard.
     meta = read_index_meta(index_dir)
-    num_hashes = num_hashes if num_hashes is not None else meta.get("num_hashes", 8)
-    rows_per_band = (
-        rows_per_band if rows_per_band is not None else meta.get("rows_per_band", 2)
-    )
-    n = n if n is not None else meta.get("n", 3)
-    sh_new = word_shingles(new_docs, n=n).persist()
-    sigs = minhash_signatures(sh_new, num_hashes)
-    bands_new = lsh_bands(sigs, rows_per_band)
+    sh_new = word_shingles(new_docs, n=meta.get("n", 3)).persist()
+    sigs = minhash_signatures(sh_new, meta.get("num_hashes", 8))
+    bands_new = lsh_bands(sigs, meta.get("rows_per_band", 2))
     # Inference-or-empty read-backs: an index built from an EMPTY
     # corpus has no part files, and inference would fail where an
     # empty index is a valid state (nothing to dedup against); with
@@ -678,9 +667,7 @@ def incremental_near_dupes(
     return scored
 
 
-def simhash64(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def simhash64(df: DataFrame) -> DataFrame:
     """64-bit SimHash per doc: majority vote per bit of each token's
     md5 prefix (16 hex digits × 4 bits) across all token occurrences.
 
@@ -697,8 +684,8 @@ def simhash64(
     (:func:`simhash_near_pairs`).
     """
     toks = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("tok"),
+        F.col("doc_id").alias("id"),
+        F.explode(F.split(normalize_text(F.col("text")), " ")).alias("tok"),
     )
     return simhash64_from_tokens(toks)
 
@@ -811,13 +798,9 @@ def simhash_near_pairs(
     )
 
 
-def normalized_vectors(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str | None = "label",
-) -> DataFrame:
-    """(id, blk, u): unit-normalized double vectors, MATERIALIZED.
+def normalized_vectors(df: DataFrame) -> DataFrame:
+    """(id, blk, u): unit-normalized double vectors blocked on
+    ``label``, MATERIALIZED.
 
     The normalization is linear work and must stay linear: left lazy,
     Catalyst inlines the projection above the pair self-join and
@@ -826,11 +809,9 @@ def normalized_vectors(
     storage is released by the context cleaner when the frame drops out
     of scope.
     """
-    v = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    v = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     base = df.select(
-        F.col(id_col).alias("id"),
-        v.alias("v"),
-        *( [F.col(block_col).alias("blk")] if block_col else [F.lit(0).alias("blk")] ),
+        F.col("vec_id").alias("id"), v.alias("v"), F.col("label").alias("blk")
     )
     # Materialize the norm in its own projection: captured inside the
     # transform lambda the O(d) fold would re-run per vector element.
@@ -857,13 +838,10 @@ def normalized_vectors(
 def embedding_near_duplicates(
     df: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    block_col: str | None = "label",
 ) -> DataFrame:
     """Near-dup pairs by cosine similarity, blocked to avoid the full
-    cross product. ``block_col`` is the blocking key (at scale: an LSH
-    bucket or coarse-quantizer cell; here the label column).
+    cross product. The blocking key is the ``label`` column (at scale:
+    an LSH bucket or coarse-quantizer cell).
 
     Vectors are unit-normalized and MATERIALIZED before the self-join
     (:func:`normalized_vectors`), so per pair only the sequential-fold
@@ -878,7 +856,7 @@ def embedding_near_duplicates(
 
     Output: (id_a, id_b, cosine) with cosine rounded to 4dp.
     """
-    base = normalized_vectors(df, id_col=id_col, vec_col=vec_col, block_col=block_col)
+    base = normalized_vectors(df)
     a = base.select(F.col("id").alias("id_a"), F.col("u").alias("ua"), "blk")
     b = base.select(F.col("id").alias("id_b"), F.col("u").alias("ub"), "blk")
     dot = F.aggregate(
@@ -1004,34 +982,35 @@ def connected_components(pairs: DataFrame) -> DataFrame:
     )
 
 
-def contamination_report(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    benchmark_mod: int = 11,
-    n: int = 5,
-) -> DataFrame:
+# Benchmark stand-in shared by the two contamination reports: docs with
+# ``id % 11 == 0`` are "the eval set"; overlap is a shared 5-token
+# shingle.
+_BENCH_MOD = 11
+_BENCH_NGRAM = 5
+
+
+def contamination_report(df: DataFrame) -> DataFrame:
     """Benchmark-contamination detection: which corpus docs share a
     word n-gram with the held-out benchmark set, and how much.
 
     The decontamination step of a training-data pipeline: a doc whose
     text overlaps an eval benchmark must be dropped before training.
-    Benchmark membership here is ``id % benchmark_mod == 0`` (a stand-in
-    for "the eval set"); overlap is any shared n-token shingle.
+    Benchmark membership here is ``id % 11 == 0`` (a stand-in for "the
+    eval set"); overlap is any shared 5-token shingle.
 
     Scale shape: shingles are md5-hashed so the join key is a fixed
-    16-byte value regardless of n; the benchmark side (eval sets are
+    16-byte value; the benchmark side (eval sets are
     thousands of prompts, the corpus is billions of docs) is broadcast,
     making the probe a map-side BroadcastHashJoin — zero shuffle on the
     corpus side; only the tiny per-doc aggregate shuffles.
     """
-    sh = word_shingles(df, id_col=id_col, text_col=text_col, n=n).select(
+    sh = word_shingles(df, n=_BENCH_NGRAM).select(
         "id", F.md5("shingle").alias("gram")
     )
-    bench = sh.filter(F.col("id") % benchmark_mod == 0).select(
+    bench = sh.filter(F.col("id") % _BENCH_MOD == 0).select(
         F.col("id").alias("bench_id"), "gram"
     )
-    corpus = sh.filter(F.col("id") % benchmark_mod != 0)
+    corpus = sh.filter(F.col("id") % _BENCH_MOD != 0)
     return (
         corpus.join(F.broadcast(bench), "gram")
         .groupBy("id")
@@ -1160,8 +1139,6 @@ def doc_segments(
 
 def segment_dedup(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     segment_tokens: int = 20,
 ) -> DataFrame:
     """Segment-level exact dedup with in-place reassembly.
@@ -1190,7 +1167,7 @@ def segment_dedup(
     skew-safe by construction.
     """
     exploded = doc_segments(
-        df.select(id_col, text_col), id_col, text_col, segment_tokens
+        df.select("doc_id", "text"), "doc_id", "text", segment_tokens
     ).withColumn(
         # One sortable scalar (doc, segment) key: min() is then a plain
         # map-side-combinable aggregate in both engines (struct-min is
@@ -1228,14 +1205,12 @@ def segment_dedup(
                 )
             ).alias("clean_hash"),
         )
-        .withColumnRenamed("id", id_col)
+        .withColumnRenamed("id", "doc_id")
     )
 
 
 def duplicated_span_share(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n: int = 5,
 ) -> DataFrame:
     """Inter-document duplicated-span mass per document.
@@ -1260,8 +1235,8 @@ def duplicated_span_share(
     docs is a hot groupBy key carrying only a count, and the semi-join
     fans out one flag per occurrence — skew-safe.
     """
-    toks = F.split(normalize_text(F.col(text_col)), " ")
-    base = df.select(F.col(id_col).alias("id"), toks.alias("toks"))
+    toks = F.split(normalize_text(F.col("text")), " ")
+    base = df.select(F.col("doc_id").alias("id"), toks.alias("toks"))
     starts = F.sequence(F.lit(1), F.greatest(F.size("toks") - (n - 1), F.lit(0)))
     grams = (
         base.filter(F.size("toks") >= n)
@@ -1308,7 +1283,7 @@ def duplicated_span_share(
         base.select("id", F.size("toks").cast("long").alias("n_tokens"))
         .join(covered, "id", "left")
         .select(
-            F.col("id").alias(id_col),
+            F.col("id").alias("doc_id"),
             "n_tokens",
             F.expr("coalesce(covered, 0) * 10000 DIV n_tokens").alias(
                 "dup_span_bp"
@@ -1321,8 +1296,6 @@ def semantic_dedup(
     df: DataFrame,
     centroids: DataFrame,
     threshold_bp: int = 4000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """SemDeDup-style semantic deduplication (Abbas et al. 2023,
     arXiv:2303.09540): coarse-quantize the embedding space with
@@ -1350,10 +1323,10 @@ def semantic_dedup(
     """
     from udacity_data_wrangling_osm_case_study_spark.operators import similarity
 
-    assign = similarity.kmeans_assign(df, centroids, id_col=id_col, vec_col=vec_col)
+    assign = similarity.kmeans_assign(df, centroids)
     vecs = df.select(
-        F.col(id_col).alias("id"),
-        similarity.as_double_vec(F.col(vec_col)).alias("v"),
+        F.col("vec_id").alias("id"),
+        similarity.as_double_vec(F.col("embedding")).alias("v"),
     ).join(assign.select("id", "cell"), "id")
     pairs = embedding_near_duplicates_arrow(
         vecs, threshold_bp=threshold_bp, id_col="id", vec_col="v", block_col="cell"
@@ -1579,43 +1552,39 @@ def containment_pairs(
     )
 
 
-def bloom_prefilter_report(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    benchmark_mod: int = 11,
-    n: int = 5,
-    m_bits: int = 8192,
-    k_hashes: int = 4,
-) -> DataFrame:
+_BLOOM_BITS = 8192
+_BLOOM_HASHES = 4
+
+
+def bloom_prefilter_report(df: DataFrame) -> DataFrame:
     """Bloom-filter prefilter for benchmark decontamination, built from
     engine-portable primitives (md5 positions + bit_or words — no
     engine-private sketch types, so the whole filter is value-checkable
     in ANSI SQL).
 
-    The benchmark's n-grams populate an ``m_bits`` Bloom bitset
-    (``k_hashes`` seeded md5 positions per gram, OR-reduced into 32-bit
-    words); the corpus probe is then a ROW-LOCAL membership test — the
-    bitset rides to every task as a one-row broadcast array, each
-    corpus gram checks its k positions with a ``forall`` over a map
-    lookup, and no corpus row ever shuffles for candidate generation.
-    That is the 100 TB posture: the exact-join contamination check
-    (:func:`contamination_report`) broadcasts every benchmark gram
-    (16 bytes × |grams|); the Bloom prefilter broadcasts ``m_bits/8``
-    bytes TOTAL regardless of benchmark size and pays for it with a
-    measurable, tunable false-positive rate — the report quantifies
+    The benchmark's 5-grams (the :func:`contamination_report` stand-in)
+    populate an 8192-bit Bloom bitset (4 seeded md5 positions per gram,
+    OR-reduced into 32-bit words); the corpus probe is then a ROW-LOCAL
+    membership test — the bitset rides to every task as a one-row
+    broadcast array, each corpus gram checks its 4 positions with a
+    ``forall`` over a map lookup, and no corpus row ever shuffles for
+    candidate generation. That is the 100 TB posture: the exact-join
+    contamination check (:func:`contamination_report`) broadcasts every
+    benchmark gram (16 bytes × |grams|); the Bloom prefilter broadcasts
+    1 KiB TOTAL regardless of benchmark size and pays for it with a
+    measurable false-positive rate — the report quantifies
     exactly that trade (per-doc candidates vs exact hits vs false
     positives). No false negatives by construction.
     """
-    sh = word_shingles(df, id_col=id_col, text_col=text_col, n=n).select(
+    sh = word_shingles(df, n=_BENCH_NGRAM).select(
         "id", F.md5("shingle").alias("gram")
     )
-    bench = sh.filter(F.col("id") % benchmark_mod == 0)
-    corpus = sh.filter(F.col("id") % benchmark_mod != 0)
+    bench = sh.filter(F.col("id") % _BENCH_MOD == 0)
+    corpus = sh.filter(F.col("id") % _BENCH_MOD != 0)
 
     def pos(i, gram_col):
         h = F.md5(F.concat(F.lit(f"{i}:"), gram_col))
-        return F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % m_bits
+        return F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % _BLOOM_BITS
 
     # build: distinct benchmark grams → k positions each → 32-bit words
     bits = (
@@ -1623,13 +1592,13 @@ def bloom_prefilter_report(
         .distinct()
         .select(
             F.explode(
-                F.array(*[pos(i, F.col("gram")) for i in range(k_hashes)])
+                F.array(*[pos(i, F.col("gram")) for i in range(_BLOOM_HASHES)])
             ).alias("p")
         )
         .groupBy((F.col("p") / 32).cast("long").alias("w"))
         .agg(F.expr("bit_or(shiftleft(cast(1 as long), cast(p % 32 as int)))").alias("bits"))
     )
-    # one-row broadcast bank: word → bits map (m_bits/32 entries)
+    # one-row broadcast bank: word → bits map (256 entries)
     bank = bits.agg(
         F.map_from_entries(F.collect_list(F.struct("w", "bits"))).alias("bloom")
     )
@@ -1639,8 +1608,8 @@ def bloom_prefilter_report(
     # any int expression)
     ps_sql = "array(" + ", ".join(
         f"cast(conv(substring(md5(concat('{i}:', gram)), 1, 8), 16, 10)"
-        f" as bigint) % {m_bits}"
-        for i in range(k_hashes)
+        f" as bigint) % {_BLOOM_BITS}"
+        for i in range(_BLOOM_HASHES)
     ) + ")"
     hit_sql = (
         "forall(_ps, p -> (coalesce(element_at(bloom, p div 32),"

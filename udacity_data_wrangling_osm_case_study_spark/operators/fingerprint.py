@@ -43,8 +43,6 @@ HASH_MOD = 2_147_483_647
 
 def winnow_fingerprints(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 8,
     w: int = 4,
 ) -> DataFrame:
@@ -57,8 +55,8 @@ def winnow_fingerprints(
     grams (shorter than ``k`` chars) has an empty fingerprint set.
     """
     base = df.select(
-        F.col(id_col).alias("id"),
-        normalize_text(F.col(text_col)).alias("t"),
+        F.col("doc_id").alias("id"),
+        normalize_text(F.col("text")).alias("t"),
     )
     n_grams = F.greatest(F.length("t") - (k - 1), F.lit(0))
     empty = F.array().cast("array<long>")

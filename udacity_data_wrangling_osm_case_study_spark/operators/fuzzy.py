@@ -34,14 +34,13 @@ from pyspark.sql import functions as F
 def deletion1_candidates(
     left: DataFrame,
     right: DataFrame,
-    left_name: str = "tname",
-    right_name: str = "cname",
     prefix_len: int = 4,
 ) -> DataFrame:
     """Candidate pairs covering every single-deletion typo among names
-    of length ≥ 2 × ``prefix_len``: the union of (prefix-k, ±1 length)
-    and (suffix-k, ±1 length) blocked joins. Output: all columns of
-    both inputs, distinct pairs."""
+    (``left.tname``, ``right.cname``) of length ≥ 2 × ``prefix_len``:
+    the union of (prefix-k, ±1 length) and (suffix-k, ±1 length)
+    blocked joins. Output: all columns of both inputs, distinct
+    pairs."""
 
     def keyed(df, name_col, fkey, lkey):
         return df.withColumn(
@@ -50,9 +49,9 @@ def deletion1_candidates(
             lkey, F.expr(f"substring({name_col}, -{prefix_len}, {prefix_len})")
         )
 
-    lb = keyed(left, left_name, "_lf", "_ll")
-    rb = keyed(right, right_name, "_rf", "_rl")
-    band = F.abs(F.length(left_name) - F.length(right_name)) <= 1
+    lb = keyed(left, "tname", "_lf", "_ll")
+    rb = keyed(right, "cname", "_rf", "_rl")
+    band = F.abs(F.length("tname") - F.length("cname")) <= 1
     first_block = lb.join(rb, (F.col("_lf") == F.col("_rf")) & band)
     last_block = lb.join(rb, (F.col("_ll") == F.col("_rl")) & band)
     drop = ["_lf", "_ll", "_rf", "_rl"]
@@ -62,8 +61,6 @@ def deletion1_candidates(
 def fuzzy_match_pairs(
     left: DataFrame,
     right: DataFrame,
-    left_name: str = "tname",
-    right_name: str = "cname",
     max_distance: int = 1,
     prefix_len: int = 4,
 ) -> DataFrame:
@@ -71,6 +68,6 @@ def fuzzy_match_pairs(
     verified with exact Levenshtein ≤ ``max_distance``. Adds ``lev``.
     Completeness requires names ≥ 2 × ``prefix_len`` chars (shorter
     names: lower ``prefix_len``)."""
-    cand = deletion1_candidates(left, right, left_name, right_name, prefix_len)
-    lev = F.levenshtein(F.col(left_name), F.col(right_name))
+    cand = deletion1_candidates(left, right, prefix_len)
+    lev = F.levenshtein(F.col("tname"), F.col("cname"))
     return cand.withColumn("lev", lev).filter(F.col("lev") <= max_distance)

@@ -50,9 +50,6 @@ def haversine_m(lat_a, lon_a, lat_b, lon_b):
 def points_within_radius(
     points: DataFrame,
     radius_m: float,
-    id_col: str = "id",
-    lat_col: str = "lat",
-    lon_col: str = "lon",
     ref_lat_deg: float | None = None,
     round_dp: int = 3,
 ) -> DataFrame:
@@ -70,18 +67,18 @@ def points_within_radius(
         # the maximum |lat| seen, aggregated below. For bounded-extent
         # data pass ref_lat_deg explicitly to skip the extra pass.
         ref_lat_deg = (
-            points.agg(F.max(F.abs(F.col(lat_col)))).collect()[0][0] or 0.0
+            points.agg(F.max(F.abs(F.col("lat")))).collect()[0][0] or 0.0
         )
     lat_cell_deg = radius_m / 111_320.0
     lon_cell_deg = radius_m / max(
         111_320.0 * math.cos(math.radians(min(abs(ref_lat_deg), 85.0))), 1e-6
     )
     base = points.select(
-        F.col(id_col).alias("id"),
-        F.col(lat_col).cast("double").alias("lat"),
-        F.col(lon_col).cast("double").alias("lon"),
-        F.floor(F.col(lat_col) / lat_cell_deg).cast("long").alias("cy"),
-        F.floor(F.col(lon_col) / lon_cell_deg).cast("long").alias("cx"),
+        "id",
+        F.col("lat").cast("double").alias("lat"),
+        F.col("lon").cast("double").alias("lon"),
+        F.floor(F.col("lat") / lat_cell_deg).cast("long").alias("cy"),
+        F.floor(F.col("lon") / lon_cell_deg).cast("long").alias("cx"),
     )
     # 9-cell neighborhood explode on the LEFT side only; the right side
     # joins on its exact cell — every near pair shares some probe cell.

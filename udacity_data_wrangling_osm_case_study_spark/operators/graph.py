@@ -448,7 +448,6 @@ def bfs_hops(
 def pagerank(
     edges: DataFrame,
     n_iter: int = 3,
-    damping_pct: int = 85,
 ) -> DataFrame:
     """Integer-exact PageRank over an undirected simple graph.
 
@@ -457,9 +456,9 @@ def pagerank(
     mass). Ranks are micro-units starting at 1,000,000 per vertex;
     each iteration is
 
-        r'(v) = (1 - d)·1e6  +  (d_pct · Σ_{u→v} r(u) div outdeg(u)) div 100
+        r'(v) = 150,000  +  (85 · Σ_{u→v} r(u) div outdeg(u)) div 100
 
-    — all BIGINT arithmetic (div = integer division), so the result is
+    (damping 0.85) — all BIGINT arithmetic (div = integer division), so the result is
     bit-identical in any engine: no float summation order, no libm.
     The standard float formulation differs only by sub-micro rounding.
 
@@ -474,7 +473,8 @@ def pagerank(
     localCheckpoint per round like ``dedup.connected_components``.
 
     Storage lifecycle: the adjacency is localCheckpoint(eager=False)ed
-    — no Spark job runs at call time; the MEMORY_AND_DISK blocks
+    — the call runs only the adjacency's shuffle map stages
+    (``iterative.snap_lazy``); the MEMORY_AND_DISK blocks
     materialize at the caller's first action and live as long as the
     returned frame's lineage is reachable. Dereference the result (or
     everything derived from it) and Spark's ContextCleaner reclaims the
@@ -525,8 +525,8 @@ def pagerank(
     # checkpoint. Partition count: ``_edge_partition_count``.
     parts = _edge_partition_count(edges.sparkSession)
     # eager=False: defer block materialization to the caller's first
-    # action (no hidden job at call time); blocks are reclaimed by the
-    # ContextCleaner once the returned lineage is unreachable.
+    # action (the call runs only the map stages); blocks are reclaimed
+    # by the ContextCleaner once the returned lineage is unreachable.
     adj = (
         sym.repartition(parts, "src")
         .groupBy("src")
@@ -534,7 +534,7 @@ def pagerank(
         .transform(snap_lazy)
     )
     outdeg = adj.select("src", F.size("nb").cast("long").alias("outdeg"))
-    base = F.lit((100 - damping_pct) * 10_000).cast("long")
+    base = F.lit(150_000).cast("long")
     # Carry outdeg INSIDE the rank frame: each superstep then needs one
     # vertex-sized join (adjacency ⋈ ranks) + a row-local explode + one
     # map-side-combinable groupBy + one vertex-sized join to re-attach
@@ -553,7 +553,7 @@ def pagerank(
         ).select(
             F.col("dst").alias("v"),
             "outdeg",
-            (base + F.expr(f"{damping_pct} * s DIV 100")).alias("r"),
+            (base + F.expr("85 * s DIV 100")).alias("r"),
         )
     return ranks.select("v", F.col("r").alias("rank_micro"))
 
@@ -718,8 +718,10 @@ def random_walks(
     ``cur`` via alias-aware output partitioning — the adjacency side
     never re-exchanges); each step's walker frame is likewise lazily
     checkpointed so step i+1 and the union branch both read step i's
-    blocks instead of recomputing the prefix. No job runs at call
-    time; blocks materialize at the caller's first action and are
+    blocks instead of recomputing the prefix. The call runs only the
+    shuffle map stages of the frames it snapshots
+    (``iterative.snap_lazy``); blocks materialize at the caller's first
+    action and are
     reclaimed by the ContextCleaner once the returned lineage is
     unreachable.
 

@@ -64,6 +64,10 @@ def snap_eager(df: DataFrame) -> DataFrame:
 
 
 def snap_lazy(df: DataFrame) -> DataFrame:
-    """Lazy snapshot: no job at call time; the blocks or files are
-    written by the caller's first action."""
+    """Lazy snapshot: the blocks or files are written by the caller's
+    first action. The call itself runs no job for a frame without an
+    exchange; for a shuffled frame it runs the map stages, because
+    planning the physical RDD under AQE executes each exchange. It
+    still saves the materializing job an eager snapshot adds (pinned
+    by ``test_snapshot_jobs_fired_at_call``)."""
     return _snapshot(df, eager=False)

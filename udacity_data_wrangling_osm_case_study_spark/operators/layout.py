@@ -24,11 +24,11 @@ from pyspark.sql import functions as F
 
 
 def write_partitioned(
-    df: DataFrame, path: str, partition_cols: list[str], mode: str = "overwrite"
+    df: DataFrame, path: str, partition_cols: list[str]
 ) -> None:
     """Directory-partitioned parquet: one directory per distinct
     partition-column tuple; readers prune by directory."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
 def write_bucketed(
@@ -36,16 +36,15 @@ def write_bucketed(
     table_name: str,
     bucket_col: str,
     n_buckets: int = 16,
-    sort_col: str | None = None,
-    mode: str = "overwrite",
 ) -> None:
-    """Hash-bucketed (and optionally sorted) catalog table. Joins and
-    aggregations on ``bucket_col`` between tables sharing the layout
-    run shuffle-free."""
-    writer = df.write.mode(mode).bucketBy(n_buckets, bucket_col)
-    if sort_col:
-        writer = writer.sortBy(sort_col)
-    writer.format("parquet").saveAsTable(table_name)
+    """Hash-bucketed catalog table. Joins and aggregations on
+    ``bucket_col`` between tables sharing the layout run shuffle-free."""
+    (
+        df.write.mode("overwrite")
+        .bucketBy(n_buckets, bucket_col)
+        .format("parquet")
+        .saveAsTable(table_name)
+    )
 
 
 def read_table(spark: SparkSession, table_name: str) -> DataFrame:
@@ -68,7 +67,6 @@ def compact_dataset(
     src: str,
     dst: str,
     target_file_bytes: int = 128 * 1024 * 1024,
-    mode: str = "overwrite",
 ) -> int:
     """Small-file compaction: rewrite ``src`` into
     ``ceil(total_bytes / target_file_bytes)`` files at ``dst``.
@@ -90,7 +88,7 @@ def compact_dataset(
     total = dataset_bytes(spark, src)
     n_files = max(1, math.ceil(total / target_file_bytes))
     df = spark.read.parquet(src)
-    df.repartition(n_files).write.mode(mode).parquet(dst)
+    df.repartition(n_files).write.mode("overwrite").parquet(dst)
     return n_files
 
 
@@ -126,7 +124,6 @@ def write_zordered(
     cols: list[str],
     bits: int = 16,
     n_files: int = 8,
-    mode: str = "overwrite",
 ) -> None:
     """Write parquet range-partitioned on the Z-order key of ``cols``:
     ``n_files`` output splits, each covering one compact Z-range, so
@@ -137,7 +134,7 @@ def write_zordered(
         keyed.repartitionByRange(n_files, "_z")
         .sortWithinPartitions("_z")
         .drop("_z")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 

@@ -40,17 +40,17 @@ MEDIA_SCHEMA = (
 FEATURE_SCHEMA = f"media_id bigint, n_bytes int, feature array<double>"
 
 
-def documents_as_media(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def documents_as_media(df: DataFrame) -> DataFrame:
     """Wrap a text column as an opaque binary payload + metadata struct
     (the testdata has no true image bytes; the column type and
     everything downstream is what matters)."""
     # Ingest contract: a media row HAS a payload — NULL text produces
     # no media row (downstream byte loops would otherwise crash on a
     # NULL payload; oracles carry the same IS NOT NULL guard).
-    df = df.filter(F.col(text_col).isNotNull())
-    payload = F.encode(F.col(text_col), "utf-8")
+    df = df.filter(F.col("text").isNotNull())
+    payload = F.encode(F.col("text"), "utf-8")
     return df.select(
-        F.col(id_col).alias("media_id"),
+        F.col("doc_id").alias("media_id"),
         payload.alias("payload"),
         F.lit("application/octet-stream").alias("media_type"),
         F.octet_length(payload).alias("n_bytes"),
@@ -210,7 +210,6 @@ def payload_byte_grams(
     media: DataFrame,
     gram_bytes: int = 4,
     stride_bytes: int = 2,
-    id_col: str = "media_id",
 ) -> DataFrame:
     """Sliding byte n-grams over an opaque binary payload, as an
     (id, tok) frame ready for fingerprinting (``dedup.
@@ -227,7 +226,7 @@ def payload_byte_grams(
     """
     gh, sh = gram_bytes * 2, stride_bytes * 2  # hex chars
     hx = media.select(
-        F.col(id_col).alias("id"), F.hex("payload").alias("hx")
+        F.col("media_id").alias("id"), F.hex("payload").alias("hx")
     ).filter(F.length("hx") >= gh)
     return hx.select(
         "id",

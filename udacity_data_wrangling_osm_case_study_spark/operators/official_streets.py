@@ -22,10 +22,11 @@ form of its name map, kept as the reference the tests compare with.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from udacity_data_wrangling_osm_case_study_spark.functions import names as N
+from udacity_data_wrangling_osm_case_study_spark.sources import osm_xml
 
 
 def clean_official_streets(raw: DataFrame, apply_corrections: bool = True) -> DataFrame:
@@ -110,4 +111,18 @@ def street_dictionary(official: DataFrame) -> DataFrame:
     return entries_sorted.select(
         F.map_from_entries(last_of_run).alias("name_to_idx"),
         F.map_from_entries("_rows").alias("idx_to_name"),
+    )
+
+
+def load_street_dictionary(
+    spark: SparkSession, psi_path: str, apply_corrections: bool = True
+) -> DataFrame:
+    """Read the PSI list at ``psi_path``, clean it
+    (:func:`clean_official_streets`) and return its one-row
+    :func:`street_dictionary` — the ETL's repair dictionary, or with
+    ``apply_corrections=False`` the street audit's."""
+    return street_dictionary(
+        clean_official_streets(
+            osm_xml.read_official_streets_raw(spark, psi_path), apply_corrections
+        )
     )

@@ -23,6 +23,37 @@ from udacity_data_wrangling_osm_case_study_spark.operators import (
 from udacity_data_wrangling_osm_case_study_spark.sources import osm_xml
 
 
+def clean_nodes(raw: DataFrame) -> DataFrame:
+    """The per-node chain: shape, then phone-clean. The result carries
+    the ``_phone_changed`` flag the CDC table reads."""
+    nodes, _ = cleaning.fix_phones_in_tags(shape.shape_elements(raw))
+    return nodes
+
+
+def clean_ways(raw: DataFrame, dictionary: DataFrame) -> DataFrame:
+    """The per-way chain: shape, phone-clean, then repair street names
+    against the one-row ``dictionary``
+    (:func:`official_streets.load_street_dictionary`). The result
+    carries the ``_phone_changed`` and ``_name_changed`` flags."""
+    ways, _ = cleaning.fix_phones_in_tags(shape.shape_elements(raw))
+    ways, _ = street_repair.repair_street_names(ways, dictionary)
+    return ways
+
+
+def node_tables(nodes: DataFrame) -> dict[str, DataFrame]:
+    """The node-side output tables of cleaned nodes."""
+    return {"nodes": shape.shape_nodes(nodes), "nodes_tags": shape.explode_tags(nodes)}
+
+
+def way_tables(ways: DataFrame) -> dict[str, DataFrame]:
+    """The way-side output tables of cleaned ways."""
+    return {
+        "ways": shape.shape_ways(ways),
+        "ways_nodes": shape.shape_way_nodes(ways),
+        "ways_tags": shape.explode_tags(ways),
+    }
+
+
 def build_tables(
     spark: SparkSession,
     osm_path: str,
@@ -94,29 +125,16 @@ def build_tables(
             return spark.read.parquet(f"{stage_dir}/{name}")
         return df.persist(StorageLevel.MEMORY_AND_DISK)
 
-    dictionary = official_streets.street_dictionary(
-        official_streets.clean_official_streets(
-            osm_xml.read_official_streets_raw(spark, psi_path)
-        )
-    )
-    nodes, _ = cleaning.fix_phones_in_tags(
-        shape.shape_elements(osm_xml.read_nodes_raw(spark, osm_path))
-    )
-    ways, _ = cleaning.fix_phones_in_tags(
-        shape.shape_elements(osm_xml.read_ways_raw(spark, osm_path))
-    )
-    ways, _ = street_repair.repair_street_names(ways, dictionary)
-    # The id frames the cleaners return sit before the persist point;
-    # the CDC table reads the flags of the KEPT frames instead, so it
-    # hits the cache (or the staged files) rather than re-cleaning.
+    dictionary = official_streets.load_street_dictionary(spark, psi_path)
+    nodes = clean_nodes(osm_xml.read_nodes_raw(spark, osm_path))
+    ways = clean_ways(osm_xml.read_ways_raw(spark, osm_path), dictionary)
+    # The CDC table reads the flags of the KEPT frames, so it hits the
+    # cache (or the staged files) rather than re-cleaning.
     nodes, ways = _keep(nodes, "nodes"), _keep(ways, "ways")
 
     tables = {
-        "nodes": shape.shape_nodes(nodes),
-        "nodes_tags": shape.explode_tags(nodes),
-        "ways": shape.shape_ways(ways),
-        "ways_nodes": shape.shape_way_nodes(ways),
-        "ways_tags": shape.explode_tags(ways),
+        **node_tables(nodes),
+        **way_tables(ways),
         "update_history": cleaning.update_history(
             cleaning.changed_ids(nodes, "_phone_changed"),
             cleaning.changed_ids(ways, "_phone_changed"),

@@ -8,8 +8,7 @@ function of its key, stable across engines, runs, and repartitioning,
 and trivially auditable (the same SQL reproduces it anywhere).
 
 Bucket = first 8 hex digits of md5(salt || key) mod n_buckets —
-uniform, portable (the same expression runs in any engine with md5),
-and salt-able so different experiments draw independent samples.
+uniform and portable (the same expression runs in any engine with md5).
 """
 
 from __future__ import annotations
@@ -18,18 +17,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def hash_bucket(key: Column, n_buckets: int = 100, salt: str = "") -> Column:
-    """Deterministic uniform bucket in [0, n_buckets) from a key."""
-    h = F.md5(F.concat(F.lit(salt), key.cast("string")))
+def hash_bucket(key: Column, n_buckets: int = 100) -> Column:
+    """Deterministic uniform bucket in [0, n_buckets) from a key, salted
+    ``split``."""
+    h = F.md5(F.concat(F.lit("split"), key.cast("string")))
     return F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % n_buckets
-
-
-def deterministic_sample(
-    df: DataFrame, key_col: str, fraction_pct: int, salt: str = ""
-) -> DataFrame:
-    """Keep rows whose hash bucket falls below ``fraction_pct`` (of
-    100) — a reproducible ~fraction sample keyed on ``key_col``."""
-    return df.filter(hash_bucket(F.col(key_col), 100, salt) < fraction_pct)
 
 
 def per_key_cap(
@@ -65,7 +57,6 @@ def weighted_key_quota(
     key_col: str,
     id_col: str,
     total_target: int,
-    salt: str = "mix",
 ) -> DataFrame:
     """Temperature-balanced corpus mixing (alpha = 0.5, no
     replacement): draw ~``total_target`` rows with per-key quotas
@@ -96,7 +87,7 @@ def weighted_key_quota(
             F.expr(f"CAST({total_target} AS BIGINT) * _w div _sum_w").alias("_quota"),
         )
     )
-    h = F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string")))
+    h = F.md5(F.concat(F.lit("mix"), F.col(id_col).cast("string")))
     win = Window.partitionBy(key_col).orderBy(h, id_col)
     return (
         df.join(F.broadcast(quotas), key_col)
@@ -106,21 +97,14 @@ def weighted_key_quota(
     )
 
 
-def train_val_test_split(
-    df: DataFrame,
-    key_col: str,
-    val_pct: int = 10,
-    test_pct: int = 10,
-    salt: str = "split",
-) -> DataFrame:
-    """Assign a stable split label per row: bucket < test → 'test',
-    next ``val_pct`` → 'val', rest → 'train'. The same document always
-    lands in the same split — the leakage guarantee training pipelines
-    need."""
-    b = hash_bucket(F.col(key_col), 100, salt)
+def train_val_test_split(df: DataFrame, key_col: str) -> DataFrame:
+    """Assign a stable split label per row: bucket < 10 → 'test', next
+    10 → 'val', rest → 'train'. The same document always lands in the
+    same split — the leakage guarantee training pipelines need."""
+    b = hash_bucket(F.col(key_col), 100)
     label = (
-        F.when(b < test_pct, "test")
-        .when(b < test_pct + val_pct, "val")
+        F.when(b < 10, "test")
+        .when(b < 20, "val")
         .otherwise("train")
     )
     return df.withColumn("split", label)
@@ -162,20 +146,19 @@ def stratified_sample_rate(
     strata_cols: list[str],
     id_col: str,
     rate_pct: int,
-    salt: str = "strat",
 ) -> DataFrame:
     """Proportional stratified sampling: keep ``rate_pct`` percent of
     EVERY stratum (floor(n x rate / 100) rows), so the sample preserves
     the strata mix exactly — unlike :func:`per_key_cap` (fixed ceiling,
-    reshapes the mix) or :func:`deterministic_sample` (global rate,
-    per-stratum share only in expectation).
+    reshapes the mix) or a global hash-rate filter (per-stratum share
+    only in expectation).
 
     Selection is the stable md5 draw ranked within the stratum; the
     keep rule is integer cross-multiplied (rank x 100 <= n x rate) so
     the same rows survive in any engine. One shuffle on the strata key;
     the per-stratum count rides the same window (no extra pass).
     """
-    h = F.md5(F.concat(F.lit(salt), F.col(id_col).cast("string")))
+    h = F.md5(F.concat(F.lit("strat"), F.col(id_col).cast("string")))
     w = Window.partitionBy(*strata_cols)
     wo = w.orderBy(h, id_col)
     return (
@@ -189,10 +172,6 @@ def stratified_sample_rate(
 def leakage_safe_split(
     df: DataFrame,
     pairs: DataFrame,
-    id_col: str = "doc_id",
-    val_pct: int = 10,
-    test_pct: int = 10,
-    salt: str = "split",
 ) -> DataFrame:
     """Near-dup-aware train/val/test split: a plain per-document hash
     split leaks whenever two near-duplicate documents land on opposite
@@ -210,11 +189,9 @@ def leakage_safe_split(
     from udacity_data_wrangling_osm_case_study_spark.operators import dedup
 
     comps = dedup.connected_components(pairs)
-    base = df.select(F.col(id_col).alias("id")).join(comps, "id", "left")
+    base = df.select(F.col("doc_id").alias("id")).join(comps, "id", "left")
     labeled = base.select("id", F.coalesce("comp", F.col("id")).alias("comp"))
-    return train_val_test_split(
-        labeled, key_col="comp", val_pct=val_pct, test_pct=test_pct, salt=salt
-    )
+    return train_val_test_split(labeled, key_col="comp")
 
 
 def weighted_bottom_k(
@@ -222,12 +199,11 @@ def weighted_bottom_k(
     id_col: str,
     weight_col: str,
     k: int,
-    salt: str = "wsample",
 ) -> DataFrame:
     """Weight-biased deterministic sample without replacement, in the
     SHAPE of an A-ES bottom-k reservoir (Efraimidis & Spiliopoulou:
     keep the k items with the best priority derived from one uniform
-    draw per item). The priority here is ``md5_48(salt || id) div w``
+    draw per item). The priority here is ``md5_48('wsample' || id) div w``
     on BIGINTs — monotone decreasing in w for a fixed draw, so heavier
     items are selected more often, but NOT distributionally equivalent
     to the proportional u^(1/w) priority (pairwise win probability is
@@ -236,14 +212,14 @@ def weighted_bottom_k(
     in any engine (the float pow formulation rides on libm); use a
     fixed-point u^(1/w) if calibrated proportional inclusion matters.
     One row-local hash + one TakeOrderedAndProject — no global sort, no
-    RNG state; re-salting gives independent samples.
+    RNG state.
 
     Returns the k sampled rows as (id, weight, priority), ascending
     priority.
     """
     pr = F.conv(
         F.substring(
-            F.md5(F.concat(F.lit(salt), F.col("id").cast("string"))), 1, 12
+            F.md5(F.concat(F.lit("wsample"), F.col("id").cast("string"))), 1, 12
         ),
         16,
         10,

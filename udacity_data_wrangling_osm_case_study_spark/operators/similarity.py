@@ -96,38 +96,29 @@ def brute_force_topk(
     df: DataFrame,
     query_vec: list[float],
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 4,
 ) -> DataFrame:
     """Exact top-k by cosine to a literal query vector."""
     q = array_literal(query_vec)
-    v = as_double_vec(F.col(vec_col))
-    sim = F.round(cosine(v, q), round_dp)
+    v = as_double_vec(F.col("embedding"))
+    sim = F.round(cosine(v, q), 4)
     return (
-        df.select(F.col(id_col).alias("id"), sim.alias("cosine"))
+        df.select(F.col("vec_id").alias("id"), sim.alias("cosine"))
         .orderBy(F.desc("cosine"), "id")
         .limit(k)
     )
 
 
-def label_centroids(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "label",
-    round_dp: int = 6,
-) -> DataFrame:
+def label_centroids(df: DataFrame) -> DataFrame:
     """Per-cell mean vector, via posexplode + per-dimension average.
 
-    Rounded to ``round_dp`` so the centroid is stable across engines
+    Rounded to 6 decimals so the centroid is stable across engines
     (float-sum association). Output: (cell, centroid array<double>).
     """
     comps = df.select(
-        F.col(cell_col).alias("cell"), F.posexplode(as_double_vec(F.col(vec_col))).alias("pos", "x")
+        F.col("label").alias("cell"), F.posexplode(as_double_vec(F.col("embedding"))).alias("pos", "x")
     )
     per_dim = comps.groupBy("cell", "pos").agg(
-        F.round(F.sum("x") / F.count("*"), round_dp).alias("m")
+        F.round(F.sum("x") / F.count("*"), 6).alias("m")
     )
     return per_dim.groupBy("cell").agg(
         F.transform(
@@ -139,9 +130,6 @@ def label_centroids(
 def build_ivf_index(
     df: DataFrame,
     index_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "label",
 ) -> None:
     """Build the IVF index as a PERSISTED artifact (an ANN index is
     built once and queried many times — recomputing the coarse
@@ -154,13 +142,13 @@ def build_ivf_index(
       those cells' files — partition pruning in the scan, the on-disk
       analog of a Faiss inverted list.
     """
-    cents = label_centroids(df, id_col, vec_col, cell_col)
+    cents = label_centroids(df)
     cents.write.mode("overwrite").parquet(f"{index_dir}/centroids")
     (
         df.select(
-            F.col(cell_col).alias("cell"),
-            F.col(id_col).alias("id"),
-            as_double_vec(F.col(vec_col)).alias("v"),
+            F.col("label").alias("cell"),
+            F.col("vec_id").alias("id"),
+            as_double_vec(F.col("embedding")).alias("v"),
             F.lit("base").alias("batch_id"),
         )
         .write.mode("overwrite")
@@ -179,7 +167,6 @@ def ivf_topk_indexed(
     query_vec: list[float],
     k: int = 10,
     n_probe: int = 3,
-    round_dp: int = 4,
 ) -> DataFrame:
     """ANN top-k against a persisted :func:`build_ivf_index` artifact.
 
@@ -196,7 +183,7 @@ def ivf_topk_indexed(
     probed = [
         r.cell
         for r in (
-            cents.withColumn("csim", F.round(cosine(F.col("centroid"), q), round_dp))
+            cents.withColumn("csim", F.round(cosine(F.col("centroid"), q), 4))
             .orderBy(F.desc("csim"), "cell")
             .limit(n_probe)
             .select("cell")
@@ -208,7 +195,7 @@ def ivf_topk_indexed(
         f"{index_dir}/vectors",
         "id bigint, v array<double>, cell int, batch_id string",
     ).filter(F.col("cell").isin(probed))
-    sim = F.round(cosine(F.col("v"), q), round_dp)
+    sim = F.round(cosine(F.col("v"), q), 4)
     return (
         vecs.select("id", sim.alias("cosine"))
         .orderBy(F.desc("cosine"), "id")
@@ -221,27 +208,23 @@ def ivf_topk(
     query_vec: list[float],
     k: int = 10,
     n_probe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "label",
-    round_dp: int = 4,
 ) -> DataFrame:
     """IVF-style ANN: rank cells by centroid cosine, search only the
     ``n_probe`` best cells, exact cosine within them. Index-free
     variant (quantizer recomputed per call) — for repeated queries use
     :func:`build_ivf_index` + :func:`ivf_topk_indexed`."""
     q = array_literal(query_vec)
-    cents = label_centroids(df, id_col, vec_col, cell_col)
+    cents = label_centroids(df)
     probed = (
-        cents.withColumn("csim", F.round(cosine(F.col("centroid"), q), round_dp))
+        cents.withColumn("csim", F.round(cosine(F.col("centroid"), q), 4))
         .orderBy(F.desc("csim"), "cell")
         .limit(n_probe)
         .select("cell")
     )
-    v = as_double_vec(F.col(vec_col))
-    sim = F.round(cosine(v, q), round_dp)
+    v = as_double_vec(F.col("embedding"))
+    sim = F.round(cosine(v, q), 4)
     scored = df.select(
-        F.col(cell_col).alias("cell"), F.col(id_col).alias("id"), sim.alias("cosine")
+        F.col("label").alias("cell"), F.col("vec_id").alias("id"), sim.alias("cosine")
     )
     return (
         scored.join(F.broadcast(probed), "cell", "left_semi")
@@ -251,12 +234,7 @@ def ivf_topk(
     )
 
 
-def kmeans_assign(
-    df: DataFrame,
-    centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def kmeans_assign(df: DataFrame, centroids: DataFrame) -> DataFrame:
     """Assign every vector to its nearest centroid by cosine:
     (id, cell, cos_bp).
 
@@ -273,8 +251,8 @@ def kmeans_assign(
     bank = centroids.groupBy().agg(
         F.collect_list(F.struct("cell", "centroid")).alias("bank")
     )
-    v = as_double_vec(F.col(vec_col))
-    wide = df.select(F.col(id_col).alias("id"), v.alias("v")).crossJoin(
+    v = as_double_vec(F.col("embedding"))
+    wide = df.select(F.col("vec_id").alias("id"), v.alias("v")).crossJoin(
         F.broadcast(bank)
     )
     scored = F.transform(
@@ -296,9 +274,6 @@ def kmeans_assign(
 def lloyd_step(
     df: DataFrame,
     centroids: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 6,
 ) -> DataFrame:
     """One k-means (Lloyd) iteration: assign to nearest centroid, then
     recompute each cell's mean vector. Returns the new (cell, centroid)
@@ -309,13 +284,13 @@ def lloyd_step(
     (vector id / (cell, dim)); the centroid set itself stays
     broadcast-sized. This is the standard distributed k-means cost.
     """
-    assigned = kmeans_assign(df, centroids, id_col, vec_col)
-    with_cell = df.join(assigned.select("id", "cell"), F.col(id_col) == F.col("id"))
+    assigned = kmeans_assign(df, centroids)
+    with_cell = df.join(assigned.select("id", "cell"), F.col("vec_id") == F.col("id"))
     comps = with_cell.select(
-        "cell", F.posexplode(as_double_vec(F.col(vec_col))).alias("pos", "x")
+        "cell", F.posexplode(as_double_vec(F.col("embedding"))).alias("pos", "x")
     )
     per_dim = comps.groupBy("cell", "pos").agg(
-        F.round(F.sum("x") / F.count("*"), round_dp).alias("m")
+        F.round(F.sum("x") / F.count("*"), 6).alias("m")
     )
     updated = per_dim.groupBy("cell").agg(
         F.transform(
@@ -338,8 +313,6 @@ def train_quantizer(
     df: DataFrame,
     k: int = 8,
     n_iter: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Train the IVF coarse quantizer: deterministic seeding (the k
     lowest-id vectors — reproducible without RNG state; k-means++ would
@@ -351,24 +324,22 @@ def train_quantizer(
     lesson applied to the other iterative operator in the engine).
     """
     seeds = (
-        df.orderBy(F.col(id_col)).limit(k)
+        df.orderBy(F.col("vec_id")).limit(k)
         .select(
-            F.row_number().over(Window.orderBy(id_col)).alias("rn"),
-            as_double_vec(F.col(vec_col)).alias("centroid"),
+            F.row_number().over(Window.orderBy("vec_id")).alias("rn"),
+            as_double_vec(F.col("embedding")).alias("centroid"),
         )
         .select((F.col("rn") - 1).alias("cell"), "centroid")
     )
     centroids = seeds.transform(snap_eager)
     for _ in range(n_iter):
-        centroids = lloyd_step(df, centroids, id_col, vec_col).transform(snap_eager)
+        centroids = lloyd_step(df, centroids).transform(snap_eager)
     return centroids
 
 
 def pq_subvectors(
     df: DataFrame,
     m: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, s, sv): each vector split into ``m`` equal subvectors —
     one explode, row-local.
@@ -377,8 +348,8 @@ def pq_subvectors(
     divisible by ``m`` — the slice width is ``size(v) DIV m``, so a
     remainder would silently leave the trailing ``size(v) % m``
     dimensions out of every codeword and distance."""
-    v = as_double_vec(F.col(vec_col))
-    base = df.select(F.col(id_col).alias("id"), v.alias("v"))
+    v = as_double_vec(F.col("embedding"))
+    base = df.select(F.col("vec_id").alias("id"), v.alias("v"))
     subs = F.array(
         *[
             F.struct(
@@ -399,8 +370,6 @@ def pq_codebooks(
     df: DataFrame,
     m: int = 4,
     ksub: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Deterministic PQ codebooks: subspace ``s``'s codewords are the
     subvectors of the ``ksub`` lowest-id vectors (reproducible seeding,
@@ -410,14 +379,14 @@ def pq_codebooks(
     any id space (1-based, offset, sparse), not just ids 0..ksub-1.
     Output (s, cw, csv), ksub × m rows — always broadcast-sized."""
     seeds = (
-        df.select(F.col(id_col).alias("id"))
+        df.select(F.col("vec_id").alias("id"))
         .orderBy("id")
         .limit(ksub)
         # ksub rows: the rank window is bounded, never corpus-sized.
         .withColumn("cw", F.row_number().over(Window.orderBy("id")) - 1)
     )
     return (
-        pq_subvectors(df, m, id_col, vec_col)
+        pq_subvectors(df, m)
         .join(F.broadcast(seeds), "id")
         .select(F.col("s"), F.col("cw"), F.col("sv").alias("csv"))
     )
@@ -428,8 +397,6 @@ def pq_encode(
     codebooks: DataFrame,
     m: int = 4,
     ksub: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Product-quantization codes: (id, code) with code packing each
     subspace's nearest-codeword id into ``ksub``-ary digits — a dim-D
@@ -441,7 +408,7 @@ def pq_encode(
     engine-portable. The codebook side is broadcast; the corpus side is
     one explode + one groupBy on (id) — no shuffle grows with m·ksub.
     """
-    subs = pq_subvectors(df, m, id_col, vec_col)
+    subs = pq_subvectors(df, m)
     d2 = F.aggregate(
         F.zip_with(F.col("sv"), F.col("csv"), lambda a, b: (a - b) * (a - b)),
         F.lit(0.0),
@@ -533,8 +500,6 @@ def srp_all_signatures(vec, planes: list[list[list[float]]]):
 def srp_buckets(
     df: DataFrame,
     planes: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """(id, t, sig): each vector's bucket in every LSH table.
 
@@ -543,9 +508,9 @@ def srp_buckets(
     the scan; only the candidate join below shuffles, on (t, sig) keys
     whose population is bounded by 2^n_bits per table.
     """
-    v = as_double_vec(F.col(vec_col))
+    v = as_double_vec(F.col("embedding"))
     return df.select(
-        F.col(id_col).alias("id"),
+        F.col("vec_id").alias("id"),
         F.posexplode(srp_all_signatures(v, planes)).alias("t0", "sig"),
     ).select("id", (F.col("t0")).alias("t"), "sig")
 
@@ -554,12 +519,8 @@ def srp_lsh_topk(
     df: DataFrame,
     query_vec: list[float],
     planes: list[list[list[float]]],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    round_dp: int = 4,
 ) -> DataFrame:
-    """ANN top-k: candidates = vectors sharing >= 1 LSH bucket with the
+    """ANN top-10: candidates = vectors sharing >= 1 LSH bucket with the
     query in any table; exact cosine re-rank within the candidates.
 
     The scale shape: the corpus side is bucketed once (reusable across
@@ -575,18 +536,18 @@ def srp_lsh_topk(
         .select(F.col("t0").alias("t"), "sig")
     )
     cand = (
-        srp_buckets(df, planes, id_col, vec_col)
+        srp_buckets(df, planes)
         .join(F.broadcast(qb), ["t", "sig"], "left_semi")
         .select("id")
         .distinct()
     )
-    v = as_double_vec(F.col(vec_col))
-    sim = F.round(cosine(v, q), round_dp)
-    scored = df.select(F.col(id_col).alias("id"), sim.alias("cosine"))
+    v = as_double_vec(F.col("embedding"))
+    sim = F.round(cosine(v, q), 4)
+    scored = df.select(F.col("vec_id").alias("id"), sim.alias("cosine"))
     return (
         scored.join(cand, "id", "left_semi")
         .orderBy(F.desc("cosine"), "id")
-        .limit(k)
+        .limit(10)
     )
 
 
@@ -594,8 +555,6 @@ def ivf_append(
     spark,
     df_new: DataFrame,
     index_dir: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     batch_id: str = "append",
 ) -> None:
     """Index MAINTENANCE: route new vectors into an existing IVF index
@@ -617,9 +576,9 @@ def ivf_append(
     cents = read_parquet_or_empty(
         spark, f"{index_dir}/centroids", "cell int, centroid array<double>"
     )
-    assigned = kmeans_assign(df_new, cents, id_col, vec_col)
+    assigned = kmeans_assign(df_new, cents)
     vecs = df_new.select(
-        F.col(id_col).alias("id"), as_double_vec(F.col(vec_col)).alias("v")
+        F.col("vec_id").alias("id"), as_double_vec(F.col("embedding")).alias("v")
     )
     (
         vecs.join(assigned.select("id", "cell"), "id")
@@ -631,14 +590,14 @@ def ivf_append(
     )
 
 
-def sq_minmax(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
+def sq_minmax(df: DataFrame) -> DataFrame:
     """Per-dimension global (min, max) as two aligned arrays, one row.
 
     The training pass of scalar (int8-style) quantization. min/max are
     order-independent aggregates — no float-association rounding is
     needed for engine portability. Output broadcasts (2 x dim doubles).
     """
-    comps = df.select(F.posexplode(as_double_vec(F.col(vec_col))).alias("pos", "x"))
+    comps = df.select(F.posexplode(as_double_vec(F.col("embedding"))).alias("pos", "x"))
     per_dim = comps.groupBy("pos").agg(F.min("x").alias("mn"), F.max("x").alias("mx"))
     return per_dim.groupBy().agg(
         F.transform(
@@ -653,13 +612,10 @@ def sq_minmax(df: DataFrame, vec_col: str = "embedding") -> DataFrame:
 def sq_encode(
     df: DataFrame,
     stats: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    levels: int = 255,
 ) -> DataFrame:
     """Scalar-quantize each vector to per-dimension integer codes in
-    [0, levels]: ``code_j = round((x_j - min_j) * levels / (max_j -
-    min_j))`` (a constant dimension maps to 0).
+    [0, 255]: ``code_j = round((x_j - min_j) * 255 / (max_j - min_j))``
+    (a constant dimension maps to 0).
 
     The uniform-affine compression arm beside product quantization
     (:func:`pq_encode`): 64 float32 components shrink to 64 bytes with
@@ -668,7 +624,7 @@ def sq_encode(
     the vector column. Output: ``(id, codes array<int>)``.
     """
     wide = df.select(
-        F.col(id_col).alias("id"), as_double_vec(F.col(vec_col)).alias("v")
+        F.col("vec_id").alias("id"), as_double_vec(F.col("embedding")).alias("v")
     ).crossJoin(F.broadcast(stats))
     code = F.transform(
         F.col("v"),
@@ -677,7 +633,7 @@ def sq_encode(
         ).otherwise(
             F.round(
                 (x - F.get(F.col("mins"), i))
-                * levels
+                * 255
                 / (F.get(F.col("maxs"), i) - F.get(F.col("mins"), i))
             ).cast("int")
         ),
@@ -719,8 +675,6 @@ def pq_adc_topk(
     ksub: int = 8,
     k: int = 10,
     shortlist: int = 30,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """PQ search via asymmetric distance computation (ADC — Jégou,
     Douze & Schmid 2011): the query stays a full-precision vector, the
@@ -770,7 +724,7 @@ def pq_adc_topk(
             lambda x: x["d2_micro"],
         ).alias("lut")
     )
-    codes = pq_encode(df, codebooks, m, ksub, id_col, vec_col)
+    codes = pq_encode(df, codebooks, m, ksub)
     adc = " + ".join(
         f"element_at(lut, CAST({s * ksub} + ((code div {ksub ** s}) % {ksub}) + 1 AS INT))"
         for s in range(m)
@@ -783,7 +737,7 @@ def pq_adc_topk(
         .select("id")
     )
     vecs = df.select(
-        F.col(id_col).alias("id"), as_double_vec(F.col(vec_col)).alias("v")
+        F.col("vec_id").alias("id"), as_double_vec(F.col("embedding")).alias("v")
     ).join(approx, "id", "left_semi")
     bp = F.round(cosine(F.col("v"), F.col("q")) * 10000).cast("bigint")
     return (

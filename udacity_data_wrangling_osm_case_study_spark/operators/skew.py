@@ -23,7 +23,6 @@ def salted_join(
     small: DataFrame,
     on: list[str],
     n_salts: int = 16,
-    how: str = "inner",
 ) -> DataFrame:
     """Join ``big`` to ``small`` on ``on`` with an N-way salt.
 
@@ -38,7 +37,7 @@ def salted_join(
     small_salted = small.withColumn(
         "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
     )
-    return big_salted.join(small_salted, on + ["_salt"], how).drop("_salt")
+    return big_salted.join(small_salted, on + ["_salt"], "inner").drop("_salt")
 
 
 def salted_count_distinct(

@@ -44,9 +44,7 @@ from pyspark.sql import functions as F
 from udacity_data_wrangling_osm_case_study_spark.operators.dedup import normalize_text
 
 
-def tokenized(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def tokenized(docs: DataFrame) -> DataFrame:
     """(id, toks, n_tokens) — normalized token array per document.
 
     Materialized in its own projection so downstream higher-order
@@ -54,8 +52,8 @@ def tokenized(
     same pitfall guard as :func:`operators.dedup.word_shingles`.
     """
     return docs.select(
-        F.col(id_col).alias("id"),
-        F.split(normalize_text(F.col(text_col)), " ").alias("toks"),
+        F.col("doc_id").alias("id"),
+        F.split(normalize_text(F.col("text")), " ").alias("toks"),
     ).select("id", "toks", F.size("toks").alias("n_tokens"))
 
 
@@ -151,14 +149,12 @@ def duplicated_spans(
     docs: DataFrame,
     l: int = 50,
     min_count: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """(id, span_start, span_end): maximal corpus-duplicated spans per
     document. ``l`` defaults to the reference's 50-token threshold;
     the registered queries use a smaller L suited to the synthetic
     corpus's ~54-token documents."""
-    base = tokenized(docs, id_col, text_col)
+    base = tokenized(docs)
     return merge_spans(
         duplicated_starts(gram_starts(base, l), min_count), l
     )
@@ -197,12 +193,10 @@ def span_coverage(
     docs: DataFrame,
     l: int = 50,
     min_count: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-document duplicated-span coverage:
     (id, n_tokens, dup_tokens, share_bp)."""
-    base = tokenized(docs, id_col, text_col)
+    base = tokenized(docs)
     return _coverage_report(
         base, duplicated_starts(gram_starts(base, l), min_count), l
     )
@@ -212,8 +206,6 @@ def build_gram_index(
     docs: DataFrame,
     index_dir: str,
     l: int = 50,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> None:
     """Persist the corpus gram census as a build-once artifact —
     ``{index_dir}/grams``: (g, n) occurrence counts of EVERY L-gram —
@@ -237,7 +229,7 @@ def build_gram_index(
     import os
 
     _write_gram_batch(
-        tokenized(docs, id_col, text_col), index_dir, l, "base", "static"
+        tokenized(docs), index_dir, l, "base", "static"
     )
     with open(os.path.join(index_dir, "meta.json"), "w") as f:
         json.dump({"l": l, "key": GRAM_KEY}, f)
@@ -275,8 +267,6 @@ def gram_index_append(
     docs: DataFrame,
     index_dir: str,
     batch_id: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> None:
     """Index MAINTENANCE: record an accepted ingest batch's gram census
     as partition ``batch_id`` so later batches dedup against it too.
@@ -290,7 +280,7 @@ def gram_index_append(
     partitions back to one."""
     meta = read_gram_index_meta(index_dir)
     _write_gram_batch(
-        tokenized(docs, id_col, text_col),
+        tokenized(docs),
         index_dir,
         meta.get("l", 50),
         batch_id,
@@ -302,8 +292,6 @@ def incremental_span_coverage(
     new_docs: DataFrame,
     index_dir: str,
     min_count: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Duplicated-span coverage of an ingest batch measured against a
     :func:`build_gram_index` artifact PLUS the batch itself:
@@ -320,7 +308,7 @@ def incremental_span_coverage(
     (census, merge, share) is batch-sized."""
     spark = new_docs.sparkSession
     l = read_gram_index_meta(index_dir).get("l", 50)
-    base = tokenized(new_docs, id_col, text_col)
+    base = tokenized(new_docs)
     # Inference-or-empty: an index built from an EMPTY corpus has no
     # part files, and schema inference would fail where an empty index
     # is a perfectly valid state (every probe gram is corpus-unseen).
@@ -365,8 +353,6 @@ def build_gram_index_bucketed(
     table_name: str,
     l: int = 50,
     n_buckets: int = 64,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> None:
     """The cluster layout :func:`build_gram_index`'s docstring promises:
     the gram census persisted as a catalog table HASH-BUCKETED (and
@@ -398,7 +384,7 @@ def build_gram_index_bucketed(
     spark = docs.sparkSession
     stage = f"{table_name}_stage_{uuid.uuid4().hex[:12]}"
     census = (
-        gram_starts(tokenized(docs, id_col, text_col), l)
+        gram_starts(tokenized(docs), l)
         .groupBy("g")
         .agg(F.count("*").alias("n"))
     )
@@ -446,46 +432,6 @@ def build_gram_index_bucketed(
             raise
 
 
-def gram_index_append_bucketed(
-    docs: DataFrame,
-    table_name: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> None:
-    """Append an accepted batch's census to the bucketed index (same
-    bucket spec, so the layout guarantee survives appends; probes SUM
-    per-gram counts, so appended rows never need merging with base)."""
-    spark = docs.sparkSession
-    l = _bucketed_gram_l(spark, table_name)
-    bucket_row = next(
-        (
-            r["data_type"]
-            for r in spark.sql(f"DESCRIBE EXTENDED {table_name}").collect()
-            if r["col_name"] == "Num Buckets"
-        ),
-        None,
-    )
-    if bucket_row is None:
-        raise ValueError(
-            f"table {table_name!r} exists but has no bucket spec; "
-            "gram_index_append_bucketed requires an index built by "
-            "build_gram_index_bucketed (hash-bucketed and sorted by g)"
-        )
-    n_buckets = int(bucket_row)
-    census = (
-        gram_starts(tokenized(docs, id_col, text_col), l)
-        .groupBy("g")
-        .agg(F.count("*").alias("n"))
-    )
-    (
-        census.write.mode("append")
-        .bucketBy(n_buckets, "g")
-        .sortBy("g")
-        .format("parquet")
-        .saveAsTable(table_name)
-    )
-
-
 def _bucketed_gram_l(spark, table_name: str) -> int:
     props = {
         r["key"]: r["value"]
@@ -498,8 +444,6 @@ def incremental_span_coverage_bucketed(
     new_docs: DataFrame,
     table_name: str,
     min_count: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """:func:`incremental_span_coverage` against a
     :func:`build_gram_index_bucketed` catalog table — identical
@@ -507,7 +451,7 @@ def incremental_span_coverage_bucketed(
     test)."""
     spark = new_docs.sparkSession
     l = _bucketed_gram_l(spark, table_name)
-    base = tokenized(new_docs, id_col, text_col)
+    base = tokenized(new_docs)
     return _probe_coverage(base, spark.table(table_name), l, min_count)
 
 
@@ -515,8 +459,6 @@ def remove_duplicated_spans(
     docs: DataFrame,
     l: int = 50,
     min_count: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Excise every corpus-duplicated span, emitting cleaned text:
     (id, n_before, n_after, cleaned). The excision is ROW-LOCAL — the
@@ -524,7 +466,7 @@ def remove_duplicated_spans(
     n_tokens/L) and an indexed ``filter`` lambda drops covered tokens —
     so the cleaning pass adds zero shuffles beyond the span detection.
     """
-    base = tokenized(docs, id_col, text_col)
+    base = tokenized(docs)
     spans = (
         merge_spans(duplicated_starts(gram_starts(base, l), min_count), l)
         .groupBy("id")

@@ -149,37 +149,31 @@ def range_join(
 def trailing_spikes(
     windows: DataFrame,
     order_col: str,
-    key_col: str = "event_type",
-    n_col: str = "n",
-    lookback: int = 4,
     num: int = 3,
-    den: int = 1,
 ) -> DataFrame:
     """Time-series anomaly filter shared by the batch ``event_spikes``
-    query and the streaming alert sink: keep windows whose count
-    reaches ``num/den`` times the mean of the previous ``lookback``
-    observed windows of the same key. The comparison is integer
-    cross-multiplied (``den·lookback·n ≥ num·Σprev``) — no float mean,
+    query and the streaming alert sink: keep windows whose count ``n``
+    reaches ``num`` times the mean of the previous 4 observed windows
+    of the same ``event_type``. The comparison is integer
+    cross-multiplied (``4·n ≥ num·Σprev``) — no float mean,
     engine-exact. Requires a full lookback (early windows never
     alert).
 
-    Input is already one row per (key, window) — the trailing frame
-    runs over reduced rows, never raw events. Output adds
+    Input is already one row per (event_type, window) — the trailing
+    frame runs over reduced rows, never raw events. Output adds
     ``trailing`` (the lookback sum).
     """
-    frame = (
-        Window.partitionBy(key_col).orderBy(order_col).rowsBetween(-lookback, -1)
-    )
+    frame = Window.partitionBy("event_type").orderBy(order_col).rowsBetween(-4, -1)
     tr = windows.select(
-        key_col,
+        "event_type",
         order_col,
-        n_col,
-        F.sum(n_col).over(frame).alias("trailing"),
+        "n",
+        F.sum("n").over(frame).alias("trailing"),
         F.count("*").over(frame).alias("_n_prev"),
     )
     return tr.filter(
-        (F.col("_n_prev") == lookback)
-        & (den * lookback * F.col(n_col) >= num * F.col("trailing"))
+        (F.col("_n_prev") == 4)
+        & (4 * F.col("n") >= num * F.col("trailing"))
     ).drop("_n_prev")
 
 
@@ -188,7 +182,6 @@ def resample_locf(
     key: str,
     time_col: str,
     bucket_seconds: int,
-    cnt_col: str = "n_obs",
 ) -> DataFrame:
     """Time-grid resampling with last-observation-carried-forward: for
     each key, a dense grid of ``bucket_seconds`` buckets spanning that
@@ -212,7 +205,7 @@ def resample_locf(
     # caller-visible per-bucket observation aggregates (exact types)
     agg_cols = [c for c in bucketed.columns if c.startswith("agg_")]
     obs = bucketed.groupBy(F.col(key).alias("k"), F.col("_b").alias("b")).agg(
-        F.count("*").alias(cnt_col),
+        F.count("*").alias("n_obs"),
         *[F.sum(c).alias(c) for c in agg_cols],
     )
     spans = bucketed.groupBy(F.col(key).alias("k")).agg(
@@ -227,7 +220,7 @@ def resample_locf(
         .orderBy("b")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    out = filled.withColumn(cnt_col, F.coalesce(F.col(cnt_col), F.lit(0)))
+    out = filled.withColumn("n_obs", F.coalesce(F.col("n_obs"), F.lit(0)))
     for c in agg_cols:
         out = out.withColumn(f"filled_{c}", F.last(c, ignorenulls=True).over(w))
     return out

@@ -39,7 +39,7 @@ def lang_id(col):
     return expr.otherwise(F.lit("und"))
 
 
-def doc_profile(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def doc_profile(df: DataFrame) -> DataFrame:
     """Per-doc analysis frame: tokens, stopword ratio, lang guess,
     quality score, content fingerprint.
 
@@ -52,7 +52,7 @@ def doc_profile(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     over the common denominator 20*n_tokens:
     (10*n_stop + 10*n_tokens - |total_len - 5*n_tokens|) / (20*n_tokens).
     """
-    t = F.col(text_col)
+    t = F.col("text")
     toks = tokens(t)
     n_tok = F.size(toks)
     n_stop = F.size(F.filter(toks, lambda w: w.isin(STOPWORDS)))
@@ -61,7 +61,7 @@ def doc_profile(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
         F.lit(10) * n_stop + F.lit(10) * n_tok - F.abs(total_len - F.lit(5) * n_tok)
     )
     return df.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         n_tok.alias("n_tokens"),
         (n_stop * 10000).cast("long").alias("_stop_num"),
         total_len.alias("_total_len"),
@@ -79,12 +79,7 @@ def doc_profile(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -
     )
 
 
-def hashed_linear_score(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    keep_threshold: int = 1000,
-) -> DataFrame:
+def hashed_linear_score(df: DataFrame) -> DataFrame:
     """Feature-hashed linear classifier over the token bag — the
     fastText / Vowpal-Wabbit shape for model-based quality filtering,
     expressed entirely in codegen column arithmetic.
@@ -103,8 +98,8 @@ def hashed_linear_score(
     """
     # No text, no score: a NULL-text doc has no token bag to hash
     # (the oracle's token unnest drops it for the same reason).
-    base = df.filter(F.col(text_col).isNotNull()).select(
-        F.col(id_col).alias("doc_id"), tokens(F.col(text_col)).alias("toks")
+    base = df.filter(F.col("text").isNotNull()).select(
+        "doc_id", tokens(F.col("text")).alias("toks")
     )
     weights = F.transform(
         F.col("toks"),
@@ -121,22 +116,21 @@ def hashed_linear_score(
         "doc_id",
         "n_tokens",
         F.expr("_sum_w DIV n_tokens").alias("score_milli"),
-        (F.expr("_sum_w DIV n_tokens") >= keep_threshold).alias("keep"),
+        (F.expr("_sum_w DIV n_tokens") >= 1000).alias("keep"),
     )
 
 
-def char_census(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def char_census(df: DataFrame) -> DataFrame:
     """Distinct characters with the first doc they appear in (A3 analog:
     the phone-audit character census, order-preserved via min id)."""
     chars = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(F.regexp_extract_all(F.col(text_col), F.lit("."), 0)).alias("ch"),
+        F.col("doc_id").alias("id"),
+        F.explode(F.regexp_extract_all(F.col("text"), F.lit("."), 0)).alias("ch"),
     )
     return chars.groupBy("ch").agg(F.min("id").alias("first_doc"))
 
 
-def scrub_terms(df: DataFrame, terms: list[str], id_col: str = "doc_id",
-                text_col: str = "text") -> DataFrame:
+def scrub_terms(df: DataFrame, terms: list[str]) -> DataFrame:
     """Denylist-term scrubbing: replace every whole-word occurrence of
     ``terms`` in the normalized text with a redaction token, reporting
     per-doc match counts and the scrubbed-content fingerprint.
@@ -149,18 +143,17 @@ def scrub_terms(df: DataFrame, terms: list[str], id_col: str = "doc_id",
     in Java regex and RE2.
     """
     pattern = r"\b(" + "|".join(terms) + r")\b"
-    norm = normalize_text(F.col(text_col))
+    norm = normalize_text(F.col("text"))
     scrubbed = F.regexp_replace(norm, pattern, "<SCRUB>")
     return df.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         F.regexp_count(norm, F.lit(pattern)).alias("n_scrubbed"),
         F.length(scrubbed).alias("scrubbed_chars"),
         F.md5(scrubbed).alias("scrubbed_fp"),
     )
 
 
-def repetition_profile(df: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text") -> DataFrame:
+def repetition_profile(df: DataFrame) -> DataFrame:
     """Intra-document repetition signals (the Gopher-style quality
     filters): most-frequent-token share and duplicate-bigram share,
     both in basis points.
@@ -172,8 +165,8 @@ def repetition_profile(df: DataFrame, id_col: str = "doc_id",
     O(distinct × n) with interpreted higher-order calls (measured 2.6×
     slower at sf0.1).
     """
-    df = df.filter(F.col(text_col).isNotNull())  # no text, no profile
-    toks = tokens(F.col(text_col))
+    df = df.filter(F.col("text").isNotNull())  # no text, no profile
+    toks = tokens(F.col("text"))
     n = F.size(toks)
     init = F.struct(
         F.lit("").alias("prev"), F.lit(0).alias("cur"), F.lit(0).alias("best")
@@ -192,7 +185,7 @@ def repetition_profile(df: DataFrame, id_col: str = "doc_id",
         lambda a, b: F.concat(a, F.lit(" "), b),
     )
     return df.select(
-        F.col(id_col).alias("doc_id"),
+        "doc_id",
         n.alias("_n"),
         (top_cnt * 10000).cast("long").alias("_top_num"),
         F.size(bigrams).alias("_nbg"),
@@ -206,9 +199,7 @@ def repetition_profile(df: DataFrame, id_col: str = "doc_id",
     )
 
 
-def unigram_surprisal(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def unigram_surprisal(df: DataFrame) -> DataFrame:
     """Corpus-unigram surprisal scoring (CCNet-style LM quality signal).
 
     CCNet/Dolma score documents with a language-model perplexity and
@@ -237,7 +228,7 @@ def unigram_surprisal(
     joins a token-level fact.
     """
     tok = df.select(
-        F.col(id_col).alias("id"), F.explode(tokens(F.col(text_col))).alias("tok")
+        F.col("doc_id").alias("id"), F.explode(tokens(F.col("text"))).alias("tok")
     )
     doc_tok = tok.groupBy("id", "tok").agg(F.count("*").alias("k"))
     vocab = doc_tok.groupBy("tok").agg(F.sum("k").alias("c"))
@@ -256,38 +247,31 @@ def unigram_surprisal(
             F.expr("sum(k * s) * 100 DIV sum(k)").alias("mean_surprisal_centi"),
             F.expr("sum(k * rare) * 10000 DIV sum(k)").alias("rare_bp"),
         )
-        .withColumnRenamed("id", id_col)
+        .withColumnRenamed("id", "doc_id")
     )
 
 
-def subword_vocab(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_len: int = 2,
-    max_len: int = 4,
-    top_k: int = 50,
-) -> DataFrame:
-    """Subword vocabulary induction: top-k character n-grams by
-    corpus frequency — the candidate-mining pass a BPE/WordPiece
+def subword_vocab(df: DataFrame) -> DataFrame:
+    """Subword vocabulary induction: the top 50 character 2- to 4-grams
+    by corpus frequency — the candidate-mining pass a BPE/WordPiece
     trainer starts from (frequency-ranked substrings of the weighted
     word vocabulary).
 
     Scale shape: the corpus collapses to the *distinct-word* vocabulary
     first (one map-side-combinable shuffle; vocab « corpus at web
-    scale), substring generation then explodes words × O(max_len²)
-    grams over that vocab frame only, and the final top-k is a
+    scale), substring generation then explodes each word into its 2- to
+    4-grams over that vocab frame only, and the final top 50 is a
     count-desc orderBy+limit (TakeOrderedAndProject — never a full
     sort). Ties break on the gram string so the cut is deterministic.
     """
     words = (
-        df.select(F.explode(tokens(F.col(text_col))).alias("tok"))
+        df.select(F.explode(tokens(F.col("text"))).alias("tok"))
         .groupBy("tok")
         .agg(F.count("*").alias("cnt"))
     )
     grams = F.flatten(
         F.transform(
-            F.sequence(F.lit(min_len), F.lit(max_len)),
+            F.sequence(F.lit(2), F.lit(4)),
             # Guard: sequence(1, 0) is DESCENDING in Spark ([1, 0]) —
             # a word shorter than l must yield an empty start list.
             lambda l: F.when(
@@ -300,18 +284,16 @@ def subword_vocab(
         )
     )
     return (
-        words.filter(F.length("tok") >= min_len)
+        words.filter(F.length("tok") >= 2)
         .select(F.explode(grams).alias("gram"), "cnt")
         .groupBy("gram")
         .agg(F.sum("cnt").alias("total_count"))
         .orderBy(F.desc("total_count"), "gram")
-        .limit(top_k)
+        .limit(50)
     )
 
 
-def bigram_surprisal(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def bigram_surprisal(df: DataFrame) -> DataFrame:
     """Conditional bigram surprisal (the next step up from
     :func:`unigram_surprisal` toward the KenLM scoring CCNet uses):
     each bigram ``w1 w2`` carries ``-log10(c(w1 w2) / c(w1 ·))`` — how
@@ -335,7 +317,7 @@ def bigram_surprisal(
     otherwise. No token-level fact joins a token-level fact.
     """
     base = df.select(
-        F.col(id_col).alias("id"), tokens(F.col(text_col)).alias("toks")
+        F.col("doc_id").alias("id"), tokens(F.col("text")).alias("toks")
     ).filter(F.size("toks") >= 2)
     bg_list = F.transform(
         F.sequence(F.lit(1), F.size("toks") - 1),
@@ -364,16 +346,13 @@ def bigram_surprisal(
             F.expr("sum(k * s) * 100 DIV sum(k)").alias("mean_cond_surprisal_centi"),
             F.expr("sum(k * novel) * 10000 DIV sum(k)").alias("novel_bp"),
         )
-        .withColumnRenamed("id", id_col)
+        .withColumnRenamed("id", "doc_id")
     )
 
 
 def bpe_train(
     df: DataFrame,
     n_merges: int = 10,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    min_pair_count: int = 2,
     merge_batch: int = 4,
 ):
     """Distributed BPE merge training (Sennrich et al. 2016) — the
@@ -385,8 +364,8 @@ def bpe_train(
     pairs (weighted by word count), merges the most frequent pair
     everywhere (greedy left-to-right within a word, ties broken
     lexicographically so the result is engine- and run-deterministic),
-    and repeats for ``n_merges`` rounds or until no pair reaches
-    ``min_pair_count``.
+    and repeats for ``n_merges`` rounds or until no pair occurs at
+    least twice.
 
     Scale shape: the corpus collapses to the distinct-word vocabulary
     up front (vocab « corpus at web scale) and every round after that
@@ -429,7 +408,7 @@ def bpe_train(
         lambda i: F.col("w").substr(i, F.lit(1)),
     )
     words = (
-        df.select(F.explode(tokens(F.col(text_col))).alias("w"))
+        df.select(F.explode(tokens(F.col("text"))).alias("w"))
         .filter(F.length("w") > 0)
         .groupBy("w")
         .agg(F.count("*").alias("cnt"))
@@ -458,7 +437,7 @@ def bpe_train(
         # — bounded driver metadata, one round-trip per BATCH.
         limit = k + 1
         cand = pairs.orderBy(F.desc("c"), "a", "b").limit(limit).collect()
-        if not cand or cand[0].c < min_pair_count:
+        if not cand or cand[0].c < 2:
             break
         accepted: list = []
         used: set = set()
@@ -495,7 +474,7 @@ def bpe_train(
             stop_c = cand[-1].c
         if len(accepted) > 1:
             floor = max(
-                stop_c if stop_c is not None else 0, min_pair_count - 1
+                stop_c if stop_c is not None else 0, 1
             )
             kept = [r for r in accepted if r.c > floor]
             batch = kept if kept else [accepted[0]]
@@ -536,8 +515,6 @@ def bpe_train(
 def bpe_encode(
     df: DataFrame,
     merges: list[tuple[str, str]],
-    text_col: str = "text",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Apply a trained BPE merge table to NEW text — the serving half
     of ``bpe_train`` (the tokenizer file is a static artifact; encoding
@@ -551,10 +528,10 @@ def bpe_encode(
     broadcasts back onto the corpus — encode cost is ∝ vocab × merges,
     not corpus × merges.
 
-    Returns (id_col, n_words, n_bpe_tokens).
+    Returns (doc_id, n_words, n_bpe_tokens).
     """
     words = (
-        df.select(F.col(id_col), F.explode(tokens(F.col(text_col))).alias("w"))
+        df.select(F.col("doc_id"), F.explode(tokens(F.col("text"))).alias("w"))
         .filter(F.length("w") > 0)
     )
     chars = F.transform(
@@ -581,7 +558,7 @@ def bpe_encode(
     enc = vocab.select("w", F.size("syms").alias("n_sym"))
     return (
         words.join(F.broadcast(enc), "w")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.count("*").cast("bigint").alias("n_words"),
             F.sum("n_sym").cast("bigint").alias("n_bpe_tokens"),
@@ -592,8 +569,6 @@ def bpe_encode(
 def bm25_scores(
     docs: DataFrame,
     terms: list[str],
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """BM25-shaped relevance of every document against a fixed term
     set — (doc_id, n_terms_matched, score_scaled), unsorted. k1=1.2,
@@ -611,8 +586,8 @@ def bm25_scores(
     term. Callers order + truncate (TakeOrderedAndProject)."""
     from udacity_data_wrangling_osm_case_study_spark.operators import dedup
 
-    toks = F.split(dedup.normalize_text(F.col(text_col)), " ")
-    d = docs.select(F.col(id_col).alias("doc_id"), toks.alias("toks"))
+    toks = F.split(dedup.normalize_text(F.col("text")), " ")
+    d = docs.select("doc_id", toks.alias("toks"))
     dl = d.select("doc_id", F.size("toks").alias("n_tokens"))
     stats = dl.agg(
         F.count("*").alias("n_docs"),

@@ -102,20 +102,20 @@ def assert_valid(tables: dict[str, DataFrame]) -> None:
         raise ValueError(f"constraint violations: {detail}")
 
 
-def bucket_digest(df: DataFrame, cols: list, bucket_hex: int = 2) -> DataFrame:
+def bucket_digest(df: DataFrame, cols: list) -> DataFrame:
     """Order-insensitive per-bucket table digest for cross-engine /
     cross-cluster reconciliation (the anti-entropy check a replication
     or migration pipeline runs instead of row-by-row diffing).
 
     Each row is serialized canonically (callers pass integer-exact
     column expressions — cents, not floats), md5-hashed, and routed to
-    one of 16^``bucket_hex`` buckets by its hash prefix; per bucket the
+    one of 256 buckets by its 2-hex-digit hash prefix; per bucket the
     digest is (row count, XOR of the 48-bit hash tail, exact decimal
     SUM of the same) — all order-insensitive, so any partitioning or
     shuffle order produces the identical report, and a single differing
     row flips its bucket's digest. Cost: one map-side hash + one
     groupBy on a tiny key space; the comparison between two tables is
-    then 16^bucket_hex rows, not N.
+    then 256 rows, not N.
 
     XOR alone cancels on duplicate-pair insertions; COUNT+SUM alone
     miss swapped field values that preserve totals — together they are
@@ -130,10 +130,10 @@ def bucket_digest(df: DataFrame, cols: list, bucket_hex: int = 2) -> DataFrame:
     canon = [F.coalesce(F.col(c).cast("string") if isinstance(c, str)
                         else c.cast("string"), sentinel) for c in cols]
     h = F.md5(F.concat_ws("|", *canon))
-    val48 = F.conv(F.substring(h, bucket_hex + 1, 12), 16, 10).cast("long")
+    val48 = F.conv(F.substring(h, 3, 12), 16, 10).cast("long")
     return (
         df.select(
-            F.substring(h, 1, bucket_hex).alias("bucket"),
+            F.substring(h, 1, 2).alias("bucket"),
             val48.alias("_v"),
         )
         .groupBy("bucket")

@@ -52,14 +52,11 @@ def audit_bilingual_street_names(
     official_chi) — the reference's report columns plus the way id and
     the match split into explicit language columns.
     """
-    official = official_streets.clean_official_streets(
-        osm_xml.read_official_streets_raw(spark, psi_path),
-        apply_corrections=False,
+    dictionary = official_streets.load_street_dictionary(
+        spark, psi_path, apply_corrections=False
     )
     ways = shape.shape_elements(osm_xml.read_ways_raw(spark, osm_path))
-    matched = street_repair.match_variants(
-        ways, official_streets.street_dictionary(official)
-    )
+    matched = street_repair.match_variants(ways, dictionary)
     flagged = (F.size("matches") == 1) & (
         (F.col("not_found") > 0) | (F.col("n_variants") < 4)
     )

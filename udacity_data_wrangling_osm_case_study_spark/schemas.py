@@ -152,8 +152,6 @@ UPDATE_HISTORY_SCHEMA = StructType(
 # operators/validation.py flagging the casualties. This matches the
 # reference's own model — it carries everything as strings end-to-end
 # (SURVEY.md §1.2).
-ND_CHILD_LENIENT = StructType([StructField("_ref", StringType(), True)])
-
 OSM_NODE_SCHEMA_LENIENT = StructType(
     [
         StructField(f.name, StringType(), True)
@@ -161,17 +159,6 @@ OSM_NODE_SCHEMA_LENIENT = StructType(
         if f.name != "tag"
     ]
     + [StructField("tag", ArrayType(TAG_CHILD), True)]
-)
-OSM_WAY_SCHEMA_LENIENT = StructType(
-    [
-        StructField(f.name, StringType(), True)
-        for f in OSM_WAY_SCHEMA.fields
-        if f.name not in ("tag", "nd")
-    ]
-    + [
-        StructField("nd", ArrayType(ND_CHILD_LENIENT), True),
-        StructField("tag", ArrayType(TAG_CHILD), True),
-    ]
 )
 
 TESTDATA_TABLES = (

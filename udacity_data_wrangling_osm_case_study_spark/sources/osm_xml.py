@@ -39,12 +39,9 @@ def read_nodes_raw(
     return _read_xml(spark, osm_path, "node", schema)
 
 
-def read_ways_raw(
-    spark: SparkSession, osm_path: str, lenient: bool = False
-) -> DataFrame:
+def read_ways_raw(spark: SparkSession, osm_path: str) -> DataFrame:
     """Raw <way> elements; nd array order is the document order (S1/W1)."""
-    schema = schemas.OSM_WAY_SCHEMA_LENIENT if lenient else schemas.OSM_WAY_SCHEMA
-    return _read_xml(spark, osm_path, "way", schema)
+    return _read_xml(spark, osm_path, "way", schemas.OSM_WAY_SCHEMA)
 
 
 def read_relations_raw(spark: SparkSession, osm_path: str) -> DataFrame:

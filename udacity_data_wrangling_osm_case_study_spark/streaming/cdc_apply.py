@@ -102,7 +102,6 @@ def apply_cdc_stream(
     changes: DataFrame,
     target_dir: str,
     key: str,
-    seq_col: str = "seq",
     tombstone_col: str | None = None,
 ) -> None:
     """Drain a (finite) change stream into the versioned snapshot —
@@ -111,7 +110,7 @@ def apply_cdc_stream(
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         apply_cdc_batch(
-            spark, batch_df, batch_id, target_dir, key, seq_col, tombstone_col
+            spark, batch_df, batch_id, target_dir, key, "seq", tombstone_col
         )
 
     q = (

@@ -43,18 +43,18 @@ from udacity_data_wrangling_osm_case_study_spark.sources.jsonl import (
 DOCS_STREAM_SCHEMA = DOCUMENTS_SCHEMA
 
 
-def read_docs_stream(spark: SparkSession, path: str, max_files_per_trigger: int = 1) -> DataFrame:
+def read_docs_stream(spark: SparkSession, path: str) -> DataFrame:
     """File-source stream of document parquet drops, one file per
-    micro-batch by default (schema pinned — streaming never infers)."""
+    micro-batch (schema pinned — streaming never infers)."""
     return (
         spark.readStream.schema(DOCS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .parquet(path)
     )
 
 
 def read_docs_stream_jsonl(
-    spark: SparkSession, path: str, max_files_per_trigger: int = 1
+    spark: SparkSession, path: str
 ) -> DataFrame:
     """JSONL variant of the document stream — crawl/partner drops land
     as .jsonl shards far more often than parquet; same pinned schema,
@@ -62,7 +62,7 @@ def read_docs_stream_jsonl(
     (intake dedup, quality gate, index append) is source-agnostic."""
     return (
         spark.readStream.schema(DOCS_STREAM_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", 1)
         .json(path)
     )
 
@@ -72,8 +72,6 @@ def intake_batch(
     batch_id: int,
     accepted_dir: str,
     index_dir: str,
-    min_tokens: int = 5,
-    min_jaccard: float = 0.5,
     gram_index_dir: str | None = None,
     max_dup_share_bp: int = 8000,
 ) -> None:
@@ -101,11 +99,11 @@ def intake_batch(
     keepers = base.groupBy("fp").agg(F.min("doc_id").alias("doc_id")).select("doc_id")
     gated = (
         base.join(keepers, "doc_id", "left_semi")
-        .filter(F.col("n_tokens") >= min_tokens)
+        .filter(F.col("n_tokens") >= 5)
         .cache()
     )
     matches = dedup.incremental_near_dupes(
-        gated.select("doc_id", "text"), index_dir, min_jaccard=min_jaccard,
+        gated.select("doc_id", "text"), index_dir,
         # one probe per micro-batch for the stream's lifetime: drop the
         # probe's internal caches as soon as the result is materialized
         materialize=True,
@@ -164,10 +162,7 @@ def start_corpus_intake(
     accepted_dir: str,
     index_dir: str,
     checkpoint_dir: str,
-    min_tokens: int = 5,
-    min_jaccard: float = 0.5,
     gram_index_dir: str | None = None,
-    max_dup_share_bp: int = 8000,
 ):
     """Start the intake stream (availableNow: drain what's there, then
     stop — the replayable-batch trigger used by the parity tests)."""
@@ -176,9 +171,7 @@ def start_corpus_intake(
     def process(batch_df: DataFrame, batch_id: int) -> None:
         intake_batch(
             batch_df, batch_id, accepted_dir, index_dir,
-            min_tokens=min_tokens, min_jaccard=min_jaccard,
             gram_index_dir=gram_index_dir,
-            max_dup_share_bp=max_dup_share_bp,
         )
 
     return (

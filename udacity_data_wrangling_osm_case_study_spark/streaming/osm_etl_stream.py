@@ -32,10 +32,8 @@ from udacity_data_wrangling_osm_case_study_spark import schemas
 from udacity_data_wrangling_osm_case_study_spark.operators import (
     cleaning,
     official_streets,
-    shape,
-    street_repair,
+    pipeline,
 )
-from udacity_data_wrangling_osm_case_study_spark.sources import osm_xml
 
 
 def write_batch_idempotent(df: DataFrame, path: str, batch_key: str) -> None:
@@ -68,18 +66,11 @@ def run_streaming_etl(
     shard_dir: str,
     psi_path: str,
     out_dir: str,
-    available_now: bool = True,
 ) -> None:
     """Stream shards → the 5-table model + CDC, appending parquet.
-
-    ``available_now=True`` drains whatever shards exist and stops
-    (test/backfill mode); False runs continuously.
+    Drains whatever shards exist and stops (``availableNow`` trigger).
     """
-    dictionary = official_streets.street_dictionary(
-        official_streets.clean_official_streets(
-            osm_xml.read_official_streets_raw(spark, psi_path)
-        )
-    ).cache()
+    dictionary = official_streets.load_street_dictionary(spark, psi_path).cache()
     dictionary.count()  # materialize once; broadcast into every batch
 
     nodes_stream = _read_stream(spark, shard_dir, "node", schemas.OSM_NODE_SCHEMA)
@@ -89,10 +80,11 @@ def run_streaming_etl(
         write_batch_idempotent(df, f"{out_dir}/{table}", f"{stream}-{batch_id}")
 
     def process_nodes(batch: DataFrame, batch_id: int) -> None:
-        nodes, phone_ids = cleaning.fix_phones_in_tags(shape.shape_elements(batch))
+        nodes = pipeline.clean_nodes(batch)
+        for table, df in pipeline.node_tables(nodes).items():
+            _write(df, table, batch_id, "n")
+        phone_ids = cleaning.changed_ids(nodes, "_phone_changed")
         empty = phone_ids.limit(0)
-        _write(shape.shape_nodes(nodes), "nodes", batch_id, "n")
-        _write(shape.explode_tags(nodes), "nodes_tags", batch_id, "n")
         _write(
             cleaning.update_history(phone_ids, empty, empty),
             "update_history",
@@ -101,27 +93,27 @@ def run_streaming_etl(
         )
 
     def process_ways(batch: DataFrame, batch_id: int) -> None:
-        ways, phone_ids = cleaning.fix_phones_in_tags(shape.shape_elements(batch))
-        ways, name_ids = street_repair.repair_street_names(ways, dictionary)
-        _write(shape.shape_ways(ways), "ways", batch_id, "w")
-        _write(shape.shape_way_nodes(ways), "ways_nodes", batch_id, "w")
-        _write(shape.explode_tags(ways), "ways_tags", batch_id, "w")
+        ways = pipeline.clean_ways(batch, dictionary)
+        for table, df in pipeline.way_tables(ways).items():
+            _write(df, table, batch_id, "w")
+        phone_ids = cleaning.changed_ids(ways, "_phone_changed")
         _write(
-            cleaning.update_history(phone_ids.limit(0), phone_ids, name_ids),
+            cleaning.update_history(
+                phone_ids.limit(0), phone_ids, cleaning.changed_ids(ways, "_name_changed")
+            ),
             "update_history",
             batch_id,
             "w",
         )
 
-    trigger = {"availableNow": True} if available_now else {}
     queries = [
         nodes_stream.writeStream.foreachBatch(process_nodes)
         .option("checkpointLocation", f"{out_dir}/_ckpt_nodes")
-        .trigger(**trigger)
+        .trigger(availableNow=True)
         .start(),
         ways_stream.writeStream.foreachBatch(process_ways)
         .option("checkpointLocation", f"{out_dir}/_ckpt_ways")
-        .trigger(**trigger)
+        .trigger(availableNow=True)
         .start(),
     ]
     for q in queries:

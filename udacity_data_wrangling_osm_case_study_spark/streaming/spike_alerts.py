@@ -13,8 +13,7 @@ row is emitted exactly once, when the watermark finalizes it) →
    ``operators.temporal.trailing_spikes`` the batch query uses — one
    anomaly definition, two runtimes. Recomputing over the full store
    is simplest-correct (alerts are a pure function of the store); at
-   scale the recompute prunes to each key's last ``lookback + new``
-   windows, since finalized windows are immutable and append-only.
+   scale the recompute prunes to each key's last 4 + new windows, since finalized windows are immutable and append-only.
 
 State posture: the only streaming state is the windowed-count
 aggregation, watermark-bounded; the trailing comparison runs over the
@@ -41,15 +40,12 @@ def spike_alerts_stream(
     events: DataFrame,
     state_dir: str,
     checkpoint_dir: str | None = None,
-    window: str = "5 minutes",
-    watermark: str = "10 minutes",
-    lookback: int = 4,
     num: int = 3,
 ) -> None:
     """Run the alert pipeline over ``events`` until the source drains
     (``availableNow`` trigger); the alert table lands at
     ``{state_dir}/alerts``."""
-    counts = windowed_event_counts(events, window=window, watermark=watermark)
+    counts = windowed_event_counts(events)
 
     def apply(batch_df, batch_id):
         spark = batch_df.sparkSession
@@ -68,7 +64,7 @@ def spike_alerts_stream(
         )
         hist = spark.read.parquet(f"{state_dir}/windows")
         alerts = temporal.trailing_spikes(
-            hist, order_col="window_start", lookback=lookback, num=num
+            hist, order_col="window_start", num=num
         )
         alerts.write.mode("overwrite").parquet(f"{state_dir}/alerts")
 
