@@ -55,18 +55,16 @@ def read_snapshot(spark: SparkSession, target_dir: str) -> DataFrame | None:
     return spark.read.parquet(os.path.join(target_dir, f"v{version}"))
 
 
-def collapse_changes(
-    batch_df: DataFrame, key: str, seq_col: str = "seq"
-) -> DataFrame:
+def collapse_changes(batch_df: DataFrame, key: str) -> DataFrame:
     """Collapse a change batch to the LATEST row per key (highest
-    ``seq_col``) — the within-batch netting rule: a batch that updates
+    ``seq``) — the within-batch netting rule: a batch that updates
     then deletes a key must net out to the delete. Pure function; the
     streaming sink and the batch twin query share it."""
-    w = Window.partitionBy(key).orderBy(F.desc(seq_col))
+    w = Window.partitionBy(key).orderBy(F.desc("seq"))
     return (
         batch_df.withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") == 1)
-        .drop("_rn", seq_col)
+        .drop("_rn", "seq")
     )
 
 
@@ -76,12 +74,11 @@ def apply_cdc_batch(
     batch_id: int,
     target_dir: str,
     key: str,
-    seq_col: str = "seq",
     tombstone_col: str | None = None,
 ) -> None:
     """Merge one change batch into the snapshot (the foreachBatch body,
     callable directly for tests/backfills)."""
-    latest = collapse_changes(batch_df, key, seq_col)
+    latest = collapse_changes(batch_df, key)
     target = read_snapshot(spark, target_dir)
     if target is None:
         # First batch: an empty snapshot with the change-row schema
@@ -110,7 +107,7 @@ def apply_cdc_stream(
 
     def _apply(batch_df: DataFrame, batch_id: int) -> None:
         apply_cdc_batch(
-            spark, batch_df, batch_id, target_dir, key, "seq", tombstone_col
+            spark, batch_df, batch_id, target_dir, key, tombstone_col
         )
 
     q = (
