@@ -430,10 +430,11 @@ def test_every_defaulted_parameter_is_passed_somewhere():
                 if d is not None:
                     params[arg.arg] = None
 
-    names = "|".join(n for n, ps in defaulted.items() if ps)
     passed = set()
     for text in texts.values():
-        for m in re.finditer(rf"(?<!def )\b({names})\(", text):
+        for m in re.finditer(r"(?<!def )\b(\w+)\(", text):
+            if not defaulted.get(m.group(1)):
+                continue
             try:
                 call = ast.parse(
                     "f" + text[m.end() - 1:_after_close(text, m.end() - 1)],
