@@ -382,7 +382,7 @@ def _after_close(text: str, i: int) -> int:
 
     for size in (4000, len(text)):
         lines = text[i:i + size].splitlines(keepends=True)
-        depth, used = 0, 0
+        depth = 0
         try:
             for t in tokenize.generate_tokens(io.StringIO("".join(lines)).readline):
                 if t.type != tokenize.OP:
