@@ -1,6 +1,6 @@
 """Witness tests for the round-10 ADVICE fixes.
 
-- similarity.read_parquet_or_empty must tolerate ONLY the empty-build
+- layout.read_parquet_or_empty must tolerate ONLY the empty-build
   state (directory exists, no part files → UNABLE_TO_INFER_SCHEMA);
   a missing/typo'd index path (PATH_NOT_FOUND) must raise, not
   silently become "zero duplicates / zero neighbors".
@@ -16,7 +16,7 @@ import os
 import pytest
 from pyspark.sql.utils import AnalysisException
 
-from udacity_data_wrangling_osm_case_study_spark.operators.similarity import read_parquet_or_empty
+from udacity_data_wrangling_osm_case_study_spark.operators.layout import read_parquet_or_empty
 
 
 class TestReadParquetOrEmpty:

@@ -8,6 +8,8 @@ these tests exercise the CLASS:
 - two real sessions (separate JVM subprocesses) building the bucketed
   gram index under the same warehouse, and appending different batches
   to the LSH dedup index concurrently;
+- two sessions racing the full build of each directory-published index
+  (LSH dedup, gram, IVF — all staged, then renamed into place);
 - a crash mid-append, simulated by the exact artifacts an uncommitted
   FileOutputCommitter attempt leaves behind (files under a
   ``_temporary`` attempt dir — a SIGKILL before commit never promotes
@@ -15,7 +17,7 @@ these tests exercise the CLASS:
   half; and that the batch retry converges to the clean result.
 
 The subprocess harness costs one JVM startup per session (~8 s each);
-the whole file stays under ~2 min.
+the whole file stays under ~2.5 min.
 """
 
 from __future__ import annotations
@@ -25,6 +27,7 @@ import subprocess
 import sys
 import textwrap
 
+import pytest
 from pyspark.sql import functions as F
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -197,24 +200,41 @@ def test_crash_mid_append_leaves_index_complete(spark, tmp_path):
     assert got == want
 
 
-def test_concurrent_dedup_index_builds_read_complete(spark, tmp_path):
-    """Two sessions race the full LSH dedup index BUILD (not appends)
-    on identical input. Before the stage-then-rename protocol the
-    survivor read a 2x bands relation (both static-overwrite jobs
-    committed into the shared directory — measured 4000 vs 2000 rows);
-    now the published index must census-match a clean solo build."""
-    from udacity_data_wrangling_osm_case_study_spark.operators import dedup
+@pytest.mark.parametrize(
+    "module, builder, table, kwargs",
+    [
+        ("dedup", "build_dedup_index", "documents", {}),
+        ("substrings", "build_gram_index", "documents", {"l": 6}),
+        ("similarity", "build_ivf_index", "embeddings", {}),
+    ],
+    ids=["dedup", "gram", "ivf"],
+)
+def test_concurrent_dedup_index_builds_read_complete(
+    spark, tmp_path, module, builder, table, kwargs
+):
+    """Two sessions race the full BUILD (not appends) of one
+    directory-published index on identical input. Before the
+    stage-then-rename protocol the survivor read a 2x bands relation
+    (both static-overwrite jobs committed into the shared directory —
+    measured 4000 vs 2000 rows); now the published index must
+    census-match a clean solo build, for each of the three
+    directory-published builders."""
+    from importlib import import_module
+
+    from udacity_data_wrangling_osm_case_study_spark.operators import dedup, layout
 
     idx = str(tmp_path / "race_build_idx")
+    src_path = f"/root/testdata/sf0.001/{table}.parquet"
     code = f"""
     import sys
     sys.path.insert(0, {REPO!r})
+    from importlib import import_module
     from udacity_data_wrangling_osm_case_study_spark.session import get_spark
-    from udacity_data_wrangling_osm_case_study_spark.operators import dedup
-    spark = get_spark(app_name="race-dedup-build", shuffle_partitions=4)
+    spark = get_spark(app_name="race-{module}-build", shuffle_partitions=4)
     spark.sparkContext.setLogLevel("ERROR")
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    dedup.build_dedup_index(docs, {idx!r})
+    mod = import_module("udacity_data_wrangling_osm_case_study_spark.operators.{module}")
+    src = spark.read.parquet({src_path!r})
+    mod.{builder}(src, {idx!r}, **{kwargs!r})
     print("BUILD-OK")
     """
     p1, p2 = _run_py(code), _run_py(code)
@@ -222,20 +242,30 @@ def test_concurrent_dedup_index_builds_read_complete(spark, tmp_path):
     out2 = p2.communicate(timeout=300)[0]
     assert b"BUILD-OK" in out1 or b"BUILD-OK" in out2, (out1[-800:], out2[-800:])
 
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+    build = getattr(
+        import_module(f"udacity_data_wrangling_osm_case_study_spark.operators.{module}"),
+        builder,
+    )
+    src = spark.read.parquet(src_path)
     clean = str(tmp_path / "clean_idx")
-    dedup.build_dedup_index(docs, clean)
-    for rel in ("bands", "postings", "sizes"):
+    build(src, clean, **kwargs)
+    rels = sorted(d for d in os.listdir(clean) if not d.endswith(".json"))
+    assert rels and sorted(
+        d for d in os.listdir(idx) if not d.endswith(".json")
+    ) == rels
+    for rel in rels:
         raced = spark.read.parquet(f"{idx}/{rel}").count()
         want = spark.read.parquet(f"{clean}/{rel}").count()
         assert raced == want, (rel, raced, want)
+    assert layout.read_index_meta(idx) == layout.read_index_meta(clean)
     # no stage/old orphans published as siblings a reader could open
     sibs = [d for d in os.listdir(tmp_path) if d.startswith("race_build_idx.")]
     assert sibs == [], sibs
-    # and the artifact is probe-ready end to end
-    assert dedup.read_index_meta(idx)["num_hashes"] == 8
-    probe = docs.limit(20)
-    assert dedup.incremental_near_dupes(probe, idx, min_jaccard=0.0).count() > 0
+    if module == "dedup":
+        # and the artifact is probe-ready end to end
+        assert layout.read_index_meta(idx)["num_hashes"] == 8
+        probe = src.limit(20)
+        assert dedup.incremental_near_dupes(probe, idx, min_jaccard=0.0).count() > 0
 
 
 def _cdc_base(spark):

@@ -7,8 +7,9 @@ import shutil
 import tempfile
 
 import pytest
+from pyspark.sql import functions as F
 
-from udacity_data_wrangling_osm_case_study_spark.operators import pipeline
+from udacity_data_wrangling_osm_case_study_spark.operators import layout, pipeline
 from udacity_data_wrangling_osm_case_study_spark.sources import osm_split
 from udacity_data_wrangling_osm_case_study_spark.streaming import osm_etl_stream
 from tests.conftest import OSM_SAMPLE, PSI_SAMPLE, needs_sample
@@ -46,9 +47,10 @@ def test_batch_write_is_idempotent_on_replay(spark):
     try:
         df1 = spark.range(0, 5).withColumnRenamed("id", "v")
         df2 = spark.range(100, 103).withColumnRenamed("id", "v")
-        osm_etl_stream.write_batch_idempotent(df1, out, "n-0")
-        osm_etl_stream.write_batch_idempotent(df2, out, "n-1")
-        osm_etl_stream.write_batch_idempotent(df1, out, "n-0")  # replay
+        tag = "_batch_id"
+        layout.write_batch(df1.withColumn(tag, F.lit("n-0")), out, [tag])
+        layout.write_batch(df2.withColumn(tag, F.lit("n-1")), out, [tag])
+        layout.write_batch(df1.withColumn(tag, F.lit("n-0")), out, [tag])  # replay
         got = sorted(r.v for r in spark.read.parquet(out).collect())
         assert got == [0, 1, 2, 3, 4, 100, 101, 102]
     finally:

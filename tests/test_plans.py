@@ -364,6 +364,129 @@ def test_lineage_cuts_only_through_iterative():
     assert bare == [], bare
 
 
+# Where each store-protocol primitive may appear in the package: the one
+# batch write, directory publish and manifest in operators/layout.py, the
+# one index locator in plans/registry.py.
+_STORE_PROTOCOL_HOME = {
+    "partitionOverwriteMode": "operators/layout.py",
+    "meta.json": "operators/layout.py",
+    "os.rename": "operators/layout.py",
+    "os.replace": "operators/layout.py",
+    "tempfile.gettempdir": "plans/registry.py",
+    "getmtime": "plans/registry.py",
+}
+_STORE_PROTOCOL_ALLOWED = {
+    ("streaming/cdc_apply.py", "os.replace"): (
+        "pointer-file flip of the versioned CDC snapshot: the object-store"
+        " form of publish, one file replaced, no directory renamed"
+    ),
+}
+
+
+@pytest.mark.guard
+def test_one_store_protocol():
+    """The persisted indexes and stream sinks share one store protocol:
+    ``layout.write_batch`` (the one dynamic-overwrite batch write),
+    ``layout.publish`` (the one stage-then-rename directory publish),
+    ``layout.read_index_meta`` (the one ``meta.json`` reader),
+    ``layout.read_parquet_or_empty`` and ``registry.index_dir`` /
+    ``registry.ensure_index`` (the one index locator). A per-family copy
+    regrows exactly these primitives outside their home, which this AST
+    scan reports."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(registry.__file__).resolve().parents[1]
+    stray, dynamic, defs = [], [], {}
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.FunctionDef):
+                defs.setdefault(node.name, []).append(rel)
+                continue
+            used = None
+            if isinstance(node, ast.Constant) and isinstance(node.value, str):
+                if node.value == "meta.json":
+                    used = "meta.json"
+                elif node.value.endswith("partitionOverwriteMode"):
+                    used = "partitionOverwriteMode"
+            elif isinstance(node, ast.Attribute):
+                owner = getattr(node.value, "id", None)
+                if f"{owner}.{node.attr}" in _STORE_PROTOCOL_HOME:
+                    used = f"{owner}.{node.attr}"
+                elif node.attr == "getmtime":
+                    used = "getmtime"
+            if used and _STORE_PROTOCOL_HOME[used] != rel:
+                if (rel, used) not in _STORE_PROTOCOL_ALLOWED:
+                    stray.append(f"{rel}:{node.lineno} {used}")
+            if used == "partitionOverwriteMode":
+                dynamic.append(rel)
+    assert stray == [], stray
+    assert dynamic == ["operators/layout.py"], dynamic
+    for name, home in {
+        "write_batch": "operators/layout.py",
+        "publish": "operators/layout.py",
+        "read_index_meta": "operators/layout.py",
+        "read_parquet_or_empty": "operators/layout.py",
+        "index_dir": "plans/registry.py",
+        "ensure_index": "plans/registry.py",
+    }.items():
+        assert defs.get(name) == [home], (name, defs.get(name))
+    for gone in (
+        "_dedup_index_dir",
+        "_ivf_index_dir",
+        "_gram_index_dir",
+        "read_gram_index_meta",
+        "write_batch_idempotent",
+    ):
+        assert gone not in defs, (gone, defs[gone])
+
+
+@pytest.mark.guard
+def test_same_basename_datasets_get_distinct_indexes(tmp_path, monkeypatch):
+    """Two datasets with one basename (``a/sf0.01``, ``b/sf0.01``) must
+    get distinct index directories for every persisted index kind: an
+    index keyed by basename alone is silently reused for the other
+    dataset, because the staleness check only compares mtimes. The
+    source tables, their column expressions and the builders are
+    stubbed, so no SparkSession starts and no index is written."""
+    from importlib import import_module
+    from unittest import mock
+
+    from udacity_data_wrangling_osm_case_study_spark.operators import (
+        dedup,
+        similarity,
+        substrings,
+    )
+
+    for owner, builder in (
+        (dedup, "build_dedup_index"),
+        (substrings, "build_gram_index"),
+        (similarity, "build_ivf_index"),
+    ):
+        monkeypatch.setattr(owner, builder, lambda *a, **kw: None)
+    fake = mock.MagicMock()
+    monkeypatch.setattr(registry, "table", lambda *a: fake)
+    shared = []
+    for module, ensure in (
+        ("dedup_queries", "ensure_dedup_index"),
+        ("substring_queries", "ensure_gram_index"),
+        ("similarity_queries", "ensure_ivf_index"),
+    ):
+        mod = import_module(
+            f"udacity_data_wrangling_osm_case_study_spark.plans.{module}"
+        )
+        monkeypatch.setattr(mod, "table", lambda *a: fake)
+        monkeypatch.setattr(mod, "F", fake)
+        a, b = (
+            getattr(mod, ensure)(None, str(tmp_path / d / "sf0.01"))
+            for d in ("a", "b")
+        )
+        if a == b:
+            shared.append((ensure, a))
+    assert shared == [], shared
+
+
 # Deployment settings: the caller's environment picks them, so they
 # stay settable even though nothing in the repository passes them.
 UNPASSED_ALLOWED = {

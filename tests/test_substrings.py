@@ -11,7 +11,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from udacity_data_wrangling_osm_case_study_spark.operators import substrings
+from udacity_data_wrangling_osm_case_study_spark.operators import layout, substrings
 
 L = 4
 
@@ -302,7 +302,7 @@ def test_gram_index_meta_guards_probe_compat(spark, tmp_path):
     substrings.build_gram_index(
         _docs(spark, [(10, "a b c d e f g h")]), idx, l=3
     )
-    meta = substrings.read_gram_index_meta(idx)
+    meta = layout.read_index_meta(idx)
     assert meta == {"l": 3, "key": substrings.GRAM_KEY}
     # probe grams at the index's L=3: the 3-token overlap flags even
     # though the module-level default L is larger.
@@ -326,7 +326,7 @@ def test_gram_index_meta_guards_probe_compat(spark, tmp_path):
         json.dump({"l": 999, "key": "legacy"}, f)
     d2 = sq.ensure_gram_index(spark, sfd)
     assert d1 == d2
-    assert substrings.read_gram_index_meta(d2)["key"] == substrings.GRAM_KEY
+    assert layout.read_index_meta(d2)["key"] == substrings.GRAM_KEY
     shutil.rmtree(d1, ignore_errors=True)
 
 

@@ -5,11 +5,15 @@ The suite is dominated by independent SparkSession-scoped modules
 environment, so this runner shards BY FILE across subprocess pytest
 invocations instead — each shard is its own Python process with its own
 JVM, which is exactly the isolation xdist's --forked would buy. Cross-
-shard safety: the only shared mutable surface is the repo
+shard safety: the shared mutable surfaces are the repo
 spark-warehouse, whose table names are content-hashed and published
-via the stage-then-atomic-rename protocol (race-proven by
-tests/test_index_concurrency.py), and tests/test_layout.py which uses
-its own mkdtemp warehouse.
+via the stage-then-atomic-rename protocol, and the temp-dir index roots
+(spark_graft_dedup_index, spark_graft_gram_index, spark_graft_ivf)
+that every shard's registry queries build into. Those indexes are keyed
+by the absolute dataset path and published with ``layout.publish``
+(stage, then rename), so racing shards never mix their files (both
+race-proven by tests/test_index_concurrency.py); tests/test_layout.py
+uses its own mkdtemp warehouse.
 
 Shards are balanced by recorded per-file durations
 (TEST_DURATIONS.json, refreshed on every run from pytest's junitxml),

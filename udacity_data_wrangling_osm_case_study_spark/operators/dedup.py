@@ -30,6 +30,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from udacity_data_wrangling_osm_case_study_spark.operators import layout
 from udacity_data_wrangling_osm_case_study_spark.operators.iterative import (
     snap_eager,
     snap_lazy,
@@ -397,7 +398,7 @@ def shingle_hash():
 # Shingling and banding of the persisted near-dup index, written to its
 # meta.json (the defaults of word_shingles, minhash_signatures and
 # lsh_bands).
-_INDEX_CONFIG = {"num_hashes": 8, "rows_per_band": 2, "n": 3, "max_shingle_df": None}
+INDEX_CONFIG = {"num_hashes": 8, "rows_per_band": 2, "n": 3, "max_shingle_df": None}
 
 
 def build_dedup_index(
@@ -425,112 +426,43 @@ def build_dedup_index(
     overwrites only its own partition — exactly-once index maintenance
     under at-least-once stream semantics.
 
-    Publish protocol (stage-then-rename, the same discipline as
-    ``substrings.build_gram_index_bucketed``): the whole index is
-    written to a UNIQUE sibling staging directory and atomically
-    renamed into place. Two sessions rebuilding the same ``index_dir``
-    in place were measured leaving a 2x ``bands`` relation (both
-    static-overwrite jobs committed part files into the shared
-    directory — tests/test_index_concurrency.py); with staging, racing
-    builders touch disjoint directories, one directory rename
-    publishes, and the loser's equivalent build is discarded. A crash
-    at any point leaves the index absent or the previous/new build
-    complete, never a mix (orphaned ``.stage-``/``.old-`` siblings are
-    retriable garbage, invisible to readers). The os-level rename
-    targets the local-FS artifact this builder writes (meta.json
-    already rides a local ``open()``); a cluster deployment on object
-    storage would publish through a table format's atomic snapshot
-    commit instead.
+    The relations and the build configuration (``meta.json``) appear
+    together through ``layout.publish`` (stage, then rename): racing
+    builders never mix their files, and a crash leaves the index absent
+    or complete. Appends and probes MUST use the persisted
+    shingling/banding parameters or the index partitions become
+    mutually inconsistent (asymmetric postings corrupt Jaccard;
+    mismatched bands miss candidates).
     """
-    import json
-    import os
-    import shutil
-    import uuid
-
-    index_dir = index_dir.rstrip("/")
-    stage = f"{index_dir}.stage-{uuid.uuid4().hex[:12]}"
-    sh = word_shingles(docs)
-    sh = sh.persist()
+    sh = word_shingles(docs).persist()
     try:
-        _write_index_batch(
-            sh,
-            stage,
-            "base",
-            _INDEX_CONFIG["num_hashes"],
-            _INDEX_CONFIG["rows_per_band"],
-            overwrite_mode="static",
+        layout.publish(
+            index_dir,
+            lambda stage: _write_index_batch(sh, stage, "base", INDEX_CONFIG),
+            INDEX_CONFIG,
         )
     finally:
         sh.unpersist()
-    # Persist the build configuration beside the relations: appends and
-    # probes MUST use the same shingling/banding parameters or the
-    # index partitions become mutually inconsistent (asymmetric
-    # postings corrupt Jaccard; mismatched bands miss candidates).
-    with open(os.path.join(stage, "meta.json"), "w") as f:
-        json.dump(_INDEX_CONFIG, f)
-    try:
-        # fast path: target absent — one atomic rename publishes
-        os.rename(stage, index_dir)
-        return
-    except OSError:
-        pass
-    # Rebuild over an existing index (or a race already published):
-    # move the live index aside, rename the stage in; a loser whose
-    # second rename ALSO fails discards its own stage — the winner's
-    # published build is equivalent (same input) and stays intact.
-    old = f"{index_dir}.old-{uuid.uuid4().hex[:12]}"
-    try:
-        os.rename(index_dir, old)
-    except FileNotFoundError:
-        pass
-    try:
-        os.rename(stage, index_dir)
-    except OSError:
-        shutil.rmtree(stage, ignore_errors=True)
-        if not os.path.isdir(index_dir):
-            raise
-    shutil.rmtree(old, ignore_errors=True)
-
-
-def read_index_meta(index_dir: str) -> dict:
-    """Load the build configuration persisted by :func:`build_dedup_index`
-    (empty dict for pre-manifest indexes — callers fall back to their
-    own defaults, matching the old behavior)."""
-    import json
-    import os
-
-    path = os.path.join(index_dir, "meta.json")
-    if not os.path.exists(path):
-        return {}
-    with open(path) as f:
-        return json.load(f)
 
 
 def _write_index_batch(
     sh: DataFrame,
     index_dir: str,
     batch_id: str,
-    num_hashes: int,
-    rows_per_band: int,
-    overwrite_mode: str,
+    meta: dict,
 ) -> None:
-    """Write one batch's bands/postings/sizes partitions. ``static``
-    overwrite wipes the whole relation (full rebuild); ``dynamic``
-    replaces ONLY this batch's partition — the idempotence mechanism
-    for retried micro-batches."""
+    """Write one batch's bands/postings/sizes partitions, banded as the
+    index manifest ``meta`` says; a retried batch replaces only its own
+    partition."""
     tag = F.lit(batch_id).alias("batch_id")
 
     def write(df, rel):
-        (
-            df.select("*", tag)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", overwrite_mode)
-            .partitionBy("batch_id")
-            .parquet(f"{index_dir}/{rel}")
+        layout.write_batch(
+            df.select("*", tag), f"{index_dir}/{rel}", ["batch_id"]
         )
 
-    sigs = minhash_signatures(sh, num_hashes)
-    write(lsh_bands(sigs, rows_per_band), "bands")
+    sigs = minhash_signatures(sh, meta.get("num_hashes", 8))
+    write(lsh_bands(sigs, meta.get("rows_per_band", 2)), "bands")
     write(sh.select("id", shingle_hash().alias("g")), "postings")
     write(sh.groupBy("id").agg(F.count("*").alias("sz")), "sizes")
 
@@ -550,21 +482,14 @@ def dedup_index_append(
     never drift from the base build's configuration, which would make
     partitions mutually inconsistent (asymmetric postings corrupt the
     probe's Jaccard; mismatched bands silently miss candidates)."""
-    meta = read_index_meta(index_dir)
+    meta = layout.read_index_meta(index_dir)
     sh = word_shingles(
         docs,
         n=meta.get("n", 3),
         max_shingle_df=meta.get("max_shingle_df"),
     ).persist()
     try:
-        _write_index_batch(
-            sh,
-            index_dir,
-            batch_id,
-            meta.get("num_hashes", 8),
-            meta.get("rows_per_band", 2),
-            overwrite_mode="dynamic",
-        )
+        _write_index_batch(sh, index_dir, batch_id, meta)
     finally:
         sh.unpersist()
 
@@ -596,7 +521,7 @@ def incremental_near_dupes(
     # Probe parameters are the index's persisted build config —
     # shingling the batch differently than the corpus was shingled
     # would silently miss candidates / skew Jaccard.
-    meta = read_index_meta(index_dir)
+    meta = layout.read_index_meta(index_dir)
     sh_new = word_shingles(new_docs, n=meta.get("n", 3)).persist()
     sigs = minhash_signatures(sh_new, meta.get("num_hashes", 8))
     bands_new = lsh_bands(sigs, meta.get("rows_per_band", 2))
@@ -604,11 +529,7 @@ def incremental_near_dupes(
     # corpus has no part files, and inference would fail where an
     # empty index is a valid state (nothing to dedup against); with
     # data present, inference keeps the builder's caller-typed ids.
-    from udacity_data_wrangling_osm_case_study_spark.operators.similarity import (
-        read_parquet_or_empty,
-    )
-
-    bands_idx = read_parquet_or_empty(
+    bands_idx = layout.read_parquet_or_empty(
         spark,
         f"{index_dir}/bands",
         "id bigint, band int, band_key string, batch_id string",
@@ -627,7 +548,7 @@ def incremental_near_dupes(
     post_new = post_new.join(
         cand.select("new_id").distinct(), "new_id", "left_semi"
     )
-    post_idx = read_parquet_or_empty(
+    post_idx = layout.read_parquet_or_empty(
         spark, f"{index_dir}/postings", "id bigint, g bigint, batch_id string"
     ).select(F.col("id").alias("index_id"), "g")
     post_idx = post_idx.join(
@@ -640,7 +561,7 @@ def incremental_near_dupes(
         .join(cand, ["new_id", "index_id"], "left_semi")
     )
     sizes_new = sh_new.groupBy("id").agg(F.count("*").alias("size_new"))
-    sizes_idx = read_parquet_or_empty(
+    sizes_idx = layout.read_parquet_or_empty(
         spark, f"{index_dir}/sizes", "id bigint, sz bigint, batch_id string"
     ).select(F.col("id").alias("index_id"), F.col("sz").alias("size_index"))
     scored = (
@@ -1100,18 +1021,16 @@ def embedding_near_duplicates_arrow(
 
 def doc_segments(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     segment_tokens: int = 20,
 ) -> DataFrame:
     """Explode docs into disjoint ``segment_tokens``-token segments.
 
     Row-local (one explode, no shuffle): the segmentation primitive
     shared by segment-level dedup and cross-source overlap analysis.
-    Returns ``(id, seg_idx, seg_text, seg_hash)``; extra input columns
-    (e.g. ``source``) pass through.
+    Reads ``(doc_id, text)``; returns ``(id, seg_idx, seg_text,
+    seg_hash)``; extra input columns (e.g. ``source``) pass through.
     """
-    toks = F.split(normalize_text(F.col(text_col)), " ")
+    toks = F.split(normalize_text(F.col("text")), " ")
     starts = F.sequence(
         F.lit(1), F.greatest(F.size(toks), F.lit(1)), F.lit(segment_tokens)
     )
@@ -1122,10 +1041,10 @@ def doc_segments(
             F.array_join(F.slice(toks, s, segment_tokens), " ").alias("seg_text"),
         ),
     )
-    passthrough = [c for c in df.columns if c not in (id_col, text_col)]
+    passthrough = [c for c in df.columns if c not in ("doc_id", "text")]
     return (
         df.select(
-            F.col(id_col).alias("id"), *passthrough, F.explode(segs).alias("s")
+            F.col("doc_id").alias("id"), *passthrough, F.explode(segs).alias("s")
         )
         .select(
             "id",
@@ -1167,7 +1086,7 @@ def segment_dedup(
     skew-safe by construction.
     """
     exploded = doc_segments(
-        df.select("doc_id", "text"), "doc_id", "text", segment_tokens
+        df.select("doc_id", "text"), segment_tokens
     ).withColumn(
         # One sortable scalar (doc, segment) key: min() is then a plain
         # map-side-combinable aggregate in both engines (struct-min is
@@ -1359,8 +1278,6 @@ def dedup_index_compact(spark, index_dir: str) -> None:
     (shingling/banding config) is untouched — compaction never changes
     the index's logical content.
     """
-    from udacity_data_wrangling_osm_case_study_spark.operators import layout
-
     for rel in ("bands", "postings", "sizes"):
         layout.rewrite_partitioned_inplace(
             spark,

@@ -15,6 +15,13 @@ At 100 TB the table layout IS the query plan:
 Bucketed tables go through the session catalog (``saveAsTable``) —
 bucket metadata lives in the metastore, which is what lets the planner
 trust the layout.
+
+The persisted indexes (near-dup LSH, substring gram, IVF) and the
+stream sinks share one store protocol, kept here: :func:`write_batch`
+(idempotent batch write), :func:`publish` (atomic directory publish
+with the ``meta.json`` manifest), :func:`read_index_meta` and
+:func:`read_parquet_or_empty` (read-back). ``plans.registry.
+ensure_index`` locates and (re)builds them.
 """
 
 from __future__ import annotations
@@ -139,6 +146,117 @@ def write_zordered(
     )
 
 
+def write_batch(df: DataFrame, path: str, partition_cols: list[str]) -> None:
+    """The one batch write of every persisted index and stream sink:
+    partitioned parquet with DYNAMIC partition overwrite, so the write
+    replaces only the partitions ``df`` carries. A batch tagged by its
+    own partition value (``batch_id``) is therefore idempotent: an
+    at-least-once retry replaces its own rows and leaves every other
+    batch intact. Into a fresh directory (a build's stage) it writes
+    exactly what a static overwrite would."""
+    (
+        df.write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy(*partition_cols)
+        .parquet(path)
+    )
+
+
+def publish(path: str, write, manifest: dict | None = None) -> None:
+    """The one directory publish: ``write(stage)`` fills a UNIQUE
+    sibling staging directory (plus ``meta.json`` when a ``manifest``
+    is given, so data and manifest appear together), then a directory
+    rename puts it at ``path``. Readers see the previous directory, or
+    none, or the new one complete — never a partial write or a mix.
+
+    Two writers publishing one ``path`` at once touch disjoint stages,
+    and only the renames publish: in-place overwrites were measured
+    leaving a 2x relation when both jobs committed part files into the
+    shared directory (tests/test_index_concurrency.py). A crash leaves
+    the path absent or a complete build; orphaned ``.stage-``/``.old-``
+    siblings are retriable garbage no reader opens. The rename targets
+    the local-FS artifacts these builders write; on object storage the
+    publish becomes a table format's snapshot commit or a pointer flip
+    (``streaming/cdc_apply.py``).
+    """
+    import json
+    import os
+    import shutil
+    import uuid
+
+    path = path.rstrip("/")
+    stage = f"{path}.stage-{uuid.uuid4().hex[:12]}"
+    write(stage)
+    if manifest is not None:
+        with open(os.path.join(stage, "meta.json"), "w") as f:
+            json.dump(manifest, f)
+    try:
+        # fast path: target absent — one atomic rename publishes
+        os.rename(stage, path)
+        return
+    except OSError:
+        pass
+    # Replace an existing directory (or a race already published): move
+    # the live one aside, rename the stage in; a loser whose second
+    # rename ALSO fails discards its own stage — the winner's published
+    # directory is equivalent (same input) and stays intact.
+    old = f"{path}.old-{uuid.uuid4().hex[:12]}"
+    try:
+        os.rename(path, old)
+    except FileNotFoundError:
+        pass
+    try:
+        os.rename(stage, path)
+    except OSError:
+        shutil.rmtree(stage, ignore_errors=True)
+        if not os.path.isdir(path):
+            raise
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def read_index_meta(index_dir: str) -> dict:
+    """The build configuration an index published with its ``meta.json``
+    (empty dict when there is none — callers fall back to their own
+    defaults). Appends and probes read it, so they can never drift from
+    the base build's parameters."""
+    import json
+    import os
+
+    path = os.path.join(index_dir, "meta.json")
+    if not os.path.exists(path):
+        return {}
+    with open(path) as f:
+        return json.load(f)
+
+
+def read_parquet_or_empty(spark: SparkSession, path: str, fallback_schema: str):
+    """Read a persisted index relation, tolerating ONLY the
+    EMPTY-build state: an index built from zero rows writes a
+    directory with no part files, where schema inference fails
+    (UNABLE_TO_INFER_SCHEMA) but "empty relation" is the correct
+    answer. Every other analysis error — above all PATH_NOT_FOUND
+    from a deleted or typo'd index_dir — re-raises: silently treating
+    a missing index as empty would disable dedup/ANN without a trace
+    (zero duplicates / zero neighbors reported as a clean result).
+    With data present, inference keeps the builder's actual types
+    (id/cell columns are caller-typed — a pinned schema here would
+    reject legitimate builds)."""
+    from pyspark.sql.utils import AnalysisException
+
+    try:
+        return spark.read.parquet(path)
+    except AnalysisException as e:
+        getter = getattr(e, "getCondition", None) or getattr(
+            e, "getErrorClass", None
+        )
+        cls = getter() if getter else None
+        if cls == "UNABLE_TO_INFER_SCHEMA" or (
+            cls is None and "UNABLE_TO_INFER_SCHEMA" in str(e)
+        ):
+            return spark.createDataFrame([], fallback_schema)
+        raise
+
+
 def rewrite_partitioned_inplace(
     spark: SparkSession,
     path: str,
@@ -147,16 +265,12 @@ def rewrite_partitioned_inplace(
     repartition_cols: list[str] | None = None,
     n_files: int | None = None,
 ) -> None:
-    """Atomically rewrite a partitioned parquet relation IN PLACE.
-
-    The rewrite lands in a sibling ``__compacting`` directory first
-    (the parquet commit protocol guarantees it is complete before we
-    touch the live path), then two directory renames swap it in —
-    readers see either the old relation or the new one, never a
-    partial write. This is the plain-parquet form of the atomic-swap
-    step inside Delta OPTIMIZE / Iceberg rewrite_data_files; on an
-    object store the renames become a manifest pointer flip (see
-    ``streaming/cdc_apply.py`` for the pointer-file variant).
+    """Atomically rewrite a partitioned parquet relation IN PLACE: the
+    rewrite is written to a stage and swapped in by :func:`publish`, so
+    readers see the old relation or the new one, never a partial write,
+    and two compactions of one path never share a stage. This is the
+    plain-parquet form of the atomic-swap step inside Delta OPTIMIZE /
+    Iceberg rewrite_data_files.
 
     ``transform`` edits the frame before the write (e.g. folding all
     append batches into one ``base`` partition); ``repartition_cols``
@@ -164,9 +278,6 @@ def rewrite_partitioned_inplace(
     partition value instead of one per shuffle task); ``n_files``
     round-robins to a fixed file count for unpartitioned-ish tails.
     """
-    import os
-    import shutil
-
     df = spark.read.parquet(path)
     if transform is not None:
         df = transform(df)
@@ -174,14 +285,4 @@ def rewrite_partitioned_inplace(
         df = df.repartition(*repartition_cols)
     elif n_files:
         df = df.repartition(n_files)
-    base = path.rstrip("/")
-    tmp, old = base + "__compacting", base + "__old"
-    shutil.rmtree(tmp, ignore_errors=True)
-    writer = df.write.mode("overwrite")
-    if partition_cols:
-        writer = writer.partitionBy(*partition_cols)
-    writer.parquet(tmp)
-    shutil.rmtree(old, ignore_errors=True)
-    os.rename(base, old)
-    os.rename(tmp, base)
-    shutil.rmtree(old, ignore_errors=True)
+    publish(path, lambda stage: write_batch(df, stage, partition_cols))

@@ -91,7 +91,6 @@ def pack_sequences(
     df: DataFrame,
     seq_len: int,
     id_col: str = "doc_id",
-    ntok_col: str = "n_tokens",
     order_col: str | None = None,
 ) -> DataFrame:
     """Doc -> training-sequence placement map.
@@ -112,10 +111,8 @@ def pack_sequences(
     (e.g. a deterministic epoch-shuffle hash) while the placement map
     still reports ``id_col`` — no join-back needed.
     """
-    offs = global_token_offsets(
-        df, order_col=order_col or id_col, ntok_col=ntok_col
-    )
-    start, n = F.col("start"), F.col(ntok_col)
+    offs = global_token_offsets(df, order_col=order_col or id_col)
+    start, n = F.col("start"), F.col("n_tokens")
     end = start + n  # exclusive
     first_seq = F.floor(start / seq_len).cast("long")
     last_seq = F.floor((end - 1) / seq_len).cast("long")
@@ -127,7 +124,7 @@ def pack_sequences(
     )
     seq_start = F.col("seq_id") * seq_len
     lo = F.greatest(F.col("start"), seq_start)
-    hi = F.least(F.col("start") + F.col(ntok_col), seq_start + seq_len)
+    hi = F.least(F.col("start") + F.col("n_tokens"), seq_start + seq_len)
     return spans.select(
         "seq_id",
         F.col(id_col),

@@ -17,11 +17,11 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def hash_bucket(key: Column, n_buckets: int = 100) -> Column:
-    """Deterministic uniform bucket in [0, n_buckets) from a key, salted
+def hash_bucket(key: Column) -> Column:
+    """Deterministic uniform bucket in [0, 100) from a key, salted
     ``split``."""
     h = F.md5(F.concat(F.lit("split"), key.cast("string")))
-    return F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % n_buckets
+    return F.conv(F.substring(h, 1, 8), 16, 10).cast("long") % 100
 
 
 def per_key_cap(
@@ -101,7 +101,7 @@ def train_val_test_split(df: DataFrame, key_col: str) -> DataFrame:
     """Assign a stable split label per row: bucket < 10 → 'test', next
     10 → 'val', rest → 'train'. The same document always lands in the
     same split — the leakage guarantee training pipelines need."""
-    b = hash_bucket(F.col(key_col), 100)
+    b = hash_bucket(F.col(key_col))
     label = (
         F.when(b < 10, "test")
         .when(b < 20, "val")

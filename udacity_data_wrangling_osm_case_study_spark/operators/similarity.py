@@ -20,6 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from udacity_data_wrangling_osm_case_study_spark.operators import layout
 from udacity_data_wrangling_osm_case_study_spark.operators.iterative import snap_eager
 
 
@@ -44,34 +45,6 @@ def array_literal(xs):
         return f"{float(v)!r}D"
 
     return F.expr(render(xs))
-
-
-def read_parquet_or_empty(spark, path: str, fallback_schema: str):
-    """Read a persisted index relation, tolerating ONLY the
-    EMPTY-build state: an index built from zero rows writes a
-    directory with no part files, where schema inference fails
-    (UNABLE_TO_INFER_SCHEMA) but "empty relation" is the correct
-    answer. Every other analysis error — above all PATH_NOT_FOUND
-    from a deleted or typo'd index_dir — re-raises: silently treating
-    a missing index as empty would disable dedup/ANN without a trace
-    (zero duplicates / zero neighbors reported as a clean result).
-    With data present, inference keeps the builder's actual types
-    (id/cell columns are caller-typed — a pinned schema here would
-    reject legitimate builds)."""
-    from pyspark.sql.utils import AnalysisException
-
-    try:
-        return spark.read.parquet(path)
-    except AnalysisException as e:
-        getter = getattr(e, "getCondition", None) or getattr(
-            e, "getErrorClass", None
-        )
-        cls = getter() if getter else None
-        if cls == "UNABLE_TO_INFER_SCHEMA" or (
-            cls is None and "UNABLE_TO_INFER_SCHEMA" in str(e)
-        ):
-            return spark.createDataFrame([], fallback_schema)
-        raise
 
 
 def dot(u, v):
@@ -141,24 +114,30 @@ def build_ivf_index(
       (``partitionBy``), so a probe of ``n_probe`` cells reads only
       those cells' files — partition pruning in the scan, the on-disk
       analog of a Faiss inverted list.
+
+    Both relations appear together through ``layout.publish`` (stage,
+    then rename): a probe never pairs one build's centroids with
+    another build's vectors, and racing builders never mix their files.
     """
-    cents = label_centroids(df)
-    cents.write.mode("overwrite").parquet(f"{index_dir}/centroids")
-    (
-        df.select(
-            F.col("label").alias("cell"),
-            F.col("vec_id").alias("id"),
-            as_double_vec(F.col("embedding")).alias("v"),
-            F.lit("base").alias("batch_id"),
+
+    def write(stage):
+        label_centroids(df).write.parquet(f"{stage}/centroids")
+        layout.write_batch(
+            df.select(
+                F.col("label").alias("cell"),
+                F.col("vec_id").alias("id"),
+                as_double_vec(F.col("embedding")).alias("v"),
+                F.lit("base").alias("batch_id"),
+            ),
+            f"{stage}/vectors",
+            # cell first: probes prune on the leading partition level;
+            # batch_id nesting gives ivf_append retry idempotence (a
+            # retried batch dynamically overwrites only its own
+            # (cell, batch) partitions).
+            ["cell", "batch_id"],
         )
-        .write.mode("overwrite")
-        # cell first: probes prune on the leading partition level;
-        # batch_id nesting gives ivf_append retry idempotence (a
-        # retried batch dynamically overwrites only its own
-        # (cell, batch) partitions).
-        .partitionBy("cell", "batch_id")
-        .parquet(f"{index_dir}/vectors")
-    )
+
+    layout.publish(index_dir, write)
 
 
 def ivf_topk_indexed(
@@ -177,7 +156,7 @@ def ivf_topk_indexed(
     Corpus data itself never reaches the driver.
     """
     q = array_literal(query_vec)
-    cents = read_parquet_or_empty(
+    cents = layout.read_parquet_or_empty(
         spark, f"{index_dir}/centroids", "cell int, centroid array<double>"
     )
     probed = [
@@ -190,7 +169,7 @@ def ivf_topk_indexed(
             .collect()
         )
     ]
-    vecs = read_parquet_or_empty(
+    vecs = layout.read_parquet_or_empty(
         spark,
         f"{index_dir}/vectors",
         "id bigint, v array<double>, cell int, batch_id string",
@@ -565,28 +544,27 @@ def ivf_append(
     same rule queries use to pick probe cells) and appended into the
     cell-partitioned vector store as its own ``batch_id`` partitions
     nested under each cell (only the touched cells gain files, and a
-    RETRIED batch dynamically overwrites exactly its own partitions —
-    idempotent under at-least-once drivers, mirroring
-    ``dedup.dedup_index_append``). Queries see the new vectors
+    RETRIED batch dynamically overwrites exactly its own partitions
+    through ``layout.write_batch`` — idempotent under at-least-once
+    drivers). Queries see the new vectors
     immediately through the same partition-pruned scan; no full-corpus
     shuffle, no centroid retrain. Retrain (``build_ivf_index``) is the
     periodic compaction step once drift accumulates — the same
     build/maintain split every production ANN index uses.
     """
-    cents = read_parquet_or_empty(
+    cents = layout.read_parquet_or_empty(
         spark, f"{index_dir}/centroids", "cell int, centroid array<double>"
     )
     assigned = kmeans_assign(df_new, cents)
     vecs = df_new.select(
         F.col("vec_id").alias("id"), as_double_vec(F.col("embedding")).alias("v")
     )
-    (
-        vecs.join(assigned.select("id", "cell"), "id")
-        .select("cell", "id", "v", F.lit(batch_id).alias("batch_id"))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("cell", "batch_id")
-        .parquet(f"{index_dir}/vectors")
+    layout.write_batch(
+        vecs.join(assigned.select("id", "cell"), "id").select(
+            "cell", "id", "v", F.lit(batch_id).alias("batch_id")
+        ),
+        f"{index_dir}/vectors",
+        ["cell", "batch_id"],
     )
 
 
@@ -649,15 +627,13 @@ def ivf_compact(spark, index_dir: str) -> None:
     Append-heavy indexes accumulate a parquet file per touched
     (cell, batch); probe latency then becomes file-open bound (the
     100 TB failure mode is thousands of KB files per cell). The
-    rewrite is atomic (sibling-dir + rename swap — see
+    rewrite is atomic (staged, then swapped in by
     ``layout.rewrite_partitioned_inplace``), costs one shuffle of
     exactly the index bytes, and changes no probe results: the same
     vectors land in the same cells. Centroid retrain is the separate,
     heavier ``build_ivf_index`` rebuild once assignment drift
     accumulates.
     """
-    from udacity_data_wrangling_osm_case_study_spark.operators import layout
-
     layout.rewrite_partitioned_inplace(
         spark,
         f"{index_dir}/vectors",
@@ -671,10 +647,6 @@ def pq_adc_topk(
     df: DataFrame,
     codebooks: DataFrame,
     query_df: DataFrame,
-    m: int = 4,
-    ksub: int = 8,
-    k: int = 10,
-    shortlist: int = 30,
 ) -> DataFrame:
     """PQ search via asymmetric distance computation (ADC — Jégou,
     Douze & Schmid 2011): the query stays a full-precision vector, the
@@ -690,9 +662,12 @@ def pq_adc_topk(
     re-ranked exactly against the original vectors, so only
     ``shortlist`` rows ever touch full-precision data.
 
-    ``query_df``: one row, column ``q`` (array<double>). Output:
-    (id, cosine_bp) top-``k`` by exact re-rank.
+    ``query_df``: one row, column ``q`` (array<double>); ``codebooks``
+    from :func:`pq_codebooks` with m = 4 subspaces of ksub = 8
+    codewords. Output: (id, cosine_bp) top-``k`` = 10 by exact re-rank
+    of a ``shortlist`` of 30.
     """
+    m, ksub, k, shortlist = 4, 8, 10, 30
     sub_w = f"(size(q) DIV {m})"
     qsubs = query_df.select(
         F.explode(

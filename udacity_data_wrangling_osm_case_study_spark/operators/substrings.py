@@ -41,6 +41,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from udacity_data_wrangling_osm_case_study_spark.operators import layout
 from udacity_data_wrangling_osm_case_study_spark.operators.dedup import normalize_text
 
 
@@ -222,21 +223,19 @@ def build_gram_index(
     bucketed by ``g`` so probe joins are shuffle-free on the index
     side — use :func:`build_gram_index_bucketed`.
 
-    The gram length persists in ``meta.json``: probes and appends MUST
-    gram at the index's own L or counts are meaningless across
-    partitions."""
-    import json
-    import os
-
-    _write_gram_batch(
-        tokenized(docs), index_dir, l, "base", "static"
+    The gram length persists in ``meta.json``, published together with
+    the census by ``layout.publish`` (stage, then rename — racing
+    builders never mix their files): probes and appends MUST gram at
+    the index's own L or counts are meaningless across partitions."""
+    layout.publish(
+        index_dir,
+        lambda stage: _write_gram_batch(tokenized(docs), stage, l, "base"),
+        {"l": l, "key": GRAM_KEY},
     )
-    with open(os.path.join(index_dir, "meta.json"), "w") as f:
-        json.dump({"l": l, "key": GRAM_KEY}, f)
 
 
 def _write_gram_batch(
-    base: DataFrame, index_dir: str, l: int, batch_id: str, mode: str
+    base: DataFrame, index_dir: str, l: int, batch_id: str
 ) -> None:
     census = (
         gram_starts(base, l)
@@ -244,23 +243,7 @@ def _write_gram_batch(
         .agg(F.count("*").alias("n"))
         .select("g", "n", F.lit(batch_id).alias("batch_id"))
     )
-    (
-        census.write.mode("overwrite")
-        .option("partitionOverwriteMode", mode)
-        .partitionBy("batch_id")
-        .parquet(f"{index_dir}/grams")
-    )
-
-
-def read_gram_index_meta(index_dir: str) -> dict:
-    import json
-    import os
-
-    path = os.path.join(index_dir, "meta.json")
-    if not os.path.exists(path):
-        return {}
-    with open(path) as f:
-        return json.load(f)
+    layout.write_batch(census, f"{index_dir}/grams", ["batch_id"])
 
 
 def gram_index_append(
@@ -272,19 +255,17 @@ def gram_index_append(
     as partition ``batch_id`` so later batches dedup against it too.
     The gram length comes from the index manifest — an append can never
     drift from the base build's L. A retried batch dynamically
-    overwrites only its own partition (exactly-once maintenance under
-    at-least-once stream semantics, same contract as
-    ``dedup.dedup_index_append``). Probes SUM counts across partitions,
+    overwrites only its own partition through ``layout.write_batch``
+    (exactly-once maintenance under at-least-once stream semantics).
+    Probes SUM counts across partitions,
     so appends never need to merge with base; a periodic compaction
     (re-run :func:`build_gram_index` over the accepted corpus) folds
     partitions back to one."""
-    meta = read_gram_index_meta(index_dir)
     _write_gram_batch(
         tokenized(docs),
         index_dir,
-        meta.get("l", 50),
+        layout.read_index_meta(index_dir).get("l", 50),
         batch_id,
-        "dynamic",
     )
 
 
@@ -307,16 +288,12 @@ def incremental_span_coverage(
     summed only for grams the batch actually contains; everything else
     (census, merge, share) is batch-sized."""
     spark = new_docs.sparkSession
-    l = read_gram_index_meta(index_dir).get("l", 50)
+    l = layout.read_index_meta(index_dir).get("l", 50)
     base = tokenized(new_docs)
     # Inference-or-empty: an index built from an EMPTY corpus has no
     # part files, and schema inference would fail where an empty index
     # is a perfectly valid state (every probe gram is corpus-unseen).
-    from udacity_data_wrangling_osm_case_study_spark.operators.similarity import (
-        read_parquet_or_empty,
-    )
-
-    index = read_parquet_or_empty(
+    index = layout.read_parquet_or_empty(
         spark, f"{index_dir}/grams", "g binary, n bigint, batch_id string"
     )
     return _probe_coverage(base, index, l, min_count)

@@ -30,12 +30,11 @@ from udacity_data_wrangling_osm_case_study_spark.operators import (
     sampling,
 )
 from udacity_data_wrangling_osm_case_study_spark.plans.registry import (
+    TEXT_NORM,
     fan_out_scan,
     register,
     table,
 )
-
-_NORM = "regexp_replace(lower(trim(text, ' ')), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g')"
 
 _MIN_TOKENS = 20
 _MAX_DENY = 3
@@ -44,8 +43,8 @@ _DENY_PATTERN = r"\b(table|row|value)\b"
 
 _FUNNEL_ORACLE = f"""
     WITH base AS (
-        SELECT doc_id AS id, source, {_NORM} AS norm,
-               len(string_split({_NORM}, ' ')) AS n_tokens
+        SELECT doc_id AS id, source, {TEXT_NORM} AS norm,
+               len(string_split({TEXT_NORM}, ' ')) AS n_tokens
         FROM documents
     ),
     fp AS (SELECT id, md5(norm) AS fp FROM base),
@@ -278,8 +277,8 @@ _MANIFEST_SEQ_LEN = 256
 
 _MANIFEST_ORACLE = f"""
     WITH base AS (
-        SELECT doc_id AS id, source, {_NORM} AS norm,
-               len(string_split({_NORM}, ' ')) AS n_tokens
+        SELECT doc_id AS id, source, {TEXT_NORM} AS norm,
+               len(string_split({TEXT_NORM}, ' ')) AS n_tokens
         FROM documents
     ),
     k AS (SELECT MIN(id) AS id FROM base GROUP BY md5(norm)),
@@ -368,8 +367,7 @@ def training_batch_manifest(spark, sf_dir):
         ),
     )
     packed = packing.pack_sequences(
-        keyed, seq_len=_MANIFEST_SEQ_LEN,
-        id_col="doc_id", ntok_col="n_tokens", order_col="_hk",
+        keyed, seq_len=_MANIFEST_SEQ_LEN, id_col="doc_id", order_col="_hk"
     )
     return (
         packed.groupBy("seq_id")
@@ -721,7 +719,7 @@ def corpus_release_manifest(spark, sf_dir):
     "dsir_importance_weights",
     f"""
     WITH norm AS (SELECT doc_id AS id,
-                  string_split({_NORM}, ' ') AS toks FROM documents),
+                  string_split({TEXT_NORM}, ' ') AS toks FROM documents),
     tok AS (SELECT id, unnest(toks) AS tok FROM norm),
     feat AS (
         SELECT id,

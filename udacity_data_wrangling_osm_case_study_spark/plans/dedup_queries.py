@@ -12,10 +12,14 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from udacity_data_wrangling_osm_case_study_spark.operators import dedup
-from udacity_data_wrangling_osm_case_study_spark.plans.registry import register, table
+from udacity_data_wrangling_osm_case_study_spark.plans.registry import (
+    TEXT_NORM,
+    ensure_index,
+    register,
+    table,
+)
 
-_NORM = "regexp_replace(lower(trim(text, ' ')), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g')"
-_TOKS = f"string_split({_NORM}, ' ')"
+_TOKS = f"string_split({TEXT_NORM}, ' ')"
 
 # Shared CTE: distinct word 3-gram shingles per doc (DuckDB side).
 _SHINGLES_CTE = f"""
@@ -426,30 +430,19 @@ def dedup_survivors(spark, sf_dir):
     )
 
 
-def _dedup_index_dir(sf_dir: str) -> str:
-    import os
-    import tempfile
-
-    name = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), "spark_graft_dedup_index", name)
-
-
 def ensure_dedup_index(spark, sf_dir: str) -> str:
-    """Build the persisted near-dup index over the corpus partition
-    (doc_id % 5 != 0) if absent or older than the source table."""
-    import os
-
-    index_dir = _dedup_index_dir(sf_dir)
-    marker = os.path.join(index_dir, "sizes", "_SUCCESS")
-    src = os.path.join(sf_dir, "documents.parquet")
-    if not os.path.exists(marker) or (
-        os.path.exists(src) and os.path.getmtime(marker) < os.path.getmtime(src)
-    ):
-        corpus = table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 5 != 0
-        )
-        dedup.build_dedup_index(corpus, index_dir)
-    return index_dir
+    """The persisted near-dup index over the corpus partition
+    (doc_id % 5 != 0), built or rebuilt by ``registry.ensure_index``."""
+    return ensure_index(
+        spark,
+        sf_dir,
+        "spark_graft_dedup_index",
+        "documents",
+        lambda docs, index_dir: dedup.build_dedup_index(
+            docs.filter(F.col("doc_id") % 5 != 0), index_dir
+        ),
+        dedup.INDEX_CONFIG,
+    )
 
 
 @register(
@@ -599,7 +592,7 @@ def source_overlap_matrix(spark, sf_dir):
     key never goes quadratic in docs."""
     docs = table(spark, sf_dir, "documents").select("doc_id", "text", "source")
     seg = (
-        dedup.doc_segments(docs, "doc_id", "text")
+        dedup.doc_segments(docs)
         .select("source", "seg_hash")
         .distinct()
     )

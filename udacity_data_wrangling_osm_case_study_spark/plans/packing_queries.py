@@ -13,10 +13,9 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from udacity_data_wrangling_osm_case_study_spark.operators import packing, sampling
-from udacity_data_wrangling_osm_case_study_spark.plans.registry import register, table
+from udacity_data_wrangling_osm_case_study_spark.plans.registry import TEXT_NORM, register, table
 
-_NORM = "regexp_replace(lower(trim(text, ' ')), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g')"
-_NTOK = f"len(string_split({_NORM}, ' '))"
+_NTOK = f"len(string_split({TEXT_NORM}, ' '))"
 
 _SEQ_LEN = 512
 

@@ -26,6 +26,11 @@ from importlib import import_module
 
 from pyspark.sql import DataFrame, SparkSession
 
+# DuckDB twin of ``operators.dedup.normalize_text`` (trim, lowercase,
+# collapse whitespace) — the text normalisation every oracle of the
+# text queries starts from.
+TEXT_NORM = "regexp_replace(lower(trim(text, ' ')), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g')"
+
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
 ORACLES: dict[str, str] = {}
 # Multi-superstep (loop-carried) queries declare a parquet-scan-node
@@ -144,6 +149,53 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_type == "timestamp_ntz":  # naive micros
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
+
+
+def index_dir(sf_dir: str, root: str) -> str:
+    """Where the persisted index of ``sf_dir`` lives under the temp
+    root ``root``: keyed by basename plus a hash of the ABSOLUTE path,
+    so two datasets that share a basename (two checkouts' ``sf0.01``)
+    never share, and silently reuse, one index."""
+    import hashlib
+    import os
+    import tempfile
+
+    abs_dir = os.path.abspath(sf_dir.rstrip("/"))
+    digest = hashlib.sha256(abs_dir.encode()).hexdigest()[:12]
+    name = f"{os.path.basename(abs_dir)}-{digest}"
+    return os.path.join(tempfile.gettempdir(), root, name)
+
+
+def ensure_index(
+    spark: SparkSession,
+    sf_dir: str,
+    root: str,
+    source: str,
+    build: Callable[[DataFrame, str], None],
+    manifest: dict | None = None,
+) -> str:
+    """Return :func:`index_dir`, first (re)building the index with
+    ``build(table(spark, sf_dir, source), index_dir)`` when it is absent,
+    older than the source table (the data can be regenerated in place
+    between runs), or carries a ``meta.json`` other than ``manifest``,
+    the one its builder writes. Builders publish atomically
+    (``operators.layout.publish``), so an index is present exactly when
+    its directory exists, and it is complete then."""
+    import os
+
+    from udacity_data_wrangling_osm_case_study_spark.operators.layout import (
+        read_index_meta,
+    )
+
+    path = index_dir(sf_dir, root)
+    src = os.path.join(sf_dir, f"{source}.parquet")
+    if (
+        not os.path.isdir(path)
+        or (os.path.exists(src) and os.path.getmtime(path) < os.path.getmtime(src))
+        or (manifest is not None and read_index_meta(path) != manifest)
+    ):
+        build(table(spark, sf_dir, source), path)
+    return path
 
 
 def _last_attested() -> dict[str, int]:

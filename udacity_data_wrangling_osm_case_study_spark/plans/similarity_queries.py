@@ -12,8 +12,13 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from udacity_data_wrangling_osm_case_study_spark.operators import multimodal, similarity
-from udacity_data_wrangling_osm_case_study_spark.plans.registry import register, table
+from udacity_data_wrangling_osm_case_study_spark.operators import layout, multimodal, similarity
+from udacity_data_wrangling_osm_case_study_spark.plans.registry import (
+    TEXT_NORM,
+    ensure_index,
+    register,
+    table,
+)
 
 _COS_BP = (
     "CAST(ROUND(COALESCE(list_dot_product(e.v, q.q) / "
@@ -164,33 +169,14 @@ def pq_codes(spark, sf_dir):
     return similarity.pq_encode(emb, cb, m=4, ksub=8).orderBy("id")
 
 
-def _ivf_index_dir(sf_dir: str) -> str:
-    import os
-    import tempfile
-
-    name = os.path.basename(sf_dir.rstrip("/"))
-    return os.path.join(tempfile.gettempdir(), "spark_graft_ivf", name)
-
-
 def ensure_ivf_index(spark, sf_dir: str) -> str:
-    """Build the persisted IVF index for this sf_dir if absent or stale.
-
-    An ANN index is a build-once artifact: without it, every kNN query
-    pays two full-corpus shuffles to recompute the coarse quantizer.
-    Staleness check: an index written before the source table's current
-    file is a different corpus's index — rebuild (the source data here
-    can be regenerated in place between runs).
-    """
-    import os
-
-    index_dir = _ivf_index_dir(sf_dir)
-    marker = os.path.join(index_dir, "vectors", "_SUCCESS")
-    src = os.path.join(sf_dir, "embeddings.parquet")
-    if not os.path.exists(marker) or (
-        os.path.exists(src) and os.path.getmtime(marker) < os.path.getmtime(src)
-    ):
-        similarity.build_ivf_index(table(spark, sf_dir, "embeddings"), index_dir)
-    return index_dir
+    """The persisted IVF index of the embeddings, built or rebuilt by
+    ``registry.ensure_index``. An ANN index is a build-once artifact:
+    without it, every kNN query pays two full-corpus shuffles to
+    recompute the coarse quantizer."""
+    return ensure_index(
+        spark, sf_dir, "spark_graft_ivf", "embeddings", similarity.build_ivf_index
+    )
 
 
 @register(
@@ -240,7 +226,7 @@ def knn_ivf(spark, sf_dir):
     v = similarity.as_double_vec(F.col("embedding"))
     q = emb.filter(F.col("vec_id") == 0).select(v.alias("q"))
 
-    cents = similarity.read_parquet_or_empty(
+    cents = layout.read_parquet_or_empty(
         spark, f"{index_dir}/centroids", "cell int, centroid array<double>"
     )
     ranked = (
@@ -257,7 +243,7 @@ def knn_ivf(spark, sf_dir):
     )
     cells = [r.cell for r in ranked.collect()]
     vecs = (
-        similarity.read_parquet_or_empty(
+        layout.read_parquet_or_empty(
             spark,
             f"{index_dir}/vectors",
             "id bigint, v array<double>, cell int, batch_id string",
@@ -614,7 +600,7 @@ def knn_pq_adc(spark, sf_dir):
     cb = similarity.pq_codebooks(emb, m=4, ksub=8)
     q = emb.filter(F.col("vec_id") == 0).select(v.alias("q"))
     corpus = emb.filter(F.col("vec_id") != 0)
-    return similarity.pq_adc_topk(corpus, cb, q, m=4, ksub=8, k=10, shortlist=30)
+    return similarity.pq_adc_topk(corpus, cb, q)
 
 
 @register(
@@ -1094,13 +1080,10 @@ def embedding_random_projection(spark, sf_dir):
 # Hybrid retrieval: reciprocal-rank fusion of lexical BM25 + vector cosine
 # ---------------------------------------------------------------------------
 
-_RRF_NORM = "regexp_replace(lower(trim(text, ' ')), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g')"
-
-
 @register(
     "hybrid_search_rrf",
     f"""
-    WITH d AS (SELECT doc_id, string_split({_RRF_NORM}, ' ') AS toks
+    WITH d AS (SELECT doc_id, string_split({TEXT_NORM}, ' ') AS toks
                FROM documents),
     dl AS (SELECT doc_id, len(toks) AS n_tokens FROM d),
     stats AS (SELECT COUNT(*) AS n_docs,

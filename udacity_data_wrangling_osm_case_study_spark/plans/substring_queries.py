@@ -22,19 +22,22 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from udacity_data_wrangling_osm_case_study_spark.operators import substrings
-from udacity_data_wrangling_osm_case_study_spark.plans.registry import register, table
+from udacity_data_wrangling_osm_case_study_spark.plans.registry import (
+    TEXT_NORM,
+    ensure_index,
+    register,
+    table,
+)
 
 _L = 6
 _MIN_COUNT = 2
-
-_NORM = "regexp_replace(lower(trim(text, ' ')), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g')"
 
 # Shared CTE chain: tokenized docs -> L-gram starts -> duplicated
 # starts -> maximal merged spans (inclusive 1-based token ranges).
 _SPANS_CTE = f"""
     bt AS (
-        SELECT doc_id AS id, string_split({_NORM}, ' ') AS toks,
-               len(string_split({_NORM}, ' ')) AS n_tokens
+        SELECT doc_id AS id, string_split({TEXT_NORM}, ' ') AS toks,
+               len(string_split({TEXT_NORM}, ' ')) AS n_tokens
         FROM documents
     ),
     gr AS (
@@ -149,51 +152,27 @@ def substring_dedup_removal(spark, sf_dir):
     ).orderBy("doc_id")
 
 
-def _gram_index_dir(sf_dir: str) -> str:
-    import hashlib
-    import os
-    import tempfile
-
-    # Key by basename + a hash of the ABSOLUTE path: two checkouts both
-    # holding an "sf0.01" must not share (and silently reuse) an index
-    # built from the other dataset.
-    abs_dir = os.path.abspath(sf_dir.rstrip("/"))
-    digest = hashlib.sha256(abs_dir.encode()).hexdigest()[:12]
-    name = f"{os.path.basename(abs_dir)}-{digest}"
-    return os.path.join(tempfile.gettempdir(), "spark_graft_gram_index", name)
-
-
 def ensure_gram_index(spark, sf_dir: str) -> str:
-    """Build the persisted corpus gram index over the corpus partition
-    (doc_id % 7 != 0) if absent or older than the source table."""
-    import os
-
-    index_dir = _gram_index_dir(sf_dir)
-    marker = os.path.join(index_dir, "grams", "_SUCCESS")
-    src = os.path.join(sf_dir, "documents.parquet")
-    meta = substrings.read_gram_index_meta(index_dir)
-    if (
-        not os.path.exists(marker)
-        or meta.get("key") != substrings.GRAM_KEY
-        or meta.get("l") != _L
-        or (
-            os.path.exists(src)
-            and os.path.getmtime(marker) < os.path.getmtime(src)
-        )
-    ):
-        corpus = table(spark, sf_dir, "documents").filter(
-            F.col("doc_id") % 7 != 0
-        )
-        substrings.build_gram_index(corpus, index_dir, l=_L)
-    return index_dir
+    """The persisted corpus gram index over the corpus partition
+    (doc_id % 7 != 0), built or rebuilt by ``registry.ensure_index``."""
+    return ensure_index(
+        spark,
+        sf_dir,
+        "spark_graft_gram_index",
+        "documents",
+        lambda docs, index_dir: substrings.build_gram_index(
+            docs.filter(F.col("doc_id") % 7 != 0), index_dir, l=_L
+        ),
+        {"l": _L, "key": substrings.GRAM_KEY},
+    )
 
 
 @register(
     "incremental_substring_coverage",
     f"""
     WITH bt AS (
-        SELECT doc_id AS id, string_split({_NORM}, ' ') AS toks,
-               len(string_split({_NORM}, ' ')) AS n_tokens
+        SELECT doc_id AS id, string_split({TEXT_NORM}, ' ') AS toks,
+               len(string_split({TEXT_NORM}, ' ')) AS n_tokens
         FROM documents
     ),
     gr AS (
@@ -261,8 +240,8 @@ def incremental_substring_coverage(spark, sf_dir):
     "top_boilerplate_grams",
     f"""
     WITH bt AS (
-        SELECT doc_id AS id, string_split({_NORM}, ' ') AS toks,
-               len(string_split({_NORM}, ' ')) AS n_tokens
+        SELECT doc_id AS id, string_split({TEXT_NORM}, ' ') AS toks,
+               len(string_split({TEXT_NORM}, ' ')) AS n_tokens
         FROM documents
     ),
     gr AS (
@@ -349,8 +328,8 @@ _PROFILE_LS = (4, 6, 10)
 @register(
     "substring_threshold_profile",
     "WITH bt AS (\n"
-    f"    SELECT doc_id AS id, string_split({_NORM}, ' ') AS toks,\n"
-    f"           len(string_split({_NORM}, ' ')) AS n_tokens\n"
+    f"    SELECT doc_id AS id, string_split({TEXT_NORM}, ' ') AS toks,\n"
+    f"           len(string_split({TEXT_NORM}, ' ')) AS n_tokens\n"
     "    FROM documents\n"
     "),\n"
     "tot AS (SELECT SUM(n_tokens) AS total_tokens FROM bt),"
@@ -457,8 +436,8 @@ def boilerplate_share_by_source(spark, sf_dir):
 
 _INCR_ORACLE = f"""
     WITH bt AS (
-        SELECT doc_id AS id, string_split({_NORM}, ' ') AS toks,
-               len(string_split({_NORM}, ' ')) AS n_tokens
+        SELECT doc_id AS id, string_split({TEXT_NORM}, ' ') AS toks,
+               len(string_split({TEXT_NORM}, ' ')) AS n_tokens
         FROM documents
     ),
     gr AS (

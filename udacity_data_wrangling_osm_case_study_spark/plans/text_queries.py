@@ -10,17 +10,16 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from udacity_data_wrangling_osm_case_study_spark.operators import textstats
-from udacity_data_wrangling_osm_case_study_spark.plans.registry import register, table
+from udacity_data_wrangling_osm_case_study_spark.plans.registry import TEXT_NORM, register, table
 
-_NORM = "regexp_replace(lower(trim(text, ' ')), '[ \\t\\n\\x0b\\f\\r]+', ' ', 'g')"
-_TOKS = f"string_split({_NORM}, ' ')"
+_TOKS = f"string_split({TEXT_NORM}, ' ')"
 _STOPS = "['the', 'a', 'of', 'and', 'to', 'in']"
 
 
 @register(
     "doc_profiles",
     f"""
-    WITH t AS (SELECT doc_id, {_TOKS} AS toks, {_NORM} AS norm FROM documents),
+    WITH t AS (SELECT doc_id, {_TOKS} AS toks, {TEXT_NORM} AS norm FROM documents),
     m AS (
         SELECT doc_id, toks, norm,
                len(toks) AS n_tokens,
@@ -405,7 +404,7 @@ def tfidf_top_terms(spark, sf_dir):
 @register(
     "pii_term_scrub",
     f"""
-    WITH s AS (SELECT doc_id, {_NORM} AS norm FROM documents),
+    WITH s AS (SELECT doc_id, {TEXT_NORM} AS norm FROM documents),
     r AS (
         SELECT doc_id,
                len(regexp_extract_all(norm, '\\b(table|row|value)\\b'))

@@ -15,16 +15,18 @@ arrive continuously (crawl drops, partner feeds); each micro-batch is
 
 Exactly-once posture under Structured Streaming's at-least-once
 ``foreachBatch``: both sinks are partitioned by ``batch_id`` and
-written with DYNAMIC partition overwrite — a retried batch replaces
-exactly its own partition, byte-for-byte idempotent. (Reference has
-no streaming; SURVEY.md §2.10. This composes the batch operators
-unchanged — one implementation, two runtimes.)
+written by ``layout.write_batch`` (DYNAMIC partition overwrite) — a
+retried batch replaces exactly its own partition, byte-for-byte
+idempotent. (Reference has no streaming; SURVEY.md §2.10. This
+composes the batch operators unchanged — one implementation, two
+runtimes.)
 
 Scale notes: per-batch cost is the batch's own shingling plus
 bucket-overlap joins against the index (probe cost scales with the
 batch, not the corpus); index growth is one new partition per batch —
-compaction back into ``base`` is a periodic `build_dedup_index`
-rebuild, the same maintain/compact split as the IVF index.
+compaction back into ``base`` is a periodic
+:func:`operators.dedup.dedup_index_compact`, the same maintain/compact
+split as the IVF index.
 """
 
 from __future__ import annotations
@@ -32,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from udacity_data_wrangling_osm_case_study_spark.operators import dedup
+from udacity_data_wrangling_osm_case_study_spark.operators import dedup, layout
 from udacity_data_wrangling_osm_case_study_spark.sources.jsonl import (
     DOCUMENTS_SCHEMA,
 )
@@ -85,9 +87,9 @@ def intake_batch(
     page wrapping a little fresh text) passes the near-dup probe yet
     gets rejected when its duplicated-span share vs the gram index
     exceeds ``max_dup_share_bp``. Survivors' gram census is appended to
-    the gram index under the same batch_id discipline (dynamic
-    partition overwrite — retries replace only themselves), so later
-    batches measure against everything accepted before them."""
+    the gram index as partition ``batch_id`` (``layout.write_batch`` —
+    retries replace only themselves), so later batches measure against
+    everything accepted before them."""
     norm = dedup.normalize_text(F.col("text"))
     base = batch_df.select(
         "doc_id",
@@ -131,15 +133,13 @@ def intake_batch(
             .select(F.col("id").alias("doc_id"))
         )
         accepted = accepted.join(recycled, "doc_id", "left_anti").cache()
-    (
+    layout.write_batch(
         accepted.select(
             "doc_id", "text", "source", "n_tokens",
             F.lit(str(batch_id)).alias("batch_id"),
-        )
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(accepted_dir)
+        ),
+        accepted_dir,
+        ["batch_id"],
     )
     dedup.dedup_index_append(
         accepted.select("doc_id", "text"), index_dir, batch_id=str(batch_id)

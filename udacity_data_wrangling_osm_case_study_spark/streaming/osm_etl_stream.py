@@ -19,8 +19,10 @@ the outputs converge to the batch result once the source drains
 (asserted in tests/test_osm_etl_stream.py). Writes are IDEMPOTENT per
 micro-batch: foreachBatch is at-least-once (a batch retried after a
 mid-write failure re-runs), so every sink is partitioned by the
-engine-stable ``_batch_id`` and dynamically overwrites only that
-partition — a replay replaces its own output instead of duplicating it.
+engine-stable ``_batch_id`` (stream name + batch id: two streams share
+the update_history sink) and written by ``layout.write_batch``, which
+dynamically overwrites only that partition — a replay replaces its own
+output instead of duplicating it.
 """
 
 from __future__ import annotations
@@ -31,24 +33,10 @@ from pyspark.sql import functions as F
 from udacity_data_wrangling_osm_case_study_spark import schemas
 from udacity_data_wrangling_osm_case_study_spark.operators import (
     cleaning,
+    layout,
     official_streets,
     pipeline,
 )
-
-
-def write_batch_idempotent(df: DataFrame, path: str, batch_key: str) -> None:
-    """Idempotent micro-batch parquet sink: partition by the
-    checkpointed batch id and dynamically overwrite ONLY that
-    partition, so an at-least-once replay of a batch replaces its own
-    rows instead of appending duplicates. ``batch_key`` is the stream
-    name + batch id (two streams share the update_history sink)."""
-    (
-        df.withColumn("_batch_id", F.lit(batch_key))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("_batch_id")
-        .parquet(path)
-    )
 
 
 def _read_stream(spark: SparkSession, shard_dir: str, row_tag: str, schema) -> DataFrame:
@@ -77,7 +65,11 @@ def run_streaming_etl(
     ways_stream = _read_stream(spark, shard_dir, "way", schemas.OSM_WAY_SCHEMA)
 
     def _write(df: DataFrame, table: str, batch_id: int, stream: str) -> None:
-        write_batch_idempotent(df, f"{out_dir}/{table}", f"{stream}-{batch_id}")
+        layout.write_batch(
+            df.withColumn("_batch_id", F.lit(f"{stream}-{batch_id}")),
+            f"{out_dir}/{table}",
+            ["_batch_id"],
+        )
 
     def process_nodes(batch: DataFrame, batch_id: int) -> None:
         nodes = pipeline.clean_nodes(batch)

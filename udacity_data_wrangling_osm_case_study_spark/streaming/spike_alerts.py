@@ -6,9 +6,9 @@ row is emitted exactly once, when the watermark finalizes it) →
 ``foreachBatch`` sink that
 
 1. appends the finalized windows to a persisted window store,
-   partitioned by ``batch_id`` with dynamic partition overwrite — a
-   RETRIED micro-batch overwrites only itself (the engine's standard
-   idempotence mechanism, same as the CDC and corpus-intake sinks);
+   partitioned by ``batch_id`` and written by ``layout.write_batch``
+   (dynamic partition overwrite) — a RETRIED micro-batch overwrites
+   only itself, as in the corpus-intake and streaming-ETL sinks;
 2. recomputes the alert table with the SAME
    ``operators.temporal.trailing_spikes`` the batch query uses — one
    anomaly definition, two runtimes. Recomputing over the full store
@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from udacity_data_wrangling_osm_case_study_spark.operators import temporal
+from udacity_data_wrangling_osm_case_study_spark.operators import layout, temporal
 from udacity_data_wrangling_osm_case_study_spark.streaming.events_stream import (
     windowed_event_counts,
 )
@@ -54,13 +54,12 @@ def spike_alerts_stream(
             # only advances at batch end); writing an empty frame would
             # leave a schemaless store directory.
             return
-        (
-            batch_df.select("event_type", "window_start", "n")
-            .withColumn("batch_id", F.lit(str(batch_id)))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(f"{state_dir}/windows")
+        layout.write_batch(
+            batch_df.select("event_type", "window_start", "n").withColumn(
+                "batch_id", F.lit(str(batch_id))
+            ),
+            f"{state_dir}/windows",
+            ["batch_id"],
         )
         hist = spark.read.parquet(f"{state_dir}/windows")
         alerts = temporal.trailing_spikes(
