@@ -30,6 +30,8 @@ import textwrap
 import pytest
 from pyspark.sql import functions as F
 
+from tests.conftest import SF_DIR
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
@@ -224,7 +226,7 @@ def test_concurrent_dedup_index_builds_read_complete(
     from udacity_data_wrangling_osm_case_study_spark.operators import dedup, layout
 
     idx = str(tmp_path / "race_build_idx")
-    src_path = f"/root/testdata/sf0.001/{table}.parquet"
+    src_path = f"{SF_DIR}/{table}.parquet"
     code = f"""
     import sys
     sys.path.insert(0, {REPO!r})
